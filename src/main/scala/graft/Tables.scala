@@ -84,6 +84,26 @@ object Tables {
     * gate only decides which of the BENCH FIXTURES are worth landing. */
   private val layoutDecision =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** Per-app scratch (landed copies, query scratch dirs) belongs to the
+    * SparkContext that made it: its dirs are deleted when it stops (a
+    * later context has another appId and makes its own). */
+  private val ownedScratch =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.Set[java.io.File]]()
+  private[graft] def ownScratch(s: SparkSession, dir: java.io.File): Unit = {
+    val app = s.sparkContext.applicationId
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+    dirs.add(dir)
+    val prior = ownedScratch.putIfAbsent(app, dirs)
+    if (prior != null) prior.add(dir)
+    else s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onApplicationEnd(
+          e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+        layoutDecision.keySet.removeIf(_.startsWith(s"$app|"))
+        Option(ownedScratch.remove(app)).foreach(_.forEach(d => graft.queries.Scans.rmRf(d)))
+      }
+    })
+  }
   private def normalizeLayout(s: SparkSession, sfDir: String, name: String): String = {
     val rawPath = s"$sfDir/$name.parquet"
     if (s.conf.get("spark.graft.layout.normalize", "true") != "true") return rawPath
@@ -120,6 +140,7 @@ object Tables {
         val root = s.conf.get("spark.graft.scratch.root", sys.props("java.io.tmpdir"))
         val dir = new java.io.File(root,
           s"graft_layout_${s.sparkContext.applicationId}_$dKey/$name")
+        ownScratch(s, dir.getParentFile)
         if (!dir.isDirectory) {
           // split count targets ~50k rows per file, capped at the core
           // count: enough to kill the serial-scan floor without paying
@@ -166,14 +187,44 @@ object Tables {
     * see identical values (integer `div` keeps the full 63-bit range; a
     * double division would lose precision above 2^53 ns ≈ 104 days). The
     * r7 timestamp[us] generation needs nothing extra — `table()` already
-    * normalized its NTZ read to the session-TZ TimestampType. */
+    * normalized its NTZ read to the session-TZ TimestampType. The legacy
+    * mode is session conf (the scan reads it at planning), so it is set
+    * only when the file's footer declares TIMESTAMP(NANOS): loading the
+    * current generation writes no conf. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (declaresNanos(s, s"$d/events.parquet"))
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case _ => raw
+    }
+  }
+  /** Whether the parquet at `path` (a file, or the first data file
+    * under a directory) declares a TIMESTAMP(NANOS) column. */
+  private def declaresNanos(s: SparkSession, path: String): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    val conf = s.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) return false
+    val files = fs.listFiles(p, true)
+    var file: Option[org.apache.hadoop.fs.Path] = None
+    while (file.isEmpty && files.hasNext) {
+      val f = files.next().getPath
+      if (!f.getName.startsWith("_") && !f.getName.startsWith(".")) file = Some(f)
+    }
+    file.exists { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      try r.getFooter.getFileMetaData.getSchema.getColumns.asScala.exists(
+        _.getPrimitiveType.getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        })
+      finally r.close()
     }
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")

@@ -45,18 +45,23 @@ object Deliver {
     * DataFrame: xor ⊕ rot32(sum mod 2^64) of per-row xxhash64. The sum
     * runs in decimal(38,0) (exact, no ANSI long-overflow) and is reduced
     * mod 2^64 driver-side. */
-  def fingerprint(df0: DataFrame): Long = {
+  def fingerprint(df0: DataFrame): Long = scan(df0)._2
+
+  /** (row count, fingerprint) of `df0` in ONE aggregate — the manifest
+    * and the delivery check read each side once. */
+  private def scan(df0: DataFrame): (Long, Long) = {
     val df = tsOneRule(df0)
     val cols = df.columns.sorted.map(col)
     val hashed = df.select(xxhash64(to_json(struct(cols: _*))).as("h"))
     val r = hashed.agg(
+      count(lit(1)).as("n"),
       expr("bit_xor(h)").as("x"),
       sum(col("h").cast("decimal(38,0)")).as("s")).head()
-    if (r.isNullAt(0)) 0L // empty dataset
+    if (r.isNullAt(1)) (r.getLong(0), 0L) // empty dataset
     else {
-      val sumMod = r.getDecimal(1).toBigInteger
+      val sumMod = r.getDecimal(2).toBigInteger
         .mod(java.math.BigInteger.ONE.shiftLeft(64)).longValue()
-      r.getLong(0) ^ java.lang.Long.rotateLeft(sumMod, 32)
+      (r.getLong(0), r.getLong(1) ^ java.lang.Long.rotateLeft(sumMod, 32))
     }
   }
 
@@ -381,9 +386,7 @@ object Deliver {
   def manifest(spark: SparkSession, path: String, format: String = "parquet",
                schema: Option[String] = None,
                options: Map[String, String] = Map.empty): DeliveryReport = {
-    val df = read(spark, path, format, schema, options)
-    val fp = fingerprint(df)
-    val rows = df.count()
+    val (rows, fp) = scan(read(spark, path, format, schema, options))
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val it = fs.listFiles(p, true)
@@ -407,8 +410,7 @@ object Deliver {
                      schema: Option[String] = None,
                      srcOptions: Map[String, String] = Map.empty,
                      dstOptions: Map[String, String] = Map.empty): Boolean = {
-    val a = read(spark, src, srcFormat, schema, srcOptions)
-    val b = read(spark, dst, dstFormat, schema, dstOptions)
-    a.count() == b.count() && fingerprint(a) == fingerprint(b)
+    scan(read(spark, src, srcFormat, schema, srcOptions)) ==
+      scan(read(spark, dst, dstFormat, schema, dstOptions))
   }
 }

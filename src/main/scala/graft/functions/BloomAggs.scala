@@ -26,9 +26,9 @@ object BloomAggs {
   val ExpectedItems = 100000L
   val Fpp = 0.01
 
-  private[functions] def read(b: Array[Byte]): BloomFilter =
+  private[graft] def read(b: Array[Byte]): BloomFilter =
     BloomFilter.readFrom(new ByteArrayInputStream(b))
-  private[functions] def write(s: BloomFilter): Array[Byte] = {
+  private[graft] def write(s: BloomFilter): Array[Byte] = {
     val o = new ByteArrayOutputStream()
     s.writeTo(o)
     o.toByteArray

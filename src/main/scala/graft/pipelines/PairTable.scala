@@ -20,6 +20,11 @@ import org.apache.spark.sql.functions._
   *   PairTable.refreshInPlace(spark, sfDir, "/artifacts/pairs")
   * }}}
   *
+  * Lifecycle: `write` is the only O(corpus) step; each refreshInPlace
+  * adds one day's delta files (pairs touching the batch) beside the
+  * ones already there, so the files of every day stay shared and a day
+  * writes O(batch) bytes. A fresh `write` is the compaction.
+  *
   * The artifact is floored at jac ≥ 0.6 (Llm.PairTableFloor*), strictly
   * below every consumer threshold (0.8 operator floor, 0.6 would need
   * its own table), so the re-applied threshold on read is lossless.
@@ -121,6 +126,38 @@ object PairTable {
     writeStamps(spark, out, sfDir)
   }
 
+  /** The pairs with AT LEAST ONE new endpoint (`isNewAttr`) over the
+    * corpus at `sfDir`, behind the provenance guards on `prev`: the
+    * delta that updateIncremental unions and refreshInPlace appends. */
+  private def delta(spark: SparkSession, sfDir: String, prev: String,
+                    isNewAttr: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
+      : DataFrame = {
+    val prevCorpus = readCorpusMarker(spark, prev) // fail loudly on unstamped prev
+    // mixed provenance guard: merging an exact prev with an approximate
+    // delta (or vice versa) would produce a table no declared contract
+    // describes — the delta below is computed with the SESSION's conf
+    // mode, so prev must have been built with the same one
+    val prevMode = readCandMode(spark, prev)
+    val curMode = spark.conf.get("spark.graft.pairs.candidates", "rarity")
+    require(prevMode == curMode,
+      s"prev artifact $prev was built with candidates='$prevMode' but this session " +
+      s"declares spark.graft.pairs.candidates=$curMode — the merged table would mix " +
+      "exact and approximate halves; rebuild or align the conf")
+    val touchingNew: graft.queries.Llm.CandPred = (isNewAttr,
+      (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) => a || b)
+    System.err.println(
+      s"[graft] PairTable: new-endpoint pairs of '$sfDir' over prev artifact $prev " +
+      s"(corpus '$prevCorpus')")
+    // ignoreArtifact: with the artifact conf pointing at `prev` (the
+    // steady state this method exists for), an unbypassed call would
+    // filter YESTERDAY'S pairs by the new-endpoint rule — an empty
+    // delta, a silently stale artifact
+    graft.queries.Llm.jaccardPairsUnsorted(
+      spark, sfDir, Some(touchingNew),
+      graft.queries.Llm.PairTableFloorNum, graft.queries.Llm.PairTableFloorDen,
+      ignoreArtifact = true)
+  }
+
   /** Incremental artifact refresh — the daily-batch shape: `prev` is
     * the pair table of yesterday's (immutable) corpus, `sfDir` now
     * contains old + new docs, and `isNewAttr` identifies the new batch
@@ -140,7 +177,7 @@ object PairTable {
     * stamp system exists to protect (ADVICE r5). `out` must differ from
     * `prev`: parquet reads are lazy, so an in-place overwrite would
     * delete yesterday's files under the running union (use
-    * refreshInPlace for the tmp-and-swap form).
+    * refreshInPlace for the append form).
     *
     * Exactness contract (PairTableSpec pins all three clauses at the
     * 0.8 operator threshold): (1) the touching-new half of the merged
@@ -159,33 +196,10 @@ object PairTable {
                         prev: String, out: String,
                         isNewAttr: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
       : Unit = {
-    val prevCorpus = readCorpusMarker(spark, prev) // fail loudly on unstamped prev
-    // mixed provenance guard: merging an exact prev with an approximate
-    // delta (or vice versa) would produce a table no declared contract
-    // describes — the delta below is computed with the SESSION's conf
-    // mode, so prev must have been built with the same one
-    val prevMode = readCandMode(spark, prev)
-    val curMode = spark.conf.get("spark.graft.pairs.candidates", "rarity")
-    require(prevMode == curMode,
-      s"prev artifact $prev was built with candidates='$prevMode' but this session " +
-      s"declares spark.graft.pairs.candidates=$curMode — the merged table would mix " +
-      "exact and approximate halves; rebuild or align the conf")
     require(out != prev,
       s"updateIncremental cannot overwrite prev in place ($prev); " +
       "write to a fresh path or use refreshInPlace")
-    val touchingNew: graft.queries.Llm.CandPred = (isNewAttr,
-      (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) => a || b)
-    // ignoreArtifact: with the artifact conf pointing at `prev` (the
-    // steady state this method exists for), an unbypassed call would
-    // filter YESTERDAY'S pairs by the new-endpoint rule — an empty
-    // delta, a silently stale artifact
-    val fresh = graft.queries.Llm.jaccardPairsUnsorted(
-      spark, sfDir, Some(touchingNew),
-      graft.queries.Llm.PairTableFloorNum, graft.queries.Llm.PairTableFloorDen,
-      ignoreArtifact = true)
-    System.err.println(
-      s"[graft] PairTable.updateIncremental: merging prev artifact $prev " +
-      s"(corpus '$prevCorpus') with new-endpoint pairs of '$sfDir'")
+    val fresh = delta(spark, sfDir, prev, isNewAttr)
     spark.read.parquet(prev).unionByName(fresh)
       .write.mode("overwrite").parquet(out)
     writeStamps(spark, out, sfDir)
@@ -193,22 +207,41 @@ object PairTable {
 
   /** Watermark-ruled in-place refresh — the composition point for the
     * daily product flow (CorpusPrepMain --refresh): docs with doc_id
-    * above the stamped watermark are the new batch; the merged table is
-    * written to a `<artifact>.tmp-refresh` sibling and swapped in, so
-    * the lazily-read prev files are never overwritten mid-union and a
-    * crash leaves either the old or the new artifact, not a torn one.
-    * No-op-safe: an unchanged corpus yields an empty delta and the swap
-    * rewrites identical content. Single-writer by contract (one daily
-    * refresh job owns the artifact path; concurrent READERS are fine —
-    * they hold the old file listing or the new one). */
+    * above the stamped watermark are the new batch, and their pairs
+    * (the same delta updateIncremental unions) are ADDED to the
+    * artifact as new files, then the stamps move. The artifact is
+    * never re-read or rewritten: a day writes O(batch) bytes. The
+    * artifact's files accumulate one delta per day, each named for the
+    * watermark it starts from; a fresh `write` is the compaction.
+    *
+    * Retry-safe: the delta is staged in a hidden `_graft_delta` dir and
+    * renamed in as `part-wm<watermark>-…` files, and only then is the
+    * watermark re-stamped. A run that dies anywhere before the stamp
+    * leaves the old watermark, so the re-run first deletes that
+    * watermark's delta files and stage, and computes them again — no
+    * pair is ever added twice. Readers between the renames and the
+    * stamp may see part of the day's delta, never a pair twice and
+    * never a torn file. Single-writer by contract (one daily refresh
+    * job owns the artifact path). */
   def refreshInPlace(spark: SparkSession, sfDir: String, artifact: String): Unit = {
     val wm = readWatermark(spark, artifact)
-    val tmp = artifact + ".tmp-refresh"
-    updateIncremental(spark, sfDir, artifact, tmp, id => id > wm)
     val aPath = new org.apache.hadoop.fs.Path(artifact)
     val fs = fsFor(spark, aPath)
-    require(fs.delete(aPath, true), s"could not delete old artifact $artifact")
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), aPath),
-      s"could not move refreshed artifact $tmp -> $artifact")
+    val stage = new org.apache.hadoop.fs.Path(aPath, "_graft_delta")
+    val prefix = s"part-wm$wm-"
+    // what a run from this watermark that died before its stamp left
+    fs.delete(stage, true)
+    fs.listStatus(aPath).map(_.getPath).filter(_.getName.startsWith(prefix))
+      .foreach(p => require(fs.delete(p, false), s"could not delete stale delta file $p"))
+    delta(spark, sfDir, artifact, id => id > wm)
+      .write.mode("overwrite").parquet(stage.toString)
+    fs.listStatus(stage).map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .foreach { p =>
+        val to = new org.apache.hadoop.fs.Path(aPath, prefix + p.getName.stripPrefix("part-"))
+        require(fs.rename(p, to), s"could not move delta file $p -> $to")
+      }
+    writeStamps(spark, artifact, sfDir)
+    fs.delete(stage, true)
   }
 }

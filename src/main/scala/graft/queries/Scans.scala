@@ -42,6 +42,7 @@ object Scans {
     val dir = new java.io.File(root,
       s"graft_${tag}_${s.sparkContext.applicationId}_$dKey")
     dir.mkdirs()
+    Tables.ownScratch(s, dir)
     dir.toString
   }
 
@@ -49,7 +50,7 @@ object Scans {
     * per-file symlink/type checks that cost ~0.5 s over 5000 entries
     * (BinBisect). Shared by every roundtrip query that sweeps its
     * scratch children at entry. */
-  private[queries] def rmRf(f: java.io.File): Unit = {
+  private[graft] def rmRf(f: java.io.File): Unit = {
     val cs = f.listFiles; if (cs != null) cs.foreach(rmRf); f.delete(): Unit
   }
 

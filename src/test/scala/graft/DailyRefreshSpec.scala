@@ -86,6 +86,8 @@ class DailyRefreshSpec extends AnyFunSuite with Matchers with SparkFixture {
       b.toMap
     }
     val before = mtimes(s"$out/documents")
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(art),
+      fs, new org.apache.hadoop.fs.Path(s"$tmp/prev"), false, spark.sparkContext.hadoopConfiguration)
 
     // ---- day 2: one command refreshes pairs incrementally and re-ships
     val (c2, s2, r2) = pipelines.CorpusPrepMain.refreshFlow(
@@ -105,6 +107,12 @@ class DailyRefreshSpec extends AnyFunSuite with Matchers with SparkFixture {
     delta.nonEmpty shouldBe true
     delta.foreach { case (a, b, _) => (a > wm || b > wm) shouldBe true }
     merged.filter { case (a, b, _) => a <= wm && b <= wm } shouldBe prevPairs
+    // the refresh appended exactly updateIncremental's delta over the
+    // same prev: equal as a set, no pair twice, same read schema
+    pipelines.PairTable.updateIncremental(spark, src, s"$tmp/prev", s"$tmp/merged", id => id > wm)
+    merged shouldBe pairSet(spark.read.parquet(s"$tmp/merged"))
+    spark.read.parquet(art).count() shouldBe merged.size.toLong
+    spark.read.parquet(art).columns.toSeq shouldBe Seq("doc_a", "doc_b", "jac")
     // each near-dup copy found its base pair at ≥ 0.8
     val deltaIds = delta.flatMap { case (a, b, j) if j >= 0.8 => Seq(a, b); case _ => Nil }
     nearDups.foreach { nd => deltaIds should contain(nd._1) }

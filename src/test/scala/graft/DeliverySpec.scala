@@ -413,4 +413,30 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
     out(0.0)._3 should be > 0.0
     out(50.0)._3 should be > 0.0
   }
+
+  test("verifyDelivery is false on a row-count mismatch; the manifest's one scan counts like count()") {
+    val tmp = Files.createTempDirectory("dlv_rows").toString
+    val src = Tables.orders(spark, sfDir)
+    src.where(col("o_orderkey") =!= src.agg(min("o_orderkey")).head().getLong(0))
+      .write.parquet(s"$tmp/short")
+    Deliver.verifyDelivery(spark, s"$sfDir/orders.parquet", "parquet",
+      s"$tmp/short", "parquet") shouldBe false
+    val m = Deliver.manifest(spark, s"$tmp/short")
+    val short = spark.read.parquet(s"$tmp/short")
+    m.rows shouldBe src.count() - 1
+    m.rows shouldBe short.count()
+    m.fingerprint shouldBe Deliver.fingerprint(short)
+  }
+
+  test("verifyDelivery is false on a fingerprint mismatch at an equal row count") {
+    val tmp = Files.createTempDirectory("dlv_fp").toString
+    val src = spark.read.parquet(s"$sfDir/orders.parquet")
+    val first = src.agg(min("o_orderkey")).head().getLong(0)
+    src.withColumn("o_totalprice",
+        when(col("o_orderkey") === first, col("o_totalprice") + 1).otherwise(col("o_totalprice")))
+      .write.parquet(s"$tmp/edited")
+    Deliver.manifest(spark, s"$tmp/edited").rows shouldBe src.count()
+    Deliver.verifyDelivery(spark, s"$sfDir/orders.parquet", "parquet",
+      s"$tmp/edited", "parquet") shouldBe false
+  }
 }

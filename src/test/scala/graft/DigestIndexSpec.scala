@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -10,7 +12,10 @@ import org.scalatest.matchers.should.Matchers
   * exactly ONE file scan — the digest table, never the old corpus;
   * (3) extend is lossless (everything the extended index has seen is
   * dup_exact = 1, novel rows still pass) and fail-loud on in-place
-  * writes; (4) unstamped directories are refused. */
+  * writes; (4) unstamped directories are refused; (5) a chain of
+  * extends verdicts like a from-scratch build, writes O(batch) digest
+  * bytes however large the index, and fails loudly when a generation
+  * it lists is gone. */
 class DigestIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   private def bkt(c: org.apache.spark.sql.Column) =
@@ -33,7 +38,6 @@ class DigestIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("refresh over an in-memory batch scans ONE file — the digest table, never the corpus") {
-    import scala.jdk.CollectionConverters._
     val known = docs.where(col("bucket") < 80).select("text")
       .limit(1).head().getString(0)
     val batch = spark.createDataFrame(
@@ -152,5 +156,94 @@ class DigestIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
       pipelines.DigestIndex.refresh(spark, docs.limit(1), bare)
     }
     e.getMessage should include("not a DigestIndex-written artifact")
+  }
+
+  private def idText(df: org.apache.spark.sql.DataFrame) = df.select("doc_id", "text")
+
+  /** Bytes of every data file under `dir` (checksums and stamps excluded). */
+  private def dataBytes(dir: String): Long = {
+    val it = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try it.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(java.nio.file.Files.size(_)).sum
+    finally it.close()
+  }
+
+  test("a chain of extends verdicts like a from-scratch buildFrom over the same documents") {
+    val base = java.nio.file.Files.createTempDirectory("graft_dix_chain").toString
+    val day0 = idText(docs.where(col("bucket") < 40))
+    // every batch re-sends a few day-0 texts under new ids, so their
+    // digests sit in two generations (the hit set must dedup them)
+    val batches = Seq((40, 55), (55, 70), (70, 80)).zipWithIndex.map { case ((lo, hi), k) =>
+      idText(docs.where(col("bucket") >= lo && col("bucket") < hi)).union(
+        day0.limit(3).select((col("doc_id") + (k + 1) * 1000000L).as("doc_id"), col("text")))
+    }
+    pipelines.DigestIndex.buildFrom(spark, day0, "day0", s"$base/g0")
+    batches.zipWithIndex.foreach { case (b, k) =>
+      pipelines.DigestIndex.extend(spark, b, s"$base/g$k", s"$base/g${k + 1}")
+    }
+    pipelines.DigestIndex.buildFrom(spark, batches.foldLeft(day0)(_ union _), "all", s"$base/full")
+    val probe = idText(docs.where(col("bucket") >= 70)).union(
+      day0.limit(5).select((col("doc_id") + 900000000L).as("doc_id"), col("text")))
+      .union(spark.range(1).select(lit(990000000L).as("doc_id"), lit("novel zq text").as("text")))
+    val chained = pipelines.DigestIndex.refresh(spark, probe, s"$base/g3").collect().toSeq
+    chained shouldBe pipelines.DigestIndex.refresh(spark, probe, s"$base/full").collect().toSeq
+    chained.map(_.getLong(0)).distinct.size shouldBe probe.count() // one verdict a doc
+    chained.count(_.getLong(1) == 1L) should be >= 5
+    chained.find(_.getLong(0) == 990000000L).get.getLong(2) shouldBe 1L
+    withConf("spark.graft.dedup.broadcastCandidates" -> "0") {
+      pipelines.DigestIndex.refresh(spark, probe, s"$base/g3").collect().toSeq
+    } shouldBe chained
+  }
+
+  test("extend writes the same digest bytes for a batch over a 1x and a 4x index; the bloom is stored deflated") {
+    val base = java.nio.file.Files.createTempDirectory("graft_dix_bytes").toString
+    def copies(k: Int) = (0 until k).map(i => docs.select(
+      (col("doc_id") + i * 1000000L).as("doc_id"),
+      concat(lit(s"c$i "), col("text")).as("text"))).reduce(_ union _)
+    pipelines.DigestIndex.buildFrom(spark, copies(1), "x1", s"$base/x1")
+    pipelines.DigestIndex.buildFrom(spark, copies(4), "x4", s"$base/x4")
+    val batch = docs.limit(20).select((col("doc_id") + 900000000L).as("doc_id"),
+      concat(lit("batch "), col("text")).as("text"))
+    pipelines.DigestIndex.extend(spark, batch, s"$base/x1", s"$base/e1")
+    pipelines.DigestIndex.extend(spark, batch, s"$base/x4", s"$base/e4")
+    val (i1, i4) = (dataBytes(s"$base/x1"), dataBytes(s"$base/x4"))
+    i4 should be > 3 * i1 // the index did grow
+    val (w1, w4) = (dataBytes(s"$base/e1"), dataBytes(s"$base/e4"))
+    w1 should be > 0L
+    w4 shouldBe w1
+    w4 should be < i1 / 4
+    // the stored bitmap is the deflated form of the geometry-sized one
+    // (100k items at 1% is ~117 KB raw), here about 500 keys in it
+    val bloom = java.nio.file.Files.size(java.nio.file.Paths.get(base, "e1", "_graft_bloom"))
+    bloom should be < 117000L / 4
+  }
+
+  test("a deleted ancestor generation makes refresh and extend fail loudly, naming it") {
+    val base = java.nio.file.Files.createTempDirectory("graft_dix_gone").toString
+    pipelines.DigestIndex.buildFrom(spark, idText(docs.where(col("bucket") < 60)), "d0", s"$base/g0")
+    pipelines.DigestIndex.extend(spark,
+      idText(docs.where(col("bucket") >= 60 && col("bucket") < 80)), s"$base/g0", s"$base/g1")
+    val batch = idText(docs.where(col("bucket") >= 80))
+    pipelines.DigestIndex.extend(spark, batch, s"$base/g1", s"$base/g2")
+    pipelines.DigestIndex.refresh(spark, batch, s"$base/g2").count() shouldBe batch.count()
+    queries.Scans.rmRf(new java.io.File(s"$base/g0/digests.parquet"))
+    val e = intercept[IllegalArgumentException] {
+      pipelines.DigestIndex.refresh(spark, batch, s"$base/g2")
+    }
+    e.getMessage should include(s"$base/g0/digests.parquet")
+    intercept[IllegalArgumentException] {
+      pipelines.DigestIndex.extend(spark, batch, s"$base/g2", s"$base/g3")
+    }.getMessage should include(s"$base/g0/digests.parquet")
+  }
+
+  test("extend refuses to overwrite an ancestor generation of its index") {
+    val base = java.nio.file.Files.createTempDirectory("graft_dix_anc").toString
+    pipelines.DigestIndex.buildFrom(spark, idText(docs.where(col("bucket") < 80)), "d0", s"$base/g0")
+    val batch = idText(docs.where(col("bucket") >= 80))
+    pipelines.DigestIndex.extend(spark, batch, s"$base/g0", s"$base/g1")
+    intercept[IllegalArgumentException] {
+      pipelines.DigestIndex.extend(spark, batch, s"$base/g1", s"$base/g0")
+    }.getMessage should include("out-of-place")
   }
 }

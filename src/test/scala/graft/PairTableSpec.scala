@@ -120,4 +120,52 @@ class PairTableSpec extends AnyFunSuite with Matchers with SparkFixture {
       ex2.getMessage should include("mix exact and approximate")
     } finally spark.conf.unset(aKey)
   }
+
+  test("refreshInPlace appends exactly updateIncremental's delta; a re-run after an interrupted refresh changes nothing") {
+    val tmp = java.nio.file.Files.createTempDirectory("pt_append").toString
+    val (src, art) = (s"$tmp/src", s"$tmp/art")
+    val docs = Tables.documents(spark, sfDir)
+    val cut = docs.select("doc_id").orderBy("doc_id").collect()
+      .map(_.getLong(0)).apply((docs.count() * 3 / 4).toInt)
+    docs.where(col("doc_id") < cut).write.parquet(s"$src/documents.parquet")
+    pipelines.PairTable.write(spark, src, art)
+    pipelines.PairTable.write(spark, src, s"$tmp/prev")
+    val wm = pipelines.PairTable.readWatermark(spark, art)
+    docs.write.mode("overwrite").parquet(s"$src/documents.parquet")
+    val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def copyDir(from: String, to: String): Unit = org.apache.hadoop.fs.FileUtil.copy(
+      fs, new org.apache.hadoop.fs.Path(from), fs, new org.apache.hadoop.fs.Path(to),
+      false, spark.sparkContext.hadoopConfiguration)
+    copyDir(art, s"$tmp/crashed")
+
+    pipelines.PairTable.updateIncremental(spark, src, s"$tmp/prev", s"$tmp/merged", id => id > wm)
+    pipelines.PairTable.refreshInPlace(spark, src, art)
+    def rows(p: String) = spark.read.parquet(p).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val merged = rows(s"$tmp/merged")
+    merged.size should be > rows(s"$tmp/prev").size
+    rows(art).toSet shouldBe merged.toSet
+    rows(art).size shouldBe merged.size // no pair twice
+    pipelines.PairTable.readWatermark(spark, art) shouldBe docs.agg(max("doc_id")).head().getLong(0)
+    // the artifact keeps its read schema, also through the consumer path
+    spark.read.parquet(art).columns.toSeq shouldBe Seq("doc_a", "doc_b", "jac")
+    withConf("spark.graft.pairs.artifact" -> art) {
+      queries.Llm.jaccardPairsUnsorted(spark, src, None, 4, 5, ignoreArtifact = false)
+        .columns.toSeq shouldBe Seq("doc_a", "doc_b", "jac")
+    }
+
+    // a run that died after moving its delta in but before the stamp:
+    // the delta files are there, the watermark is still the old one,
+    // and a half-written stage is left behind
+    pipelines.PairTable.refreshInPlace(spark, src, s"$tmp/crashed")
+    val stamp = fs.create(new org.apache.hadoop.fs.Path(s"$tmp/crashed/_graft_watermark"), true)
+    try stamp.write(wm.toString.getBytes("UTF-8")) finally stamp.close()
+    copyDir(s"$tmp/merged", s"$tmp/crashed/_graft_delta")
+    pipelines.PairTable.readWatermark(spark, s"$tmp/crashed") shouldBe wm
+    pipelines.PairTable.refreshInPlace(spark, src, s"$tmp/crashed")
+    rows(s"$tmp/crashed").sortBy(p => (p._1, p._2)) shouldBe rows(art).sortBy(p => (p._1, p._2))
+    // and a re-run over a finished refresh adds nothing
+    pipelines.PairTable.refreshInPlace(spark, src, art)
+    rows(art).sortBy(p => (p._1, p._2)) shouldBe merged.sortBy(p => (p._1, p._2))
+  }
 }
