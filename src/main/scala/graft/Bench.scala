@@ -39,10 +39,6 @@ object Bench {
       // far above the suite's ~600-unit working set. Measured on the
       // 30-query cheap tail at ITERS=3: 18.34 → 14.72 s (−20%).
       .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // a 100 TB job pins the set representation instead of letting the
-      // "auto" probe run an extra vocab-distinct scan at plan-build time
-      // (Llm.scala setRepr note; VERDICT r3 #4) — bench what production runs
-      .config("spark.graft.jaccard.setRepr", "array")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -66,11 +66,12 @@ object Tables {
     * atomic rename; queries/Graphs.publish), and served from there.
     * Multi-file directories (every Spark-written corpus, StressGen ×k)
     * and small fixtures (sf0.001/sf0.01 — every table < 200k rows)
-    * pass through untouched. `spark.graft.layout.normalize=false`
-    * disables. Row ORDER of the landed copy is partition-arbitrary,
-    * like any shuffle — every query's output carries its own total
-    * order (the repo's determinism discipline), which the 184-query
-    * oracle sweep re-verifies against DuckDB reading the RAW file.
+    * pass through untouched, as does any table below
+    * `spark.graft.layout.minRows` rows. Row ORDER of the landed copy
+    * is partition-arbitrary, like any shuffle — every query's output
+    * carries its own total order (the repo's determinism discipline),
+    * which the 184-query oracle sweep re-verifies against DuckDB
+    * reading the RAW file.
     *
     * The threshold is 200k rows (≈ 10 MB at lineitem's width), not
     * lower, from a measured same-phase A/B: parallelizing the CHEAP
@@ -106,7 +107,6 @@ object Tables {
   }
   private def normalizeLayout(s: SparkSession, sfDir: String, name: String): String = {
     val rawPath = s"$sfDir/$name.parquet"
-    if (s.conf.get("spark.graft.layout.normalize", "true") != "true") return rawPath
     val key = s"${s.sparkContext.applicationId}|$sfDir|$name"
     val cached = layoutDecision.get(key)
     if (cached != null) return cached

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * the shape survives 10^10-edge graphs. Lineage is cut per round
   * (Lineage.cut honors spark.graft.checkpoint for reliable checkpoints
   * on long cluster runs) and convergence is detected from a 1-row
-  * edge-set signature (count + exact decimal sums), the same
-  * cheap-fixpoint-proof pattern as llm_dedup_cluster's label-sum exit.
+  * edge-set signature (count + exact decimal sums), a cheap fixpoint
+  * proof.
   */
 object ConnectedComponents {
 

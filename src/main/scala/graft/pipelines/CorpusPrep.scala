@@ -21,7 +21,7 @@ import graft.ops.Det._
   *                    (llm_domain_cap shape; site-less docs exempt);
   *   1. clean      — strip the corpus top-K stopwords (Textops shape);
   *   2. exact dedup — keep the min-doc_id representative per sha256;
-  *   3. near dedup  — jaccard ≥ θ pairs → bounded min-label clustering,
+  *   3. near dedup  — jaccard ≥ θ pairs → connected components,
   *                    keep the min-doc_id representative per cluster;
   *   3.5 span gate (optional) — keep-one span dedup among survivors:
   *                    drop docs whose foreign-owned duplicated-chunk
@@ -49,13 +49,13 @@ object CorpusPrep {
     * 0.8 behave as 0.8. */
   def run(spark: SparkSession, sfDir: String,
           stopK: Int = 5, jaccardTheta: Double = 0.8,
-          labelRounds: Int = 8, xentMax: Option[Double] = None,
+          xentMax: Option[Double] = None,
           spanDupMax: Option[Double] = None,
           containMax: Option[Double] = None,
           domainCap: Option[Int] = None,
           xentQuantileMax: Option[Double] = None,
           decontamMax: Option[Double] = None): DataFrame =
-    stageFrames(spark, sfDir, stopK, jaccardTheta, labelRounds, xentMax,
+    stageFrames(spark, sfDir, stopK, jaccardTheta, xentMax,
       spanDupMax, containMax, domainCap, xentQuantileMax, decontamMax).last._2
 
   /** Per-stage attrition census of the prep pipeline — the "why did my
@@ -70,13 +70,13 @@ object CorpusPrep {
     * rows) into a local DataFrame. */
   def attrition(spark: SparkSession, sfDir: String,
                 stopK: Int = 5, jaccardTheta: Double = 0.8,
-                labelRounds: Int = 8, xentMax: Option[Double] = None,
+                xentMax: Option[Double] = None,
                 spanDupMax: Option[Double] = None,
                 containMax: Option[Double] = None,
                 domainCap: Option[Int] = None,
                 xentQuantileMax: Option[Double] = None,
                 decontamMax: Option[Double] = None): DataFrame = {
-    val frames = stageFrames(spark, sfDir, stopK, jaccardTheta, labelRounds,
+    val frames = stageFrames(spark, sfDir, stopK, jaccardTheta,
       xentMax, spanDupMax, containMax, domainCap, xentQuantileMax, decontamMax)
     val counts = frames.map { case (name, df) => (name, df.count()) }
     val total = counts.head._2
@@ -95,7 +95,7 @@ object CorpusPrep {
   // incremental count for the composed-pipeline pricing record
   private[graft] def stageFrames(spark: SparkSession, sfDir: String,
           stopK: Int, jaccardTheta: Double,
-          labelRounds: Int, xentMax: Option[Double],
+          xentMax: Option[Double],
           spanDupMax: Option[Double],
           containMax: Option[Double],
           domainCap: Option[Int],
@@ -183,56 +183,25 @@ object CorpusPrep {
 
     // 3. near dedup on the original operator's pair semantics (blocked
     //    jaccard over the raw text — cleaning must not change identity),
-    //    bounded min-label propagation, keep cluster representative.
-    //    large-star/small-star by default (ops/ConnectedComponents —
-    //    O(log d) rounds, contracts the dense dup graph in round 1);
-    //    spark.graft.cc.algo=minlabel keeps the bounded min-label loop,
-    //    identical labels whenever min-label converges within its
-    //    bounded rounds (CorpusPrepSpec pins the equality).
-    // cut: the edge union below references the pair list twice; the
-    // blocked jaccard pipeline must execute once, not per reference
+    //    connected components over the pairs among the exact-dedup
+    //    survivors, keep the cluster representative (min doc_id).
+    // cut: the edge joins below reference the pair list; the blocked
+    // jaccard pipeline must execute once, not per reference
     val pairs = graft.ops.Lineage.cut(
       graft.queries.Llm.jaccardPairsUnsorted(spark, sfDir)
         .where(col("jac") >= jaccardTheta).select("doc_a", "doc_b"))
     val ids = exact.select(col("doc_id"))
-    val labels = if (spark.conf.get("spark.graft.cc.algo", "lss") == "lss") {
-      val e = pairs
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .join(ids.select(col("doc_id").as("src")), Seq("src"))
-        .join(ids.select(col("doc_id").as("dst")), Seq("dst"))
-      // id-filtered pair rows stay duplicate-free with doc_a < doc_b →
-      // skip the normalization distinct (preOriented contract); the
-      // size-adaptive entry (round 10) runs small pair graphs through
-      // the one-job local union-find, corpus-scale ones through lss
-      val (lbl, _) = graft.ops.ConnectedComponents.auto(
-        e, preOriented = true)
-      ids.join(lbl.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id").as("dd"), coalesce(col("label"), col("doc_id")).as("lbl"))
-    } else {
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .union(ids.select(col("doc_id").as("src"), col("doc_id").as("dst")))
-        .join(ids.select(col("doc_id").as("src")), Seq("src"))
-        .join(ids.select(col("doc_id").as("dst")), Seq("dst"))
-        .repartition(col("src"))
-        .persist()
-      // monotone-sum convergence early-exit (see Extras.llmDedupCluster):
-      // exiting at the fixpoint yields labels identical to all K rounds
-      var lbl = ids.select(col("doc_id").as("dd"), col("doc_id").as("lbl"))
-      var prevSum: java.math.BigDecimal = null
-      var converged = false
-      for (_ <- 1 to labelRounds if !converged) {
-        lbl = graft.ops.Lineage.cut(
-          edges.join(lbl, col("dd") === col("src"))
-            .groupBy(col("dst")).agg(min("lbl").as("lbl"))
-            .select(col("dst").as("dd"), col("lbl")))
-        val s = lbl.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0)
-        converged = prevSum != null && s.compareTo(prevSum) == 0
-        prevSum = s
-      }
-      edges.unpersist()
-      lbl
-    }
+    val e = pairs
+      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .join(ids.select(col("doc_id").as("src")), Seq("src"))
+      .join(ids.select(col("doc_id").as("dst")), Seq("dst"))
+    // id-filtered pair rows stay duplicate-free with doc_a < doc_b →
+    // skip the normalization distinct (preOriented contract); the
+    // size-adaptive entry (round 10) runs small pair graphs through the
+    // one-job local union-find, corpus-scale ones through lss
+    val (lbl, _) = graft.ops.ConnectedComponents.auto(e, preOriented = true)
+    val labels = ids.join(lbl.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
+      .select(col("doc_id").as("dd"), coalesce(col("label"), col("doc_id")).as("lbl"))
     val reps = labels.groupBy("lbl").agg(min("dd").as("doc_id"))
       .select(col("doc_id"), col("lbl").as("cluster"))
     val nearDeduped = exact

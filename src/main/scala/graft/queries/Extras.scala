@@ -707,16 +707,13 @@ object Extras {
     * (maxRounds) so a 100 TB run is a fixed number of joins, not an
     * unbounded driver loop.
     *
-    * `spark.graft.cc.algo=minlabel` keeps the compatibility path: 8
-    * bounded rounds of min-label propagation with a monotone-sum
-    * convergence exit. On any graph where min-label reaches its
-    * fixpoint within its 8 declared rounds the two paths produce
-    * IDENTICAL labels (both fixpoints are "min doc_id of the
-    * component") — the fixtures do, so the DuckDB oracle's 8 unrolled
-    * label rounds stay valid for both; on a deeper graph lss is the
-    * correct connected-components answer and minlabel's truncation is
-    * not (ScaleLinearitySpec pins both the equivalence and the round
-    * advantage on a 64-chain). */
+    * The DuckDB oracle unrolls 8 rounds of min-label propagation. On any
+    * graph where min-label reaches its fixpoint within those 8 rounds,
+    * its labels equal these (both are "min doc_id of the component"),
+    * and the fixtures do converge within 8; on a deeper graph lss is the
+    * correct connected-components answer and the oracle's truncation is
+    * not. CorpusPrepSpec pins the labels against a driver-side
+    * union-find over the jaccard pairs. */
   val llmDedupCluster: Q = (s, d) => {
     val labels = dedupLabels(s, d)
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("csize"))
@@ -764,8 +761,8 @@ object Extras {
     // synthetic fixture it costs ~0.5 s of hash-group overhead — the
     // web corpus is what the operator is FOR, so the dup-heavy posture
     // is the default and distinct-heavy corpora opt out via the conf.
-    // CollapseSpec pins output identity on a dup-heavy corpus for both
-    // cc algorithms, and the full oracle stays green under the default.
+    // CollapseSpec pins output identity on a dup-heavy corpus, and the
+    // full oracle stays green under the default.
     val collapse = s.conf.get("spark.graft.dedup.collapseExact", "true").toBoolean
     val mapping = if (!collapse) None else Some(graft.ops.Lineage.cut {
       // null text or null lang rows map to THEMSELVES: sha2(NULL)=NULL
@@ -792,26 +789,24 @@ object Extras {
     }
     val docs = mapping.fold(docsAll.select(col("doc_id")))(
       _.select(col("rep").as("doc_id")).distinct())
+    // the raw pair list is duplicate-free with doc_a < doc_b by
+    // construction → skip the normalization distinct; the collapsed
+    // quotient edges are neither, so the mapping path normalizes.
+    // Routed through the size-adaptive entry (round 10): a pair graph at
+    // or under spark.graft.graph.cc.localMaxEdges runs the one-job
+    // partition-local union-find (the sf0.1 bench corpus: ~0.5 M
+    // quotient edges — the lss alternation's ~12 cut + signature jobs,
+    // not data volume, price that case), a corpus past the threshold
+    // runs the unchanged O(log d) alternation; labels identical either
+    // way (GraphSpec-pinned), so the oracle and CollapseSpec hold on
+    // both branches
+    val (lbl, _) = graft.ops.ConnectedComponents.auto(
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")),
+      preOriented = mapping.isEmpty)
+    // isolated docs have no edges → label themselves
     val repLabels =
-      if (s.conf.get("spark.graft.cc.algo", "lss") == "lss") {
-        // the raw pair list is duplicate-free with doc_a < doc_b by
-        // construction → skip the normalization distinct; the collapsed
-        // quotient edges are neither, so the mapping path normalizes.
-        // Routed through the size-adaptive entry (round 10): a pair
-        // graph at or under spark.graft.graph.cc.localMaxEdges runs the
-        // one-job partition-local union-find (the sf0.1 bench corpus:
-        // ~0.5 M quotient edges — the lss alternation's ~12 cut +
-        // signature jobs, not data volume, price that case), a corpus
-        // past the threshold runs the unchanged O(log d) alternation;
-        // labels identical either way (GraphSpec-pinned), so the oracle
-        // and CollapseSpec hold on both branches
-        val (lbl, _) = graft.ops.ConnectedComponents.auto(
-          pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")),
-          preOriented = mapping.isEmpty)
-        // isolated docs have no edges → label themselves
-        docs.join(lbl.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-          .select(col("doc_id").as("dd"), coalesce(col("label"), col("doc_id")).as("lbl"))
-      } else minLabelLabels(s, pairs, docs)
+      docs.join(lbl.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
+        .select(col("doc_id").as("dd"), coalesce(col("label"), col("doc_id")).as("lbl"))
     mapping.fold(repLabels) { m =>
       m.join(repLabels.withColumnRenamed("dd", "rep"), "rep")
         .select(col("doc_id").as("dd"), col("lbl"))
@@ -848,67 +843,6 @@ object Extras {
       .select(col("csize"), col("n_clusters"), col("n_docs"),
         r4(col("n_docs") * lit(1.0) / col("n_total")).as("doc_share"))
       .orderBy("csize")
-  }
-
-  /** The conf'd compatibility path of llm_dedup_cluster
-    * (`spark.graft.cc.algo=minlabel`): 8 bounded rounds of min-label
-    * propagation with a monotone-sum convergence early-exit. Returns
-    * the label frame (dd, lbl); the caller owns sizes and ordering. */
-  private def minLabelLabels(s: org.apache.spark.sql.SparkSession,
-                             pairs: org.apache.spark.sql.DataFrame,
-                             docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    // iterative algorithm hygiene: materialize the edge list once (else
-    // every round's plan re-embeds the whole jaccard pipeline — observed
-    // 8× recompute, 12.7 s → ~2 s at sf0.1) and cut label lineage each
-    // round so the final plan stays 1 join deep. Same pattern a 100 TB
-    // connected-components job uses (persist edges, checkpoint labels).
-    // pre-hash-partition the cached edges on the join key: every round
-    // joins on src, so the rounds reuse the cached partitioning and only
-    // the (much smaller) label frame shuffles per round
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .union(docs.select(col("doc_id").as("src"), col("doc_id").as("dst")))
-      .repartition(col("src"))
-      .persist()
-    // lineage cut per BATCH of two rounds — Lineage.cut honors
-    // spark.graft.checkpoint (reliable checkpoints + setCheckpointDir
-    // for fault-tolerant 100 TB runs; same result either way, only
-    // durability differs). Two rounds fuse into one job (round 8): the
-    // chained join→agg→join→agg plan is 2 deep — well inside analyzer
-    // comfort — and halves the per-round fixed costs (job launch,
-    // checkpoint write, driver barrier), which dominate once the label
-    // frame is small. 4 batches = the 8 declared rounds exactly.
-    //
-    // Convergence early-exit: min-label propagation is monotone
-    // non-increasing per element, so an unchanged label SUM across a
-    // batch proves NO label changed in EITHER of its two rounds (any
-    // change strictly decreases the sum) — the fixpoint was already
-    // reached, and stopping yields labels IDENTICAL to running all 8
-    // declared rounds (the fixpoint is idempotent; running past it is
-    // harmless, which also makes the 2-round check granularity safe).
-    // The sum rides the SAME job as the batch via Dataset.observe
-    // (ops/Observed.scala discipline — zero extra actions: the former
-    // per-round agg().head() doubled the job count), decimal-exact at
-    // any corpus size.
-    var labels = docs.select(col("doc_id").as("dd"), col("doc_id").as("lbl"))
-    def prop(l: org.apache.spark.sql.DataFrame) =
-      edges.join(l, col("dd") === col("src"))
-        .groupBy(col("dst")).agg(min("lbl").as("lbl"))
-        .select(col("dst").as("dd"), col("lbl"))
-    var prevSum: java.math.BigDecimal = null
-    var converged = false
-    for (_ <- 1 to 4 if !converged) {
-      val obs = org.apache.spark.sql.Observation()
-      labels = graft.ops.Lineage.cut(
-        prop(prop(labels))
-          .observe(obs, sum(col("lbl").cast("decimal(38,0)")).as("s")))
-      val s = obs.getAsJava.get("s").asInstanceOf[java.math.BigDecimal]
-      converged = prevSum != null && s.compareTo(prevSum) == 0
-      prevSum = s
-    }
-    edges.unpersist()
-    labels
   }
 
   /** llm_sample_balanced — language-balanced deterministic downsampling:

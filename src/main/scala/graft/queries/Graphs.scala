@@ -54,11 +54,8 @@ object Graphs {
     * landing on one scratch key each build privately and exactly one
     * rename wins, so a reader never observes a half-written view
     * (round 11; previously a documented single-writer constraint).
-    * `spark.graft.graph.materialize=false` bypasses the artifact
-    * (every query pays its own in-memory build — the A/B posture;
-    * content identical either way, and the three-SF oracle sweep runs
-    * with the default ON). The double-checked lock is reentrant, so
-    * nested view builds (oriented ← kept ← edges) are safe. */
+    * The double-checked lock is reentrant, so nested view builds
+    * (oriented ← kept ← edges) are safe. */
   private val viewLock = new Object
 
   private def viewDir(s: org.apache.spark.sql.SparkSession, d: String,
@@ -74,33 +71,30 @@ object Graphs {
   }
 
   private def view(s: org.apache.spark.sql.SparkSession, d: String,
-                   tag: String)(build: => DataFrame): DataFrame =
-    if (s.conf.get("spark.graft.graph.materialize", "true") != "true")
-      Lineage.cut(build)
-    else {
-      val dir = viewDir(s, d, tag)
-      val done = new java.io.File(dir, "_SUCCESS")
-      if (!done.exists) viewLock.synchronized {
-        if (!done.exists) {
-          // Build into a process-unique sibling, then atomically rename
-          // into place (VERDICT r10 #4): the old in-place overwrite was
-          // single-writer — a second JVM landing on the same scratch key
-          // could read a half-overwritten view. With rename(2) publish,
-          // readers only ever see an absent or a COMPLETE view; the
-          // losing writer discards its copy (publish() below).
-          val tmp = new java.io.File(
-            dir + s".tmp_${ProcessHandle.current().pid()}_${System.nanoTime()}")
-          build.write.mode("overwrite").parquet(tmp.getPath)
-          // a false return means neither our rename nor any competitor's
-          // produced a complete view — fail HERE with the cause instead
-          // of letting the read below throw an opaque PATH_NOT_FOUND
-          // (review r11)
-          require(publish(tmp, new java.io.File(dir)),
-            s"graph view publish failed: could not install a complete view at $dir")
-        }
+                   tag: String)(build: => DataFrame): DataFrame = {
+    val dir = viewDir(s, d, tag)
+    val done = new java.io.File(dir, "_SUCCESS")
+    if (!done.exists) viewLock.synchronized {
+      if (!done.exists) {
+        // Build into a process-unique sibling, then atomically rename
+        // into place (VERDICT r10 #4): the old in-place overwrite was
+        // single-writer — a second JVM landing on the same scratch key
+        // could read a half-overwritten view. With rename(2) publish,
+        // readers only ever see an absent or a COMPLETE view; the
+        // losing writer discards its copy (publish() below).
+        val tmp = new java.io.File(
+          dir + s".tmp_${ProcessHandle.current().pid()}_${System.nanoTime()}")
+        build.write.mode("overwrite").parquet(tmp.getPath)
+        // a false return means neither our rename nor any competitor's
+        // produced a complete view — fail HERE with the cause instead
+        // of letting the read below throw an opaque PATH_NOT_FOUND
+        // (review r11)
+        require(publish(tmp, new java.io.File(dir)),
+          s"graph view publish failed: could not install a complete view at $dir")
       }
-      s.read.parquet(dir)
     }
+    s.read.parquet(dir)
+  }
 
   /** Atomically publish a fully-written view dir: rename `tmp` over
     * `dir`. rename(2) is atomic on one filesystem and tmp is created as
@@ -267,20 +261,14 @@ object Graphs {
       edges.groupBy("src").agg(count(lit(1)).as("outd")))
       .select(col("src").as("node"), col("outd"))
     var rank: DataFrame = deg.select(col("node"), lit(1.0).as("rank"))
-    // Lineage cut every K rounds, not every round (round 13
-    // optimization): unlike khop's frontier — referenced TWICE per hop,
-    // where an uncut plan recomputes exponentially — rank is referenced
-    // exactly ONCE per round (the msgs join), so batching K rounds into
-    // one plan changes no value and recomputes nothing; it only nests K
-    // (broadcast-join + agg) layers, the same depth class as
-    // minLabelLabels' 2-round batches. At the declared 3 rounds the
-    // default batch of 8 runs the whole iteration as ONE job, dropping
-    // three per-round localCheckpoint barriers (~0.15 s each of pure
-    // job-launch + block write at bench scale); a 50-round production
-    // run still cuts every 8 rounds, keeping plans bounded (the
-    // "50-round jobs plannable" posture the per-round cut existed for).
-    val cutEvery = s.conf.get("spark.graft.pagerank.cutEvery", "8").toInt
-    for (i <- 1 to 3) {
+    // No lineage cut between rounds: unlike khop's frontier — referenced
+    // TWICE per hop, where an uncut plan recomputes exponentially — rank
+    // is referenced exactly ONCE per round (the msgs join), so chaining
+    // the rounds into one plan changes no value and recomputes nothing;
+    // it only nests 3 (broadcast-join + agg) layers. The whole iteration
+    // runs as ONE job, with no per-round localCheckpoint barriers (~0.15 s
+    // each of pure job-launch + block write at bench scale).
+    for (_ <- 1 to 3) {
       val msgs = rank.join(deg, Seq("node"))
         .select(col("node").as("src"), r8(col("rank") / col("outd")).as("contrib"))
       val contribs = edges.join(broadcast(msgs), "src")
@@ -290,7 +278,6 @@ object Graphs {
       // mail every round — no zero-contrib outer-join case
       rank = contribs.select(col("node"),
         r8(lit(0.15) + lit(0.85) * col("s")).as("rank"))
-      if (i % cutEvery == 0) rank = Lineage.cut(rank)
     }
     rank.join(deg, Seq("node"))
       .select(col("node"), col("outd").as("degree"), col("rank"))
@@ -585,20 +572,14 @@ object Graphs {
     * lazy 1-row aggregates; n_new derives from lag over the 4-row
     * result — all exact longs, merge-order-free. */
   def khopProfile(kept: DataFrame, hops: Int): DataFrame = {
-    // Batched frontier cuts (round 14, guide §5 — the pagerank cutEvery
-    // dial): each Lineage.cut is a sequential job barrier. Unlike
-    // pagerank's rank (referenced once per round), reach_h is referenced
-    // ≤3× when uncut (its level count, the next hop's union leg and join
-    // leg), and each reference re-derives a full edge-scan join —
-    // measured A/B at sf0.1 min-of-4, same phase: cutEvery=2 1.737 s vs
-    // cutEvery=1 1.473 s (task-seconds doubled, 16.6 → 31.2). The
-    // recompute costs more than the barrier it saves on this dense
-    // graph, so the DEFAULT stays 1 (per-hop cut) and the conf remains
-    // the dial for sparse/deep graphs where a hop is cheap; the final
-    // hop is never cut (referenced once, by its own level count).
-    val cutEvery = kept.sparkSession.conf
-      .get("spark.graft.khop.cutEvery", "1").toInt
-    require(cutEvery >= 1, s"spark.graft.khop.cutEvery must be >= 1, got $cutEvery")
+    // Per-hop frontier cuts: each Lineage.cut is a sequential job
+    // barrier, but unlike pagerank's rank (referenced once per round),
+    // reach_h is referenced ≤3× when uncut (its level count, the next
+    // hop's union leg and join leg), and each reference re-derives a full
+    // edge-scan join. Cutting every second hop measured slower at sf0.1
+    // (min-of-4, same phase: 1.737 s vs 1.473 s, task-seconds 16.6 →
+    // 31.2). The final hop is never cut (referenced once, by its own
+    // level count).
     val sym = kept.union(kept.select(col("dst").as("src"), col("src").as("dst")))
     // Seed set in ONE cut (round 14): the former all-nodes distinct was
     // materialized only to be filtered to the ~1% seed set — filter
@@ -616,7 +597,7 @@ object Graphs {
           sym.join(broadcast(reach.select(col("n").as("src"))), "src")
             .select(col("dst").as("n")))
         .distinct()
-      reach = if (h % cutEvery == 0 && h < hops) Lineage.cut(next) else next
+      reach = if (h < hops) Lineage.cut(next) else next
       out = out.union(level(h, reach))
     }
     out.select(col("hop"), col("n_reached"),

@@ -826,13 +826,7 @@ object Llm {
         // conf can still force it on for an audit (ADVICE r7).
         (graft.ops.Lineage.cut(rarityBlocked(tok, dfTok, ntDf)),
          Seq("block_tok", "lang"),
-         // conf escape hatch (spark.graft.pairs.rarityEmitOnce=false →
-         // the pre-round-8 candidate distinct) for corpus shapes where
-         // the duplicate factor after kills is so low the distinct wins;
-         // the output pair set is identical either way
-         if (s.conf.get("spark.graft.pairs.rarityEmitOnce", "true").toBoolean)
-           Some(("block_tok", "btok_set"))
-         else None)
+         Some(("block_tok", "btok_set")))
       }
     // Skew-safe block self-join: a boilerplate-heavy corpus puts
     // thousands of docs in one (block_tok, lang) cell; the triangle-cell
@@ -870,87 +864,31 @@ object Llm {
         emitOnce = blockEmitOnce,
         emitOnceByConstruction = blockEmitOnce.isDefined)
       .select(col("doc_a"), col("doc_b"), col("nt_a").as("na"), col("nt_b").as("nb"))
-    // Adaptive set representation. Small vocab → each token set is ONE
-    // 64-bit mask and intersection is bit_count(a & b); general vocab →
-    // sorted token arrays + native array_intersect. Same exact Jaccard
-    // either way, so the oracle SQL is representation-independent.
-    // spark.graft.jaccard.setRepr ∈ {array (default), bitmask, auto}:
-    // "auto" probes the vocab size with an eager count at PLAN-BUILD
-    // time — an extra full token-stream scan, so it is opt-in for local
-    // exploration only; the default "array" keeps plan construction
-    // action-free (r5 verdict), and known-≤64-token vocabs can pin
-    // "bitmask" explicitly.
-    lazy val useBitmask =
-      s.conf.get("spark.graft.jaccard.setRepr", "array") match {
-        case "bitmask" => true
-        case "auto"    => dfTok.count() <= 64
-        case _         => false
-      }
-    // lazy: the "stream" intersect path below never touches per-doc sets,
-    // so it must not pay the auto-mode vocab probe either
-    lazy val sets =
-      if (useBitmask) {
-        val wVocab = Window.orderBy("token") // ≤ 64 rows: single partition is fine
-        val tokenIds = dfTok.select("token")
-          .withColumn("tid", row_number().over(wVocab) - 1)
-        // fail loudly if the bitmask repr was forced on a too-big vocab
-        // (tid >= 64 would silently wrap shiftleft into garbage)
-        tok.join(broadcast(tokenIds), "token")
-          .groupBy("doc_id").agg(expr(
-            "bit_or(shiftleft(1L, if(tid < 64, tid, " +
-            "cast(raise_error('vocab > 64 tokens: set spark.graft.jaccard.setRepr=array') as int))))")
-            .as("m"))
-          .select(col("doc_id"), col("m"))
-      } else {
-        // Intern tokens to xxhash64 before the set agg: the arrays the
-        // candidate pairs drag through two SMJ shuffles become primitive
-        // longs (~8 B/elem vs ~30 B/elem strings) and array_intersect
-        // compares longs, not strings. |∩| is unchanged unless two
-        // DIFFERENT tokens inside one candidate pair's union collide in
-        // 64 bits — P ≈ Σ|sa|·|sb|/2^64 ≈ 6e-11 across the whole sf0.1
-        // fixture, and the dedup outcome of a real corpus is equally
-        // indifferent. (Reverting to raw-token arrays is this one line,
-        // if a zero-collision guarantee is ever required.)
-        tok.groupBy("doc_id").agg(array_sort(collect_set(xxhash64(col("token")))).as("m"))
-          .select(col("doc_id"), col("m"))
-      }
+    // Per-document token sets, interned to xxhash64 before the set agg:
+    // the arrays the candidate pairs drag through two SMJ shuffles become
+    // primitive longs (~8 B/elem vs ~30 B/elem strings) and the
+    // intersection compares longs, not strings. |∩| is unchanged unless
+    // two DIFFERENT tokens inside one candidate pair's union collide in
+    // 64 bits — P ≈ Σ|sa|·|sb|/2^64 ≈ 6e-11 across the whole sf0.1
+    // fixture, and the dedup outcome of a real corpus is equally
+    // indifferent. (Reverting to raw-token arrays is this one line, if a
+    // zero-collision guarantee is ever required.)
+    val sets = tok.groupBy("doc_id").agg(array_sort(collect_set(xxhash64(col("token")))).as("m"))
+      .select(col("doc_id"), col("m"))
     // graft_icount: allocation-free merge count over the sorted interned
     // sets (VectorExprs.SortedInterCount) — array_intersect hashes and
     // materializes the intersection per pair only for size() to count it
-    lazy val interExpr =
-      if (sets.schema("m").dataType == org.apache.spark.sql.types.LongType)
-        expr("bit_count(ma & mb)")
-      else { graft.functions.VectorExprs.register(s); expr("graft_icount(ma, mb)") }
-    // Intersection strategy (spark.graft.jaccard.intersect):
-    //  - "arrays" (default): rejoin per-document sets via shuffle
-    //    equi-joins on doc id and intersect in-row. `sets` is
-    //    per-document state (one mask/array per doc), so broadcasting it
-    //    is O(corpus); the merge hint pins the SMJ plan at every scale.
-    //  - "stream": never materialize per-doc arrays — count shared
-    //    tokens by joining the candidate pairs back to the NARROW token
-    //    stream twice (on doc_a, then on (doc_b, token)) and groupBy
-    //    pair. The oracle SQL's shape. Every candidate shares >= 1 block
-    //    token, so no pair drops out of the count.
-    //    Measured at sf0.1 local[32] (hermetic min-of-3, round 4):
-    //    arrays 10.2 s, stream 27.1 s — on this dup-dense fixture the
-    //    759k candidates × ~25 tokens explode to ~19M narrow rows
-    //    through two joins, far heavier than the ~25-element arrays
-    //    through 2 SMJs, so arrays stays the default. Kept
-    //    conf-switchable because the winner flips with corpus shape:
-    //    very long docs (KB-size arrays through the SMJs) favor stream.
-    if (s.conf.get("spark.graft.jaccard.intersect", "arrays") == "stream") {
-      // na/nb ride the groupBy keys (functionally dependent on the ids)
-      candSz
-        .join(tok.select(col("doc_id").as("doc_a"), col("token")), "doc_a")
-        .join(tok.select(col("doc_id").as("doc_b"), col("token")), Seq("doc_b", "token"))
-        .groupBy("doc_a", "doc_b", "na", "nb").agg(count(lit(1)).as("ni"))
-        .select(col("doc_a"), col("doc_b"),
-          r4(col("ni") * lit(1.0) / (col("na") + col("nb") - col("ni"))).as("jac"))
-        .where(col("jac") >= theta)
-    } else candSz
+    graft.functions.VectorExprs.register(s)
+    // Rejoin the per-document sets via shuffle equi-joins on doc id and
+    // intersect in-row. `sets` is per-document state (one array per
+    // doc), so broadcasting it is O(corpus); the merge hint pins the SMJ
+    // plan at every scale. Counting shared tokens by joining the pairs
+    // back to the narrow token stream instead measured 27.1 s vs 10.2 s
+    // at sf0.1 local[32]: ~25 tokens per candidate explode to ~19M rows.
+    candSz
       .join(sets.select(col("doc_id").as("doc_a"), col("m").as("ma")).hint("merge"), "doc_a")
       .join(sets.select(col("doc_id").as("doc_b"), col("m").as("mb")).hint("merge"), "doc_b")
-      .withColumn("ni", interExpr)
+      .withColumn("ni", expr("graft_icount(ma, mb)"))
       .select(col("doc_a"), col("doc_b"),
         r4(col("ni") * lit(1.0) / (col("na") + col("nb") - col("ni"))).as("jac"))
       .where(col("jac") >= theta)

@@ -205,8 +205,8 @@ object Textops {
     // the df-cap drops (P ≈ 6e-11 corpus-wide). For audit runs that need
     // the zero-collision guarantee, spark.graft.contamination.intern=
     // false falls back to the raw shingle strings — byte-identical
-    // semantics to the oracle SQL, at string-key join cost (the escape-
-    // hatch discipline of spark.graft.pairs.rarityEmitOnce; ADVICE r8).
+    // semantics to the oracle SQL, at string-key join cost; ContaminationSpec
+    // pins the two paths equal.
     val intern = s.conf.get("spark.graft.contamination.intern", "true").toBoolean
     val shgKey = (c: org.apache.spark.sql.Column) => if (intern) xxhash64(c) else c
     val trainAll = sh.where(col("part") === "train")

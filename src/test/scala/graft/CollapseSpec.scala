@@ -9,9 +9,9 @@ import org.scalatest.matchers.should.Matchers
   * on the ×30 dup-heavy stress corpus): on a DUP-HEAVY corpus — the
   * case the knob exists for — clustering over (lang, sha2)-group
   * representatives with expansion must be row-identical to clustering
-  * the raw corpus, for both cc algorithms (each identity test pins its
-  * baseline to collapse=false explicitly). The synthetic fixture can't pin this (4992/5000
-  * distinct texts), so the spec builds one: every third doc gets two
+  * the raw corpus (the identity test pins its baseline to
+  * collapse=false explicitly). The synthetic fixture can't pin this
+  * (4992/5000 distinct texts), so the spec builds one: every third doc gets two
   * byte-identical extra copies (dup factor 3 on a third of the corpus),
   * plus one identical-text pair under DIFFERENT langs to pin that the
   * collapse groups by (lang, sha2) and never merges across languages. */
@@ -59,18 +59,6 @@ class CollapseSpec extends AnyFunSuite with Matchers with SparkFixture {
     base.length should be > 0
     withConfs("spark.graft.dedup.collapseExact" -> "true") {
       queries.Extras.llmDedupCluster(spark, dupDir).collect() should equal(base)
-    }
-  }
-
-  test("collapseExact cluster assignment is identical on a dup-heavy corpus (minlabel)") {
-    withConfs("spark.graft.cc.algo" -> "minlabel") {
-      var base: Array[org.apache.spark.sql.Row] = null
-      withConfs("spark.graft.dedup.collapseExact" -> "false") {
-        base = queries.Extras.llmDedupCluster(spark, dupDir).collect()
-      }
-      withConfs("spark.graft.dedup.collapseExact" -> "true") {
-        queries.Extras.llmDedupCluster(spark, dupDir).collect() should equal(base)
-      }
     }
   }
 

@@ -32,7 +32,6 @@ object ComposedScale {
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuf)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.graft.jaccard.setRepr", "array")
       .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -54,7 +53,7 @@ object ComposedScale {
     // per-stage split (one pass, counts in pipeline order)
     sweep()
     val frames = graft.pipelines.CorpusPrep.stageFrames(spark, src,
-      stopK = 5, jaccardTheta = 0.8, labelRounds = 8, xentMax = None,
+      stopK = 5, jaccardTheta = 0.8, xentMax = None,
       spanDupMax = None, containMax = None, domainCap = None,
       xentQuantileMax = None, decontamMax = None)
     val stageSplit = frames.map { case (name, df) =>

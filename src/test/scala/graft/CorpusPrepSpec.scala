@@ -27,17 +27,49 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
       .count() shouldBe 0L
   }
 
-  test("minlabel clustering produces the identical pipeline output") {
-    // spark.graft.cc.algo=minlabel swaps the default large-star/
-    // small-star for the bounded min-label loop; on a converging
-    // fixture both fixpoints are min-doc_id per component, so the full
-    // pipeline output must be row-identical
-    val key = "spark.graft.cc.algo"
-    spark.conf.set(key, "minlabel")
-    try {
-      val ml = CorpusPrep.run(spark, sfDir).collect()
-      ml should equal(out.collect())
-    } finally spark.conf.unset(key)
+  test("near-dup clusters equal a driver-side union-find over the jaccard pairs") {
+    // Reference components: label = the component's min doc_id, an
+    // isolated doc labels itself. These are also the DuckDB oracle's
+    // labels whenever its 8 unrolled min-label rounds converge, which
+    // they do on the fixture.
+    val pairs = queries.Llm.jaccardPairsUnsorted(spark, sfDir).select("doc_a", "doc_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    pairs should not be empty
+    def components(ids: Seq[Long]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+      def find(x: Long): Long = {
+        val p = parent(x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      // linking the larger root under the smaller keeps every root its
+      // component's min doc_id
+      pairs.filter { case (a, b) => parent.contains(a) && parent.contains(b) }
+        .foreach { case (a, b) =>
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+      ids.map(i => i -> find(i)).toMap
+    }
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("doc_id").collect().map(_.getLong(0)).toSeq
+
+    // llm_dedup_cluster (default collapseExact): every document, with
+    // its component's label and size
+    val ref = components(ids(Tables.documents(spark, sfDir)))
+    val sizes = ref.values.groupBy(identity).map { case (l, ls) => l -> ls.size.toLong }
+    val cl = queries.Extras.llmDedupCluster(spark, sfDir).collect()
+      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+    cl shouldBe ref.map { case (d, l) => d -> (l, sizes(l)) }
+    ref.values.toSet.size should be < ref.size // some clusters merge docs
+
+    // CorpusPrep clusters the pairs among the exact-dedup survivors and
+    // keeps one row per component: its min doc_id, labelled with itself
+    val exact = CorpusPrep.stageFrames(spark, sfDir, stopK = 5, jaccardTheta = 0.8,
+      xentMax = None, spanDupMax = None, containMax = None, domainCap = None,
+      xentQuantileMax = None, decontamMax = None).toMap.apply("exact_dedup")
+    val prepRef = components(ids(exact)).values.toSet.map((l: Long) => (l, l))
+    out.select("doc_id", "cluster").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSet shouldBe prepRef
   }
 
   test("no stopword survives cleaning") {
@@ -51,15 +83,6 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
       .where(col("t") =!= "")
       .collect().map(_.getString(0)).toSet
     (survivorTokens & stops) shouldBe empty
-  }
-
-  test("8 label rounds reach the clustering fixpoint on the fixture (12 rounds agree)") {
-    // validates the bounded-round declaration: if 8 rounds truncated the
-    // propagation, extra rounds would reassign labels
-    val at8 = out.select("doc_id", "cluster").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val at12 = CorpusPrep.run(spark, sfDir, labelRounds = 12)
-      .select("doc_id", "cluster").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    at12 should equal(at8)
   }
 
   test("CorpusPrepMain CLI writes a split-partitioned corpus with a consistent manifest") {

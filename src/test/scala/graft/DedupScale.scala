@@ -33,7 +33,6 @@ object DedupScale {
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuf)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.graft.jaccard.setRepr", "array")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

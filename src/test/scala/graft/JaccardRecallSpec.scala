@@ -104,21 +104,6 @@ class JaccardRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
     recall should be >= 0.95 // 4-band minhash: 1-(1-j)^4 ≥ 0.97 at j=0.6
   }
 
-  test("stream-intersect mode produces the identical jaccard pair list") {
-    // spark.graft.jaccard.intersect=stream computes intersections by
-    // token-stream join instead of per-doc arrays — same exact Jaccard,
-    // pinned here so the conf path can't drift (it lost the round-4
-    // bench 27.1 s vs 10.2 s but remains the right shape for corpora
-    // with very long documents).
-    val base = Llm.llmJaccardPairs(spark, sfDir).collect()
-    val key = "spark.graft.jaccard.intersect"
-    spark.conf.set(key, "stream")
-    try {
-      val stream = Llm.llmJaccardPairs(spark, sfDir).collect()
-      stream should equal(base)
-    } finally spark.conf.unset(key)
-  }
-
   test("candidate predicate pushdown ≡ post-filter of the unfiltered pair set") {
     // llm_dedup_incremental's new↔old restriction is pushed into the
     // candidate stage (pre-distinct, pre-scoring). The discarded pairs

@@ -68,22 +68,6 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
     once.select(countDistinct("h")).head().getLong(0) shouldBe once.count()
   }
 
-  test("jaccard array representation matches the bitmask representation exactly") {
-    // fixture vocab (31 tokens) always selects the bitmask path; force the
-    // general array path and prove the adaptive representation is
-    // semantics-neutral (the 100 TB path IS the array one)
-    val key = "spark.graft.jaccard.setRepr"
-    def run(repr: String): Seq[org.apache.spark.sql.Row] = {
-      spark.conf.set(key, repr)
-      try graft.queries.Llm.llmJaccardPairs(spark, sfDir).collect().toSeq
-      finally spark.conf.unset(key)
-    }
-    val viaArray = run("array")
-    val viaBitmask = run("bitmask")
-    viaArray should equal(viaBitmask)
-    viaArray.nonEmpty shouldBe true
-  }
-
   test("llm_dedup_cluster reliable-checkpoint path matches the localCheckpoint path") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)

@@ -46,19 +46,6 @@ class ScaleLinearitySpec extends AnyFunSuite with Matchers with SparkFixture {
     n4 shouldBe 4 * n1
   }
 
-  test("forcing the bitmask set representation on a >64-token vocab fails loudly") {
-    // the x4 corpus has 124 distinct tokens; silent shiftleft wraparound
-    // would corrupt every intersection, so the guard must raise instead
-    val key = "spark.graft.jaccard.setRepr"
-    spark.conf.set(key, "bitmask")
-    try {
-      val ex = intercept[Exception] {
-        queries.Llm.llmJaccardPairs(spark, dirs._2).count()
-      }
-      ex.getMessage should include("setRepr=array")
-    } finally spark.conf.unset(key)
-  }
-
   test("minhash candidate mode scales linearly within 5% on dissimilar copies") {
     // the approximate candidate generator must inherit the linearity of
     // the exact one: translated copies share no tokens, so no band
@@ -352,8 +339,8 @@ class ScaleLinearitySpec extends AnyFunSuite with Matchers with SparkFixture {
   test("large-star/small-star solves a 64-chain dup graph in O(log d) rounds (min-label would need 63)") {
     // the high-diameter case min-label propagation cannot afford: a
     // chain 0-1-2-…-63 has diameter 63, so min-label needs 63 rounds to
-    // pull label 0 to the far end — llm_dedup_cluster's declared 8
-    // rounds would leave it wrong. Large-star/small-star contracts the
+    // pull label 0 to the far end — the oracle's 8 unrolled rounds
+    // would leave it wrong. Large-star/small-star contracts the
     // chain toward a star and must land every node on label 0 in ≤7
     // rounds (VERDICT r3 #7's done-bar).
     import spark.implicits._
@@ -412,21 +399,5 @@ class ScaleLinearitySpec extends AnyFunSuite with Matchers with SparkFixture {
     // kept-edge counts are NOT exactly 4x — but they must stay in the
     // Bernoulli band around 4x (a quadratic leak would blow far past it)
     t4.getLong(3).toDouble shouldBe (4.0 * t1.getLong(3)) +- (3 * 4 * t1.getLong(3) * 0.25)
-  }
-
-  test("lss cluster assignment matches the converged min-label assignment on the real near-dup graph") {
-    // on any graph where min-label reaches its fixpoint within 8 rounds
-    // (the sf0.001 fixture does — the convergence exit fires), the two
-    // algorithms' fixpoints are the same function: min doc_id per
-    // component. Pin the equivalence so the conf'd minlabel path stays
-    // a drop-in for the lss default (and the shared oracle stays valid
-    // for both).
-    val key = "spark.graft.cc.algo"
-    val base = queries.Extras.llmDedupCluster(spark, sfDir).collect() // default: lss
-    spark.conf.set(key, "minlabel")
-    try {
-      val ml = queries.Extras.llmDedupCluster(spark, sfDir).collect()
-      ml should equal(base)
-    } finally spark.conf.unset(key)
   }
 }

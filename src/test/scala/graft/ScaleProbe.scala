@@ -10,10 +10,8 @@ import org.apache.spark.sql.functions._
   * copy index): copies are mutually dissimilar — no cross-copy pairs —
   * while each copy keeps the original corpus's intra-copy near-dup
   * structure, so pair counts and work should scale LINEARLY with the
-  * multiplier. The translated vocabulary (31 × mult tokens) also pushes
-  * llm_jaccard_pairs past its 64-token bitmask threshold onto the
-  * general array path — the true 100 TB representation. Quadratic
-  * growth in time or rows means a blocking/banding regression.
+  * multiplier. Quadratic growth in time or rows means a blocking/banding
+  * regression.
   *
   * `SPARK_GRAFT_SF_DIR=... sbt "Test/runMain graft.ScaleProbe 1 4 16"`
   */

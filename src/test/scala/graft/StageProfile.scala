@@ -24,7 +24,6 @@ object StageProfile {
     // warmup
     graft.queries.Aggs.aggHash(spark, d).queryExecution.toRdd.count()
 
-    spark.conf.set("spark.graft.jaccard.setRepr", "array")
     val tokRaw = graft.Tables.documents(spark, d)
       .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("token"))
     t("tok distinct")(tokRaw.distinct())
