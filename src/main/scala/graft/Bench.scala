@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.queries.Q
 
 /** Benchmark main. Prints JSON lines on stdout — run it via
   * `scripts/bench.sh` (execs java directly) or `sbt "runMain graft.Bench"`
@@ -24,30 +25,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = math.max(1, sys.env.getOrElse("SPARK_GRAFT_ITERS", "4").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Static conf, must be set before the session exists: the
-      // whole-stage-codegen class cache defaults to 100 entries, sized
-      // for an ad-hoc session — this suite cycles 153 queries × several
-      // codegen units per pass, so at the default EVERY pass re-runs
-      // Janino on EVERY query (pure LRU churn). A resident query
-      // service sizes this cache to its query library; 8192 bounds it
-      // far above the suite's ~600-unit working set. Measured on the
-      // 30-query cheap tail at ITERS=3: 18.34 → 14.72 s (−20%).
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // drop every block a query (or Lineage.cut) may have pinned, so each
-    // timed run starts cold and block pressure never accumulates
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
+    val spark = Session.local()
 
     // JVM/codegen warmup on the smallest available sibling fixture so the
     // first timed queries don't absorb JIT + codegen-compiler cold start
@@ -79,7 +58,7 @@ object Bench {
       try q().queryExecution.toRdd.count()
       catch { case e: Throwable =>
         System.err.println(s"WARN bench warmup '$n' on $warm failed: $e") }
-      sweep()
+      Session.sweep(spark)
     }
 
     // SPARK_GRAFT_ONLY=q1,q2 benches a subset (local iteration aid)
@@ -125,26 +104,11 @@ object Bench {
       try SparkEntry.queries(n)(spark, sfDir).queryExecution.toRdd.count()
       catch { case e: Throwable =>
         System.err.println(s"WARN bench hot-warm '$n' on $sfDir failed: $e") }
-      sweep()
+      Session.sweep(spark)
     }
-    // full passes (not back-to-back reps): pass 2 hits each query with
-    // the same cold-cache state as pass 1, so min is comparable run-to-run
-    val samples: Seq[Seq[(String, Double)]] = (1 to iters).map { _ =>
-      names.map { name =>
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        // toRdd executes the physical plan exactly as the query defines
-        // it; a plain .count() would let Catalyst prune unreferenced
-        // window/projection work and under-report (SURVEY §3.2).
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        sweep()
-        name -> dt
-      }
-    }
-    val byName = names.map { n =>
-      val ts = samples.map(_.find(_._1 == n).get._2)
+    val (samples, failed) = timedPasses(spark, names.map(n => n -> SparkEntry.queries(n)), sfDir, iters)
+    val byName = names.filterNot(failed.contains).map { n =>
+      val ts = samples.map(_(n))
       (n, ts.min, ts.max - ts.min)
     }
     def fmt(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
@@ -159,14 +123,14 @@ object Bench {
     // filter saw a calm pass — environment, not code).
     val llmSum    = byName.filter(_._1.startsWith("llm_")).map(_._2).sum
     val nonLlmSum = total - llmSum
-    val worst     = byName.maxBy(_._2)
-    val wSpread   = byName.maxBy(_._3)
+    val worst     = byName.maxByOption(_._2).getOrElse(("", 0.0, 0.0))
+    val wSpread   = byName.maxByOption(_._3).getOrElse(("", 0.0, 0.0))
     // Raw per-pass times (run order) for the worst-spread query: a cold
     // start shows pass 1 slow + the rest calm; a co-tenant stall shows a
     // late pass slow. Without these the artifact cannot distinguish the
     // two (BENCH_r10's 93.8 s ann_pq excursion vs its 2.7 s min was
     // unadjudicable; VERDICT r10 #1).
-    val wPasses = samples.map(_.find(_._1 == wSpread._1).get._2)
+    val wPasses = samples.flatMap(_.get(wSpread._1))
       .map(fmt).mkString("[", ",", "]")
     // Top-8 heaviest per-query mins inline in the final line: the queries
     // any budget conversation is actually about, at ~25 B each.
@@ -192,7 +156,40 @@ object Bench {
       // pass-1/min numbers are not comparable to unwarmed rounds', so
       // the artifact must say which queries were warmed by itself
       s""","hot_warm":"${if (hotWarmConf.trim == "all") "all" else hotWarm.mkString(",")}"""" +
-      s""","top":$top8,"iters":$iters,"n":${names.size}}""")
+      s""","top":$top8,"iters":$iters,"n":${names.size}""" +
+      s""","failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}""")
     spark.stop()
+  }
+
+  /** `iters` full passes over `queries` (not back-to-back reps): pass 2
+    * hits each query with the same cold-cache state as pass 1, so min is
+    * comparable run-to-run. Returns each pass's wall per query that ran,
+    * and the queries that threw in any pass, in input order. A failure
+    * goes to stderr with its exception and its query gets no sample: a
+    * fast throw is not a valid min. */
+  def timedPasses(spark: SparkSession, queries: Seq[(String, Q)], sfDir: String,
+                  iters: Int): (Seq[Map[String, Double]], Seq[String]) = {
+    val failed = scala.collection.mutable.Set.empty[String]
+    val samples = (1 to iters).map { _ =>
+      queries.flatMap { case (name, fn) =>
+        val t0 = System.nanoTime()
+        // toRdd executes the physical plan exactly as the query defines
+        // it; a plain .count() would let Catalyst prune unreferenced
+        // window/projection work and under-report (SURVEY §3.2).
+        val dt = try {
+          fn(spark, sfDir).queryExecution.toRdd.count()
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
+          System.err.println(s"ERROR bench '$name' on $sfDir failed: $e")
+          e.printStackTrace(System.err)
+          failed += name
+          None
+        }
+        Session.sweep(spark)
+        dt.map(name -> _)
+      }.toMap
+    }
+    val bad = queries.map(_._1).filter(failed)
+    (samples.map(_ -- bad), bad)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: print the formatted physical plan and wall time for
   * named queries. Usage: runMain graft.Explain <sfDir> <query> [query...]
   * (add -t to only time, skipping the plan dump). */
@@ -11,14 +9,7 @@ object Explain {
     val rest = args.filterNot(_ == "-t")
     val sfDir = rest.head
     val names = rest.tail
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     names.foreach { name =>
       // construction is timed separately: eager Lineage.cuts run inside
       // the query builder, so "build" time IS pipeline time for the

@@ -1,26 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = Session.local(
       // Dump µs-int64 timestamps (not INT96) so the DuckDB-side compare
       // reads identical values (SURVEY.md §7.3 item 3).
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // Hold the whole suite's generated classes (static conf; default
-      // 100 churns at 153 queries — rationale and measurement in
-      // Bench.scala's twin setting).
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     // Dump-boundary timestamp normalization: the r7 driver data carries
     // naive (isAdjustedToUTC=false) parquet timestamps, which DuckDB reads

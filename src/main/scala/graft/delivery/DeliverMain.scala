@@ -123,13 +123,7 @@ object DeliverMain {
   }
 
   def main(argv: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     try {
       val (r, ok) = run(spark, argv)
       println(s"""{"rows":${r.rows},"files":${r.files},"bytes":${r.bytes},""" +

@@ -20,11 +20,8 @@ object Validate {
       .unpivot(Array.empty[Column], rules.map(r => col(r._1)).toArray, "rule", "n_viol")
   }
 
-  /** Orphan count: child rows whose key has no match in parent. */
-  def fkOrphans(child: DataFrame, key: String, parent: DataFrame, pkey: String): Long =
-    child.join(parent, child(key) === parent(pkey), "left_anti").count()
-
-  /** Orphan count as a 1-row DataFrame, for unioning into a report. */
+  /** Orphan count (child rows whose key has no match in parent) as a
+    * 1-row DataFrame, for unioning into a report. */
   def fkOrphanRow(rule: String, child: DataFrame, key: String,
                   parent: DataFrame, pkey: String): DataFrame = {
     val spark = child.sparkSession
@@ -50,7 +47,8 @@ object Validate {
     * broadcast 1-row frame — NOT one agg carrying every countDistinct,
     * which Catalyst compiles to an Expand that shuffles
     * (n_profiled_cols + 1) × the row count in one wide exchange
-    * (measured 1.24 vs 0.74 s warm on sf0.1 orders, DqProfileProbe).
+    * (measured 1.24 vs 0.74 s warm on sf0.1 orders; BASELINE.md,
+    * round-10 eighth session).
     * The per-column subtrees re-scan, but each scan PRUNES to its one
     * column (column re-reads, not corpus re-reads — parquet pays bytes
     * per column), and each shuffle moves only the map-side-combined

@@ -221,13 +221,7 @@ object CorpusPrepMain {
     val src = pos(0)
     val dst = if (doAttrition) "" else pos(1)
     val stopK = (if (doAttrition) pos.lift(1) else pos.lift(2)).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     def printSync(t: (Seq[String], Seq[String], graft.delivery.DeliveryReport)): Unit = {
       val (changed, stale, rep) = t
       println(s"""{"changed":[${changed.map("\"" + _ + "\"").mkString(",")}],""" +

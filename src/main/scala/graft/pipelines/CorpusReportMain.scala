@@ -82,13 +82,7 @@ object CorpusReportMain {
 
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: CorpusReportMain SRCDIR")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     try println(report(spark, args(0))) finally spark.stop()
   }
 }

@@ -48,8 +48,8 @@ object Scans {
 
   /** Plain recursive unlink — commons-io's deleteQuietly walks with
     * per-file symlink/type checks that cost ~0.5 s over 5000 entries
-    * (BinBisect). Shared by every roundtrip query that sweeps its
-    * scratch children at entry. */
+    * (BASELINE.md, round-10 source_binary bisect). Shared by every
+    * roundtrip query that sweeps its scratch children at entry. */
   private[graft] def rmRf(f: java.io.File): Unit = {
     val cs = f.listFiles; if (cs != null) cs.foreach(rmRf); f.delete(): Unit
   }
@@ -187,9 +187,10 @@ object Scans {
     // call would strand one file-per-doc payload copy per invocation
     // (4 bench passes/round + Verify/tests — review r8), while reusing
     // ONE fixed dir (the r9 form) measured 2.6× slower end-to-end
-    // (BinBisect: 1.32 vs 0.50 s) because ext4 directory htrees never
-    // shrink — 5000 unlink+create cycles bloat the inode and every
-    // subsequent create/listing walks it. The parent bounds the
+    // (1.32 vs 0.50 s; BASELINE.md, round-10 source_binary bisect)
+    // because ext4 directory htrees never shrink — 5000 unlink+create
+    // cycles bloat the inode and every subsequent create/listing walks
+    // it. The parent bounds the
     // footprint to one corpus copy; the child gives each pass a compact
     // directory. The returned frame reads the path LAZILY, so the sweep
     // must never run at the END of this function.
@@ -199,8 +200,8 @@ object Scans {
     dir.mkdirs()
     val tmp = dir.toString
     // delivery over the InternalRow RDD: Dataset.foreachPartition would
-    // insert a whole extra deserialize-to-Row stage (~0.4 s at sf0.1 —
-    // BinBisect) just to read two fields the unsafe row already exposes
+    // insert a whole extra deserialize-to-Row stage (~0.4 s at sf0.1,
+    // BASELINE.md) just to read two fields the unsafe row already exposes
     Tables.documents(s, d)
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
       .queryExecution.toRdd.foreachPartition { it =>

@@ -83,13 +83,6 @@ object EventStreams {
       .select(col("window.start").as("win_start"), col("event_type"),
               col("n"), col("sum_value"))
 
-  /** ev_sliding twin: 1h window every 15m. */
-  def slidingCounts(events: DataFrame, watermarkDelay: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-      .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
-      .select(col("window.start").as("win_start"), col("n"), col("sum_value"))
-
   /** ev_session twin: 30-min-gap session windows per user. */
   def sessionAgg(events: DataFrame, gap: String = "30 minutes",
                  watermarkDelay: String = "10 minutes"): DataFrame =

@@ -260,14 +260,7 @@ object StressGen {
     val src = args(0); val dst = args(1); val k = args(2).toInt
     val kDocsArg = args.lift(3).getOrElse("3")
     val kEmb = args.lift(4).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     // Relational-mode arg (args(5), default "core"): "graph" replicates
     // via graphStress — BOTH l_orderkey AND l_partkey shifted, so each

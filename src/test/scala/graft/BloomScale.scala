@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev aid (round 9): MEASURE what llm_dedup_bloom's routing buys at
@@ -27,19 +27,13 @@ import org.apache.spark.sql.functions._
   * digest set does not broadcast, and a broadcast exact join would
   * hide exactly the left-side shuffle this measures.
   *
-  * `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.BloomScale 30"`
+  * `SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.BloomScale 30"`
   */
 object BloomScale {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = math.max(1, sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reuse = sys.env.get("SPARK_GRAFT_REUSE").contains("1")
 
@@ -49,14 +43,10 @@ object BloomScale {
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
         shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
     })
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
     /** (min wall s, rows, shuffle MB of the LAST pass) */
     def timed(fn: => DataFrame): (Double, Long, Double) = {
       val runs = (1 to iters).map { _ =>
-        sweep()
+        Session.sweep(spark)
         Thread.sleep(500) // drain listener events from the sweep
         shuffleBytes.set(0L)
         val t0 = System.nanoTime()
@@ -131,7 +121,7 @@ object BloomScale {
           spark, docs.where(col("bucket") < 80), dir, six)
         val (ts, _, bsMB) = timed(pipelines.SignatureIndex.refresh(
           spark, spark.read.parquet(s"$dir/batch.parquet"), six))
-        sweep()
+        Session.sweep(spark)
         val t0 = System.nanoTime()
         queries.Sketches.llmMinhash(spark, dir).queryExecution.toRdd.count()
         val tScratch = (System.nanoTime() - t0) / 1e9

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev aid (round 10, eighth session): the ConnectedComponents.auto
   * crossover measured — localUnionFind vs largeStarSmallStar walls on
@@ -19,17 +18,8 @@ object CcCrossover {
     val sizes: Seq[Long] =
       if (args.nonEmpty) args.map(_.toLong).toSeq
       else Seq(1000000L, 8000000L, 24000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(32)
 
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
 
     for (nE <- sizes) {
       // node count scales with edges (power of 2, ~edges/16) so degree
@@ -65,7 +55,7 @@ object CcCrossover {
                 f"${a.value / 1048576.0}%.1f MiB (${a.value.toDouble / nLbl}%.0f B/node)"))
           } finally spark.conf.unset("spark.graft.graph.cc.measureMemory")
         }
-        sweep()
+        Session.sweep(spark)
       }
     }
     spark.stop()

@@ -43,27 +43,21 @@ class CollapseSpec extends AnyFunSuite with Matchers with SparkFixture {
     base
   }
 
-  private def withConfs(kvs: (String, String)*)(f: => Unit): Unit = {
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
-  }
-
   test("collapseExact cluster assignment is identical on a dup-heavy corpus (lss)") {
     // base pinned to the UNCOLLAPSED path explicitly — collapse is the
     // default since round 9, so an unset baseline would compare the
     // collapsed path to itself
-    var base: Array[org.apache.spark.sql.Row] = null
-    withConfs("spark.graft.dedup.collapseExact" -> "false") {
-      base = queries.Extras.llmDedupCluster(spark, dupDir).collect()
+    val base = withConf("spark.graft.dedup.collapseExact" -> "false") {
+      queries.Extras.llmDedupCluster(spark, dupDir).collect()
     }
     base.length should be > 0
-    withConfs("spark.graft.dedup.collapseExact" -> "true") {
+    withConf("spark.graft.dedup.collapseExact" -> "true") {
       queries.Extras.llmDedupCluster(spark, dupDir).collect() should equal(base)
     }
   }
 
   test("collapseExact actually contracts: dup copies share their original's cluster") {
-    withConfs("spark.graft.dedup.collapseExact" -> "true") {
+    withConf("spark.graft.dedup.collapseExact" -> "true") {
       val n = Tables.documents(spark, sfDir).count()
       val cl = queries.Extras.llmDedupCluster(spark, dupDir)
       // each injected copy (doc_id = orig + k·n, k=1,2) must carry the
@@ -80,7 +74,7 @@ class CollapseSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("identical text under different langs never merges") {
-    withConfs("spark.graft.dedup.collapseExact" -> "true") {
+    withConf("spark.graft.dedup.collapseExact" -> "true") {
       val n = Tables.documents(spark, sfDir).count()
       val cl = queries.Extras.llmDedupCluster(spark, dupDir)
       val xDoc = cl.where(col("doc_id") >= 10 * n).select("cluster").head().getLong(0)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev aid (round 13, VERDICT r12 #5): price the PRODUCTION path as one
   * composed run instead of summing hermetic parts. The bench deliberately
@@ -23,26 +22,16 @@ import org.apache.spark.sql.SparkSession
   * each successive count prices roughly ONE stage's new work (same
   * mechanism the attrition census documents).
   *
-  * `SPARK_GRAFT_SCALE_DIR=/tmp/graft_scale_x10 sbt "Test/runMain graft.ComposedScale"`
+  * `SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SCALE_DIR=/tmp/graft_scale_x10 sbt "Test/runMain graft.ComposedScale"`
   */
 object ComposedScale {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(
+      sys.env.get("SPARK_GRAFT_SHUFFLE").map("spark.sql.shuffle.partitions" -> _).toSeq: _*)
     val src = args.headOption.orElse(sys.env.get("SPARK_GRAFT_SCALE_DIR"))
       .getOrElse("/tmp/graft_scale_x10")
     val work = java.nio.file.Files.createTempDirectory("graft_composed").toString
 
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
     def timed[T](fn: => T): (Double, T) = {
       val t0 = System.nanoTime()
       val r = fn
@@ -51,7 +40,7 @@ object ComposedScale {
     def fmt(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
 
     // per-stage split (one pass, counts in pipeline order)
-    sweep()
+    Session.sweep(spark)
     val frames = graft.pipelines.CorpusPrep.stageFrames(spark, src,
       stopK = 5, jaccardTheta = 0.8, xentMax = None,
       spanDupMax = None, containMax = None, domainCap = None,
@@ -62,19 +51,19 @@ object ComposedScale {
       s""""$name":${fmt(t)}"""
     }.mkString("{", ",", "}")
 
-    sweep()
+    Session.sweep(spark)
     val (tComposed, manifest) = timed(
       graft.pipelines.CorpusPrepMain.run(spark, src, s"$work/composed"))
     println(s"[composed] composed cold run: ${fmt(tComposed)} s $manifest")
 
     val artifact = s"$work/pairs_artifact"
-    sweep()
+    Session.sweep(spark)
     val (tBoot, repB) = timed(graft.pipelines.CorpusPrepMain.refreshFlow(
       spark, src, s"$work/amortized", artifact, refresh = false))
     println(s"[composed] bootstrap (artifact build + artifact-served prep + sync): " +
       s"${fmt(tBoot)} s changed=${repB._1.size} stale=${repB._2.size}")
 
-    sweep()
+    Session.sweep(spark)
     val (tReuse, repR) = timed(graft.pipelines.CorpusPrepMain.refreshFlow(
       spark, src, s"$work/amortized", artifact, refresh = false))
     println(s"[composed] reuse (day-2, no change): ${fmt(tReuse)} s " +

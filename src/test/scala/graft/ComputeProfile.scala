@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev aid (round 13, VERDICT r12 #1a receipts): decompose the non-llm
@@ -11,17 +10,12 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * single-partition latency, which more optimization cannot remove
   * without changing what the query claims to do).
   *
-  * `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.ComputeProfile q1,q2"`
+  * `SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.ComputeProfile q1,q2"`
   */
 object ComputeProfile {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
+    val cpus = spark.sparkContext.defaultParallelism
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = args.headOption.map(_.split(",").toSeq).getOrElse(Seq(
       "graph_pagerank", "graph_khop", "graph_edges_build", "join_salted",
@@ -41,13 +35,9 @@ object ComputeProfile {
         (): Unit
       }
     })
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
     // JIT/codegen warmup: run the set once untimed
     names.foreach { n =>
-      SparkEntry.queries(n)(spark, d).queryExecution.toRdd.count(); sweep()
+      SparkEntry.queries(n)(spark, d).queryExecution.toRdd.count(); Session.sweep(spark)
     }
     println(f"${"query"}%-20s ${"wall_s"}%7s ${"jobs"}%5s ${"stages"}%7s ${"tasks"}%6s ${"task_s"}%8s ${"cpu_util"}%8s")
     names.foreach { n =>
@@ -59,7 +49,7 @@ object ComputeProfile {
       Thread.sleep(300) // drain the async listener bus
       val ts = taskMs.get() / 1e3
       println(f"$n%-20s $wall%7.2f ${jobs.get()}%5d ${stages.get()}%7d ${tasks.get()}%6d $ts%8.2f ${ts / (wall * cpus)}%8.2f")
-      sweep()
+      Session.sweep(spark)
     }
     spark.stop()
   }

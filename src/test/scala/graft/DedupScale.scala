@@ -17,30 +17,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * actually exist (CollapseSpec pins its CORRECTNESS; this measures its
   * value). Results land in BASELINE.md as the round-9 scaling row.
   *
-  * `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.DedupScale 1 10 30"`
+  * `SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.DedupScale 1 10 30"`
   */
 object DedupScale {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 10, 30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = math.max(1, sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt)
     // SPARK_GRAFT_SHUFFLE overrides the partition count: a real cluster
     // scales partitions with data (partitions ≈ data / target-split),
     // while pinning them at 32 as the corpus grows 30× conflates "work
     // grew" with "a 32nd of the shuffle stopped fitting in memory" —
     // the override separates the two in the scaling record
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(
+      sys.env.get("SPARK_GRAFT_SHUFFLE").map("spark.sql.shuffle.partitions" -> _).toSeq: _*)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
 
     // Task-retry census (VERDICT r11 #6): the ×100 heap-envelope claim
     // is "zero task retries at the stated heap" — count retried/failed
@@ -56,7 +46,7 @@ object DedupScale {
     })
     def timed(fn: => DataFrame): (Double, Long) = {
       val runs = (1 to iters).map { _ =>
-        sweep()
+        Session.sweep(spark)
         val t0 = System.nanoTime()
         val n = fn.queryExecution.toRdd.count()
         ((System.nanoTime() - t0) / 1e9, n)

@@ -17,9 +17,7 @@ class EmptyInputSpec extends AnyFunSuite with Matchers with SparkFixture {
       Tables.table(spark, sfDir, t).limit(0)
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")
     }
-    // events: read the raw ns file as long (the same nanosAsLong mode
-    // Tables.events uses) and write the zero-row long-ts shape back
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events: the raw file's zero-row shape (ts is timestamp[us])
     spark.read.parquet(s"$sfDir/events.parquet").limit(0)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev aid (round 10, VERDICT r9 #5): the power-law KILLER DEMO for the
@@ -22,20 +21,14 @@ import org.apache.spark.sql.functions._
   * the degree-oriented arm tracks E^1.5 / corpus. Results land in
   * BASELINE.md beside the GraphScale row.
   *
-  * `sbt "Test/runMain graft.GraphHubScale 65536 1000000"`  (nodes edges)
+  * `SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.GraphHubScale 65536 1000000"`  (nodes edges)
   */
 object GraphHubScale {
   def main(args: Array[String]): Unit = {
     val nNodes = args.lift(0).map(_.toInt).getOrElse(1 << 16)
     val nEdges = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = math.max(1, sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     // sweep clears the SQL cache only: the graph under test is itself a
     // localCheckpoint (Lineage.cut) whose blocks are the ONLY copy —

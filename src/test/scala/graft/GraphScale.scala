@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev aid (round 9, fifth session): measured scaling of the round's
   * new operator families — graph analytics (pagerank's iterative
@@ -15,30 +14,19 @@ import org.apache.spark.sql.SparkSession
   * e = ln(t₂/t₁)/ln(m₂/m₁) ≈ 1 is linear; results land in BASELINE.md
   * beside the DedupScale / CoreScale / VectorScale rows.
   *
-  * `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.GraphScale 1 10 30"`
+  * `SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.GraphScale 1 10 30"`
   */
 object GraphScale {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 10, 30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = math.max(1, sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt)
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(("spark.sql.legacy.parquet.nanosAsLong" -> "true") +:
+      sys.env.get("SPARK_GRAFT_SHUFFLE").map("spark.sql.shuffle.partitions" -> _).toSeq: _*)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
     def timed(name: String, dir: String): (Double, Long) = {
       val runs = (1 to iters).map { _ =>
-        sweep()
+        Session.sweep(spark)
         val t0 = System.nanoTime()
         val n = SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
         ((System.nanoTime() - t0) / 1e9, n)
@@ -90,7 +78,7 @@ object GraphScale {
           } finally spark.conf.unset("spark.graft.graph.cc.localMaxEdges")
           spark.conf.set("spark.graft.graph.cc.measureMemory", "true")
           try {
-            sweep()
+            Session.sweep(spark)
             // reset first: a graph_cc that routes to lss at this scale
             // never runs localUnionFind, and printing the PREVIOUS
             // multiplier's accumulator labeled with this one would

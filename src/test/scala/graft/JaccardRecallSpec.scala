@@ -140,13 +140,10 @@ class JaccardRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
       Llm.llmPairTable(spark, sfDir).collect().toSeq,
       queries.Extras.llmDedupIncremental(spark, sfDir).collect().toSeq)
     val direct = run()
-    spark.conf.set("spark.graft.pairs.artifact", out)
-    try {
-      val viaArtifact = run()
-      viaArtifact._1 should equal(direct._1)
-      viaArtifact._2 should equal(direct._2)
-      viaArtifact._3 should equal(direct._3)
-    } finally spark.conf.unset("spark.graft.pairs.artifact")
+    val viaArtifact = withConf("spark.graft.pairs.artifact" -> out)(run())
+    viaArtifact._1 should equal(direct._1)
+    viaArtifact._2 should equal(direct._2)
+    viaArtifact._3 should equal(direct._3)
   }
 
   test("minhash candidate mode: exact-subset of rarity mode with banding-S-curve recall") {
@@ -164,12 +161,11 @@ class JaccardRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
     val exact = Llm.llmJaccardPairs(spark, sfDir)
       .select("doc_a", "doc_b", "jac").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    spark.conf.set(key, "minhash")
-    val approx = try {
+    val approx = withConf(key -> "minhash") {
       Llm.llmJaccardPairs(spark, sfDir)
         .select("doc_a", "doc_b", "jac").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    } finally spark.conf.unset(key)
+    }
     exact.nonEmpty shouldBe true
     (approx -- exact) shouldBe empty // banding only prunes candidates, never invents
     val recall = (exact & approx).size.toDouble / exact.size

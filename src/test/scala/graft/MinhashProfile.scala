@@ -1,20 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev aid (round 13 optimization): time the internal stages of the
   * llm_minhash pipeline — signature UDAF, banding, candidate self-join,
   * rejoin/agree scoring — so the 35-task-second profile decomposes.
-  * `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.MinhashProfile"` */
+  * `SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.MinhashProfile"` */
 object MinhashProfile {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     graft.functions.VectorExprs.register(spark)
     def t(name: String)(df: => DataFrame): Unit = {

@@ -1,18 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev aid: time today's jaccardPairsUnsorted stages (MinKAgg blocking,
   * sharded self-join, interned-set scoring) as materialized prefixes.
-  * `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.PairProfile"` */
+  * `SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.PairProfile"` */
 object PairProfile {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     import graft.queries.Llm
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     def t(name: String)(df: => DataFrame): DataFrame = {

@@ -71,8 +71,7 @@ class PairTableSpec extends AnyFunSuite with Matchers with SparkFixture {
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     }
     val clean = refresh(s"$tmp/m_clean")
-    spark.conf.set("spark.graft.pairs.artifact", s"$tmp/prev")
-    try {
+    withConf("spark.graft.pairs.artifact" -> s"$tmp/prev") {
       // the corpus stamp rejects serving a different dataset dir — the
       // conf is session-global, a foreign artifact must fail loudly
       intercept[IllegalArgumentException] {
@@ -82,21 +81,19 @@ class PairTableSpec extends AnyFunSuite with Matchers with SparkFixture {
       // new-endpoint filter over YESTERDAY'S pairs is an empty delta
       // and the artifact silently never learns today's near-dups
       refresh(s"$tmp/m_conf") should equal(clean)
-    } finally spark.conf.unset("spark.graft.pairs.artifact")
+    }
   }
 
   test("candidate-mode stamp: approximate artifacts never serve the exact contract") {
     val tmp = java.nio.file.Files.createTempDirectory("pt_mode").toString
     val (aKey, cKey) = ("spark.graft.pairs.artifact", "spark.graft.pairs.candidates")
     // build an artifact under the approximate minhash generator
-    spark.conf.set(cKey, "minhash")
-    val approxDirect = try {
+    val approxDirect = withConf(cKey -> "minhash") {
       pipelines.PairTable.write(spark, sfDir, s"$tmp/mh")
       queries.Llm.llmJaccardPairs(spark, sfDir).collect().toSeq
-    } finally spark.conf.unset(cKey)
+    }
     pipelines.PairTable.readCandMode(spark, s"$tmp/mh") shouldBe "minhash"
-    spark.conf.set(aKey, s"$tmp/mh")
-    try {
+    withConf(aKey -> s"$tmp/mh") {
       // a default (exact-contract) session must refuse the approximate table
       val ex = intercept[IllegalArgumentException] {
         queries.Llm.llmJaccardPairs(spark, sfDir)
@@ -106,11 +103,10 @@ class PairTableSpec extends AnyFunSuite with Matchers with SparkFixture {
       // read equals the fresh minhash-mode compute (candidate banding is
       // threshold-independent, so the 0.6-floored table re-thresholded
       // at 0.8 is lossless for the 0.8 consumer)
-      spark.conf.set(cKey, "minhash")
-      try {
+      withConf(cKey -> "minhash") {
         queries.Llm.llmJaccardPairs(spark, sfDir).collect().toSeq should
           equal(approxDirect)
-      } finally spark.conf.unset(cKey)
+      }
       // mixed-provenance merge: refreshing the minhash-built prev from a
       // rarity session fails loudly instead of mixing halves
       val ex2 = intercept[IllegalArgumentException] {
@@ -118,7 +114,7 @@ class PairTableSpec extends AnyFunSuite with Matchers with SparkFixture {
           spark, sfDir, s"$tmp/mh", s"$tmp/mixed", id => id > 0L)
       }
       ex2.getMessage should include("mix exact and approximate")
-    } finally spark.conf.unset(aKey)
+    }
   }
 
   test("refreshInPlace appends exactly updateIncremental's delta; a re-run after an interrupted refresh changes nothing") {

@@ -11,6 +11,11 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkFixture {
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Auto-broadcast off (the 100 TB regime: no side fits in memory), so
+    * a pinned broadcast is the query's own hint, not a size estimate. */
+  private def autoBroadcastOff[T](f: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(f)
+
   test("scan_pruned pushes the shipdate predicate and prunes columns") {
     val plan = planOf(Scans.scanPruned(spark, sfDir))
     plan should include("PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate")
@@ -26,11 +31,9 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkFixture {
   test("join_shuffle degrades to SortMergeJoin when neither side broadcasts") {
     // at fixture scale Spark rightly auto-broadcasts tiny orders; the
     // scale-relevant property is the large-large fallback plan
-    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    autoBroadcastOff {
       planOf(Joins.joinShuffle(spark, sfDir)) should include("SortMergeJoin")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+    }
   }
 
   test("limit_topk compiles to TakeOrderedAndProject (no global sort)") {
@@ -74,16 +77,14 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkFixture {
     // frame back over the fact scan by explicit hint — pinned with
     // auto-broadcast off so the shape cannot silently degrade to a
     // corpus-wide SortMergeJoin when the planner's size estimate drifts
-    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    autoBroadcastOff {
       val p1 = planOf(queries.Aggs.aggSkewKurt(spark, sfDir))
       val p2 = planOf(queries.Extras.dqOutliers(spark, sfDir))
       p1 should include("BroadcastHashJoin")
       p1 should not include "SortMergeJoin"
       p2 should include("BroadcastHashJoin")
       p2 should not include "SortMergeJoin"
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+    }
   }
 
   test("partitioned copy enables partition pruning on read-back") {
@@ -107,9 +108,7 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkFixture {
       s, s"$sfDir/lineitem.parquet", "li_b", "l_orderkey", 8)
     graft.delivery.Deliver.copyBucketed(
       s, s"$sfDir/orders.parquet", "o_b", "o_orderkey", 8)
-    val thresh = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try autoBroadcastOff {
       val joined = s.table("li_b").join(s.table("o_b"),
         org.apache.spark.sql.functions.col("l_orderkey") ===
         org.apache.spark.sql.functions.col("o_orderkey"))
@@ -117,7 +116,6 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkFixture {
       plan should include("SortMergeJoin")
       plan should not include "Exchange"
     } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
       s.sql("DROP TABLE IF EXISTS li_b")
       s.sql("DROP TABLE IF EXISTS o_b")
     }
@@ -130,16 +128,14 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkFixture {
     // either side. A regression here (bucket-count mismatch, a select
     // that drops the bucket spec) would silently reintroduce the
     // repeated-shuffle cost the operator exists to remove.
-    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    autoBroadcastOff {
       val plan = planOf(Joins.joinBucketed(spark, sfDir))
       plan should include("SortMergeJoin")
       // the agg above the join re-shuffles by o_orderstatus (expected);
       // assert no exchange BELOW the join by checking the join inputs
       val joinIdx = plan.indexOf("SortMergeJoin")
       plan.substring(joinIdx) should not include "Exchange"
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+    }
   }
 
   test("near-dup signature rejoins are shuffle joins, never per-document broadcasts") {
@@ -221,9 +217,7 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkFixture {
     // every purchase with every click. With auto-broadcast off (the
     // 100 TB regime) the plan is SMJ keyed on user_id, each side
     // shuffled exactly once on that key.
-    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    autoBroadcastOff {
       val plan = planOf(queries.Events.evIntervalJoin(spark, sfDir))
       plan should not include "CartesianProduct"
       plan should not include "BroadcastNestedLoopJoin"
@@ -238,7 +232,7 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkFixture {
       // different, exchanges — count only the user_id-keyed ones)
       "Exchange hashpartitioning\\(user_id".r
         .findAllMatchIn(plan).size shouldBe 2
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+    }
   }
 
   test("llm_dsir's bucket-ratio table reaches the scoring join as a broadcast at any corpus size") {
@@ -249,14 +243,12 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkFixture {
     // time. Auto-broadcast is disabled to prove the explicit broadcast()
     // hint carries the plan, not a size estimate that stops holding
     // when the corpus (and Spark's stats) grow.
-    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    autoBroadcastOff {
       val plan = planOf(queries.Textops.llmDsir(spark, sfDir))
       plan should include regex "BroadcastHashJoin \\[b"
       plan should not include "SortMergeJoin"
       plan should not include "CartesianProduct"
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+    }
   }
 
   test("llm_gopher_rules is a shuffle-free single-pass projection") {
@@ -308,13 +300,12 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkFixture {
     // hot-bucket broadcast annotation), scoring via merge SMJs — never
     // a cartesian/nested-loop fallback
     val key = "spark.graft.pairs.candidates"
-    spark.conf.set(key, "minhash")
-    try {
+    withConf(key -> "minhash") {
       val plan = planOf(queries.Llm.llmJaccardPairs(spark, sfDir))
       plan should not include "CartesianProduct"
       plan should not include "BroadcastNestedLoopJoin"
       plan should include("BroadcastHashJoin") // bucket-size annotation
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("llm_mix_apply broadcasts the weight table; llm_token_histogram aggregates pre-window") {
@@ -390,14 +381,12 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkFixture {
     // the rejoin must be a BroadcastHashJoin on dim even when size stats
     // say otherwise (auto-broadcast off = the 100 TB regime); an SMJ
     // here would shuffle the exploded value stream a second time
-    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    autoBroadcastOff {
       val plan = planOf(queries.Llm.llmEmbedQuantize(spark, sfDir))
       plan should include regex "BroadcastHashJoin \\[dim"
       plan should not include "SortMergeJoin"
       plan should not include "CartesianProduct"
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+    }
   }
 
   test("win_scd2's two windows share one exchange and one sort") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev aid (round 9): PqIndex refresh economics — the ANN sibling of the
@@ -12,17 +11,12 @@ import org.apache.spark.sql.functions._
   * production posture: a daily refresh pays encoding for the batch
   * only — never retraining, never re-encoding the corpus.
   *
-  * `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.PqIndexScale 30"`
+  * `SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.PqIndexScale 30"`
   */
 object PqIndexScale {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     def timed[A](what: String)(f: => A): A = {

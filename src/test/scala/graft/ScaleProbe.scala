@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * multiplier. Quadratic growth in time or rows means a blocking/banding
   * regression.
   *
-  * `SPARK_GRAFT_SF_DIR=... sbt "Test/runMain graft.ScaleProbe 1 4 16"`
+  * `SPARK_GRAFT_CPUS=8 SPARK_GRAFT_SF_DIR=... sbt "Test/runMain graft.ScaleProbe 1 4 16"`
   */
 object ScaleProbe {
   def scaled(spark: SparkSession, d: String, mult: Int, out: String): Unit = {
@@ -32,11 +32,7 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 4, 16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val ops: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       "llm_exact_dedup" -> queries.Llm.llmExactDedup,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -25,7 +25,7 @@ import org.apache.spark.sql.streaming.Trigger
   * watermark-bounded state (late rows keep state alive), so the state
   * numbers here are ceilings, not typical values.
   *
-  * `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.StreamScale 10 30"`
+  * `SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.StreamScale 10 30"`
   */
 object StreamScale {
   private val HDFS = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
@@ -33,13 +33,7 @@ object StreamScale {
 
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(10, 30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("spark.sql.legacy.parquet.nanosAsLong" -> "true")
     import spark.implicits._
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val tmp = s"${sys.props("java.io.tmpdir")}/graft_streamscale"

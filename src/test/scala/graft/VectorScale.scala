@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev aid (round 9): the VECTOR/ANN family's measured scaling — the
   * third leg beside DedupScale (llm near-dup) and CoreScale
@@ -26,28 +25,18 @@ import org.apache.spark.sql.SparkSession
   * Exponent e = ln(t₂/t₁)/ln(m₂/m₁); results land in BASELINE.md next
   * to the dedup/core rows.
   *
-  * `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.VectorScale 1 10 30"`
+  * `SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "Test/runMain graft.VectorScale 1 10 30"`
   */
 object VectorScale {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 10, 30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = math.max(1, sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("spark.sql.legacy.parquet.nanosAsLong" -> "true")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
     def timed(name: String, dir: String): (Double, Long) = {
       val runs = (1 to iters).map { _ =>
-        sweep()
+        Session.sweep(spark)
         val t0 = System.nanoTime()
         val n = SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
         ((System.nanoTime() - t0) / 1e9, n)

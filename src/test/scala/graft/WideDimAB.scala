@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev aid (round 10): the ivf-vs-ivfpq CROSSOVER measured at
@@ -17,21 +16,15 @@ import org.apache.spark.sql.functions._
   * — the delta is purely [ADC + top-C + small rescore] vs
   * [full-width rescore of every candidate]).
   *
-  * `sbt "Test/runMain graft.WideDimAB 60000 512 12"`  (n dim bits)
+  * `SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.WideDimAB 60000 512 12"`  (n dim bits)
   */
 object WideDimAB {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toInt).getOrElse(60000)
     val dim = args.lift(1).map(_.toInt).getOrElse(512)
     val bits = args.lift(2).map(_.toInt).getOrElse(12)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = math.max(1, sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     val dir = s"${sys.props("java.io.tmpdir")}/graft_wide_${n}_$dim"
     if (!new java.io.File(s"$dir/embeddings.parquet/_SUCCESS").exists) {
@@ -50,10 +43,6 @@ object WideDimAB {
     }
     println(s"corpus: $n vectors x $dim-d, bits=$bits (${1 << bits} cells)")
 
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
     spark.conf.set("spark.graft.ann.bits", bits.toString)
     spark.conf.set("spark.graft.ann.probeRadius", "2")
     // candidate volume both modes share (the probe-pair stream)
@@ -67,7 +56,7 @@ object WideDimAB {
     for (mode <- Seq("ivf", "ivfpq")) {
       spark.conf.set("spark.graft.topk.candidates", mode)
       val times = (1 to iters).map { _ =>
-        sweep()
+        Session.sweep(spark)
         val t0 = System.nanoTime()
         val rows = queries.Llm.llmCosineTopk(spark, dir).queryExecution.toRdd.count()
         ((System.nanoTime() - t0) / 1e9, rows)
