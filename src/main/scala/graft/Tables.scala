@@ -59,30 +59,28 @@ object Tables {
     * file counts matched to the cluster), and every later query reads
     * the landed copy — re-reading a hostile source layout per query is
     * the anti-pattern. So the loader re-lands a degenerate source once
-    * per (session, dataset): single-file sources with ≥ 200k rows and
-    * fewer row groups than max(2, cores/4) are rewritten (repartition
-    * to ~50k-row splits, same rows, same types) into a scratch dir
-    * with the graph-view publish discipline (process-unique tmp +
-    * atomic rename; queries/Graphs.publish), and served from there.
+    * per (session, dataset): single-file sources with at least
+    * `spark.graft.layout.minRows` rows (default 100k) and fewer row
+    * groups than max(2, cores/4) are rewritten (repartition to
+    * ~50k-row splits, same rows, same types) into a scratch dir with
+    * the graph-view publish discipline (process-unique tmp + atomic
+    * rename; queries/Graphs.publish), and served from there.
     * Multi-file directories (every Spark-written corpus, StressGen ×k)
-    * and small fixtures (sf0.001/sf0.01 — every table < 200k rows)
-    * pass through untouched, as does any table below
-    * `spark.graft.layout.minRows` rows. Row ORDER of the landed copy
-    * is partition-arbitrary, like any shuffle — every query's output
-    * carries its own total order (the repo's determinism discipline),
-    * which the 184-query oracle sweep re-verifies against DuckDB
-    * reading the RAW file.
+    * and small fixtures (sf0.001/sf0.01 — every table < 100k rows)
+    * pass through untouched (LayoutSpec pins a landing below the
+    * default). Row ORDER of the landed copy is partition-arbitrary,
+    * like any shuffle — every query's output carries its own total
+    * order (the repo's determinism discipline), which the 184-query
+    * oracle sweep re-verifies against DuckDB reading the RAW file.
     *
-    * The threshold is 200k rows (≈ 10 MB at lineitem's width), not
-    * lower, from a measured same-phase A/B: parallelizing the CHEAP
-    * serial scans (orders 2.7 MB, events 2 MB) saved ~0.1 s per scan
-    * but cost MORE than that in per-scan listing/open overhead on the
-    * multi-scan queries (dq_referential read 7 tables 2× each and
-    * regressed ~2×; dq_profile scans orders once per profiled column),
-    * while the heavy lineitem scan (11 MB, 11 columns, the first stage
-    * of ~40 queries) won 40-60% per query. At 100 TB every table
-    * clears any threshold and ships multi-row-group anyway — this
-    * gate only decides which of the BENCH FIXTURES are worth landing. */
+    * The 100k default comes from a measured same-phase A/B (the
+    * comment at the gate below): under ~50k-row splits, landing the
+    * tables at or above it lost on no measured query, and the heavy
+    * lineitem scan (11 MB, 11 columns, the first stage of ~40 queries)
+    * wins 40-60% per query; the measured-flat sub-100k fixtures stay
+    * raw. At 100 TB every table clears any threshold and ships
+    * multi-row-group anyway — this gate only decides which of the
+    * BENCH FIXTURES are worth landing. */
   private val layoutDecision =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 

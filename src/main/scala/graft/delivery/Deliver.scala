@@ -321,16 +321,14 @@ object Deliver {
     val srcFps = partitionFingerprints(in, partCol)
     val changed = srcFps.filter { case (p, f) => dstFps.get(p) != Some(f) }.keys.toSeq.sorted
     val stale = (dstFps.keySet -- srcFps.keySet).toSeq.sorted
-    if (changed.nonEmpty) {
-      val mode = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(mode)
-      spark.conf.set(mode, "dynamic") // overwrite ONLY the written partitions
-      // fingerprint keys are null-normalized, so match on the same form
-      try in.where(coalesce(col(partCol).cast("string"), lit(NullPartition))
+    // fingerprint keys are null-normalized, so match on the same form;
+    // dynamic overwrite (a writer option — the session's conf is never
+    // written) replaces ONLY the written partitions
+    if (changed.nonEmpty)
+      in.where(coalesce(col(partCol).cast("string"), lit(NullPartition))
           .isin(changed: _*))
-        .write.format(dstFormat).partitionBy(partCol).mode("overwrite").save(dst)
-      finally prev.fold(spark.conf.unset(mode))(spark.conf.set(mode, _))
-    }
+        .write.format(dstFormat).partitionBy(partCol).mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").save(dst)
     stale.foreach { p =>
       // Spark writes partition directories with Hive path escaping
       // (spaces, ':', '%', '/', … percent-encoded; null → the

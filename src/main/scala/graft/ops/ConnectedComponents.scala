@@ -22,25 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Diagnostic scope (review r12): the accumulator is added from inside
-    * mapPartitions, where Spark does NOT dedup retried/speculative task
-    * attempts or re-executions of an uncached upstream — the value is
-    * only the true footprint for a single clean execution with
-    * speculation off and zero task retries (the harness posture; the
-    * GraphScale/CcCrossover readers run exactly one non-timed pass per
-    * cell). Under retries it reads as a multiple of the real map size —
-    * treat it as an upper bound there, never a budget input.
-    *
-    * When `spark.graft.graph.cc.measureMemory=true`, the last local
-    * union-find run reports its in-task map footprint here (a
-    * SizeEstimator walk of the parent map — the single-task memory the
-    * localMaxEdges threshold actually bounds). Measurement-only: the
-    * estimate walk costs time, so scale harnesses take it on a
-    * NON-timed pass — and they must RESET this to None first, since a
-    * run that routes to the lss branch leaves the previous value in
-    * place (GraphScale does). */
-  @volatile private[graft] var lastLocalMapBytes: Option[org.apache.spark.util.LongAccumulator] = None
-
   /** Partition-local exact components for a subgraph that FITS one
     * partition: coalesce(1) + a weighted-union union-find inside
     * mapPartitions, labels = the component's minimum node id — the
@@ -51,7 +32,8 @@ object ConnectedComponents {
     * six lss rounds cost ~12 (cut + signature per round) — at bench
     * scale the alternation's per-round job floor (~0.5 s) dominates a
     * 24k-edge input by 10×. Memory is the caller's contract: bounded
-    * by the `auto` threshold below (~50 B/node of hash map). Direct
+    * by the `auto` threshold below (~50 B/node of hash map; 58 B/node
+    * measured at 2M nodes, BASELINE.md round-11 row). Direct
     * calls differ from the alternation on one degenerate input: a
     * self-loop-only node gets a label row here and none there — enter
     * through `auto` (which normalizes first) for the branch-identical
@@ -59,11 +41,6 @@ object ConnectedComponents {
   def localUnionFind(edges: DataFrame): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val acc =
-      if (s.conf.get("spark.graft.graph.cc.measureMemory", "false") == "true") {
-        val a = s.sparkContext.longAccumulator("graft.cc.localMapBytes")
-        lastLocalMapBytes = Some(a); Some(a)
-      } else None
     edges.select(col("src").cast("long"), col("dst").cast("long"))
       .as[(Long, Long)]
       .coalesce(1)
@@ -81,7 +58,6 @@ object ConnectedComponents {
             if (ra < rb) par(rb) = ra else par(ra) = rb
           }
         }
-        acc.foreach(_.add(org.apache.spark.util.SizeEstimator.estimate(par)))
         val nodes = par.keys.toArray // snapshot: find() mutates the map
         nodes.iterator.map(n => (n, find(n)))
       }

@@ -256,14 +256,13 @@ object CorpusPrep {
     //     chunk alignment. Runs on RAW text, like stage 3 — cleaning
     //     must not change identity.
     val contGated = containMax.fold(spanGated) { m =>
-      val maxDf = spark.conf.get("spark.graft.containment.maxDf", "1000").toInt
       val tokC = graft.ops.Lineage.cut(
         spanGated.select(col("doc_id"), col("lang"),
           explode(split(col("text"), " ")).as("token")).distinct())
       val dfTok = tokC.groupBy("token").agg(count(lit(1)).as("df"))
       val ntDf = tokC.groupBy("doc_id").agg(count(lit(1)).as("nt"))
       val tokDf = tokC.join(dfTok, "token").join(ntDf, "doc_id")
-        .where(col("df") <= maxDf)
+        .where(col("df") <= graft.queries.Llm.ContainmentMaxDf)
       // prefix selection via the shared bounded MinKAgg stage (the exact
       // helper llm_containment uses), not a per-doc ranking window over
       // the df-capped token stream — the last instance of the VERDICT r6

@@ -130,15 +130,15 @@ object DigestIndex {
     buildFrom(spark, graft.Tables.documents(spark, corpusDir), corpusDir, out)
 
   /** Index an arbitrary docs frame (must carry `text`); `stamp` records
-    * provenance. Geometry: spark.graft.dedup.bloomItems/.bloomFpp, with
-    * items raised to the measured digest count when that is larger —
-    * over-population only degrades FPR, but an index is built once and
-    * sized right. */
+    * provenance. Geometry: spark.graft.dedup.bloomItems at
+    * BloomAggs.Fpp, with items raised to the measured digest count when
+    * that is larger — over-population only degrades FPR, but an index
+    * is built once and sized right. */
   def buildFrom(spark: SparkSession, docs: DataFrame, stamp: String, out: String): Unit = {
     val own = ownDigests(spark, out)
     digestsOf(docs).write.mode("overwrite").parquet(own)
     val n = spark.read.parquet(own).count()
-    val fpp = spark.conf.get("spark.graft.dedup.bloomFpp", "0.01").toDouble
+    val fpp = graft.functions.BloomAggs.Fpp
     val items = math.max(
       spark.conf.get("spark.graft.dedup.bloomItems", "100000").toLong, n)
     writeBloom(spark, out, bloomOf(docs, items, fpp))

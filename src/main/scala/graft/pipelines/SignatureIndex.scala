@@ -24,7 +24,7 @@ import graft.ops.Det._
   * shards its SELF-join triangles (ShardedSelfJoin); for the
   * cross-set refresh the declared guard is the df-cap precedent
   * (llm_contamination.maxDf): touched buckets whose OLD occupancy
-  * exceeds spark.graft.sigindex.maxBucket drop from candidate
+  * exceeds MaxBucket drop from candidate
   * generation with a logged census — boilerplate buckets pair
   * near-everything and carry no near-dup signal the 15 other bands
   * don't re-offer. The occupancy census runs over TOUCHED rows only
@@ -41,6 +41,8 @@ object SignatureIndex {
   private val MarkerFile = "_graft_corpus"
   private val GeomFile = "_graft_geom"
   private val Geometry = "128:16:8" // minhashes : bands : rows-per-band
+  /** Old-occupancy cap of a touched band bucket (see the Skew note). */
+  private val MaxBucket = 65536L
 
   private def fsFor(spark: SparkSession, path: org.apache.hadoop.fs.Path) =
     path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -99,8 +101,6 @@ object SignatureIndex {
     graft.functions.VectorExprs.register(spark)
     require(readSmall(spark, index, GeomFile).trim == Geometry,
       s"$index geometry ${readSmall(spark, index, GeomFile).trim} != $Geometry")
-    val maxBucket = spark.conf
-      .get("spark.graft.sigindex.maxBucket", "65536").toLong
     val newSigs = graft.ops.Lineage.cut(
       graft.queries.Sketches.signatures(newDocs))
     val newBands = bandsOf(newSigs)
@@ -114,11 +114,11 @@ object SignatureIndex {
     // df-cap the touched buckets (batch-bounded census — see scaladoc);
     // the drop census is LOGGED so a capped run is never silent
     val occ = touched.groupBy("bk64", "lang").count()
-    val hot = occ.where(col("count") > maxBucket)
+    val hot = occ.where(col("count") > MaxBucket)
     val nHot = hot.count()
     if (nHot > 0)
-      System.err.println(s"[sigindex] dropping $nHot touched buckets over " +
-        s"maxBucket=$maxBucket (spark.graft.sigindex.maxBucket)")
+      System.err.println(
+        s"[sigindex] dropping $nHot touched buckets over $MaxBucket old docs")
     val kept =
       if (nHot == 0) touched
       else touched.join(broadcast(hot.select("bk64", "lang")),

@@ -423,6 +423,8 @@ object Aggs {
       .orderBy("o_orderpriority")
   }
 
+  private val GiniBucketWidth = 4096.0
+
   /** agg_gini — Gini coefficient of order totals per priority: the
     * inequality/concentration index a curation pipeline tracks over
     * contribution distributions (domain share, dedup-cluster mass,
@@ -444,16 +446,13 @@ object Aggs {
     * offset + within-bucket row_number under the full (price, key)
     * order ≡ the global per-priority rank, exactly, in integers — the
     * same i feeds the same exact-decimal Σi·x, so the output is
-    * hash-identical. Parallelism = |priorities|·|buckets| cells;
-    * spark.graft.gini.bucketWidth (value-space units, default 4096)
-    * is the production dial. */
+    * hash-identical. Parallelism = |priorities|·|buckets| cells of
+    * GiniBucketWidth value-space units. */
   val aggGini: Q = (s, d) => {
-    val width = s.conf.get("spark.graft.gini.bucketWidth", "4096").toDouble
-    require(width > 0, s"spark.graft.gini.bucketWidth must be > 0, got $width")
     val rows = Tables.orders(s, d)
       .select(col("o_orderpriority"), col("o_totalprice"), col("o_orderkey"))
       .withColumn("bkt",
-        floor(col("o_totalprice").cast("double") / width).cast("long"))
+        floor(col("o_totalprice").cast("double") / GiniBucketWidth).cast("long"))
     val offsets = rows
       .groupBy(col("o_orderpriority").as("pr"), col("bkt").as("bk"))
       .agg(count(lit(1)).as("bn"))

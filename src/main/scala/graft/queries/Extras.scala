@@ -21,6 +21,10 @@ object Extras {
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("token"))
 
+  /** llm_lang_id's model vocabulary cap (top-K tokens by corpus
+    * frequency): bounds the broadcast model table at K × n_langs. */
+  private val LangIdVocabK = 65536
+
   /** llm_lang_id — self-trained naive-Bayes unigram language ID:
     * score(doc, L) = ln P(L) + Σ_tokens ln P(token|L) with add-1
     * smoothing; prediction = argmax (rounded score, then lang asc — the
@@ -38,9 +42,8 @@ object Extras {
     // broadcast limits. OOV tokens simply don't contribute to scores
     // (standard capped-vocab naive Bayes). Fixture vocab (31) << K, so
     // the cap is semantics-neutral for the oracle.
-    val vocabK = s.conf.get("spark.graft.langid.vocabK", "65536").toInt
     val vocab = tok.groupBy("token").agg(count(lit(1)).as("vcnt"))
-      .orderBy(col("vcnt").desc, col("token")).limit(vocabK)
+      .orderBy(col("vcnt").desc, col("token")).limit(LangIdVocabK)
       .select("token")
     val vn = vocab.agg(count(lit(1)).as("v"))
     val clt = tok.groupBy(col("lang").as("cl"), col("token")).agg(count(lit(1)).as("c_lt"))
@@ -995,13 +998,13 @@ object Extras {
     * literal, so graft_bloom_probe decodes it once per JVM and probes
     * inside whole-stage codegen; Spark's own runtime bloom-filter join
     * moves its filter the same way. Geometry: spark.graft.dedup
-    * .bloomItems/.bloomFpp (defaults: the sketch-family contract) —
-    * size items to the OLD corpus key count at scale; over-population
-    * only degrades FPR (more rows re-checked), never correctness. */
+    * .bloomItems (default: the sketch-family contract) at
+    * BloomAggs.Fpp — size items to the OLD corpus key count at scale;
+    * over-population only degrades FPR (more rows re-checked), never
+    * correctness. */
   val llmDedupBloom: Q = (s, d) => {
     graft.functions.VectorExprs.register(s)
     val items = s.conf.get("spark.graft.dedup.bloomItems", "100000").toLong
-    val fpp = s.conf.get("spark.graft.dedup.bloomFpp", "0.01").toDouble
     def bkt(c: org.apache.spark.sql.Column) =
       conv(substring(md5(c.cast("string")), 1, 6), 16, 10).cast("long") % 100
     val docs = Tables.documents(s, d).withColumn("bucket", bkt(col("doc_id")))
@@ -1013,7 +1016,7 @@ object Extras {
     // and an equality join never matches null — dup_exact 0 on both
     // engines by null semantics, exactly the oracle's verdict
     val oldDocs = docs.where(col("bucket") < 80)
-    val bloomBuild = udaf(new graft.functions.BloomBuildAgg(items, fpp))
+    val bloomBuild = udaf(new graft.functions.BloomBuildAgg(items))
     val sketch: Array[Byte] = oldDocs
       .select(xxhash64(col("text")).as("k")).where(col("k").isNotNull)
       .agg(bloomBuild(col("k")).as("sk"))

@@ -39,6 +39,8 @@ object Llm {
       .withColumn("nrm", sqrt(expr("graft_dot(e, e)")))
   }
 
+  private val TopkAdcCandidates = 64
+
   /** Candidate-generation mode for the dense top-k retrieval family
     * (llm_cosine_topk / llm_knn_label / llm_hardneg_mine) — round 10,
     * VERDICT r9 #1: the 100 TB candidate path is a CONF SWITCH, not a
@@ -46,9 +48,8 @@ object Llm {
     * every pair; `ivf` restricts candidates to the shared sign-bucket
     * cells within the multi-probe Hamming radius (Ann.withProbes);
     * `pq` ranks every pair by integer ADC distance (Sketches.Pq — the
-    * shared codebook machinery) and keeps the top
-    * spark.graft.topk.adcCandidates (default 64) per query; `ivfpq`
-    * composes the two — ADC ranking restricted to the probed cells —
+    * shared codebook machinery) and keeps the top TopkAdcCandidates
+    * (64) per query; `ivfpq` composes the two — ADC ranking restricted to the probed cells —
     * the FAISS IVF-PQ shape and the declared 100 TB default. EVERY mode
     * rescores the surviving candidates with the same exact rounded
     * cosine, so ANN modes differ from exact only by candidate-set
@@ -110,8 +111,6 @@ object Llm {
           .where(col("qid") =!= col("vid")))
           .drop("probe")
       case "pq" | "ivfpq" =>
-        val cBudget = s.conf.get("spark.graft.topk.adcCandidates", "64").toInt
-        require(cBudget >= 1, "spark.graft.topk.adcCandidates must be >= 1")
         val (m, k, iters) = Sketches.Pq.geometry(s)
         val sv = graft.ops.Lineage.cut(
           Sketches.Pq.subvectors(Tables.embeddings(s, d), m))
@@ -174,7 +173,7 @@ object Llm {
               .join(qtabPk, Seq("qid"))
               .select(col("qid"), col("vid"), adc)
           }
-        val cand = Sketches.Pq.topkOfSums(sums, cBudget).select("qid", "vid")
+        val cand = Sketches.Pq.topkOfSums(sums, TopkAdcCandidates).select("qid", "vid")
         val v = withNorm(s, d)
         // candidate-frame spread before the exact rescore (round 14,
         // VERDICT r13: "the actual 100 TB path would still run its
@@ -894,6 +893,8 @@ object Llm {
       .where(col("jac") >= theta)
   }
 
+  val ContainmentMaxDf = 1000
+
   /** llm_containment — asymmetric near-containment pairs: the dedup axis
     * Jaccard cannot see. A short doc quoted whole inside a long one has
     * tiny Jaccard (the union is the long doc) but containment
@@ -916,23 +917,22 @@ object Llm {
     * r4-exact; df ties break on the token string.
     *
     * Scale: the probe join is an equi-join on (token, lang); per-cell
-    * input is bounded by `spark.graft.contamination.maxDf`-style df cap
-    * `spark.graft.containment.maxDf` (default 1000, mirrored literally
-    * in the oracle SQL — probe tokens are rare-first by construction,
-    * so the cap only touches docs whose entire vocabulary is common,
-    * the boilerplate llm_exact_dedup removes first). Scoring reuses the
+    * input is bounded by the `ContaminationMaxDf`-style df cap
+    * `ContainmentMaxDf` (1000, mirrored literally in the oracle SQL —
+    * probe tokens are rare-first by construction, so the cap only
+    * touches docs whose entire vocabulary is common, the boilerplate
+    * llm_exact_dedup removes first). Scoring reuses the
     * jaccard family's interned-long sorted-set arrays + graft_icount
     * through two merge-hinted equi-joins. Never consults the pair-table
     * artifact (it stores jaccard at a 0.6 floor — a different metric). */
   val llmContainment: Q = (s, d) => {
-    val maxDf = s.conf.get("spark.graft.containment.maxDf", "1000").toInt
     // one distinct token-stream materialization feeds df, per-doc sizes,
     // the probe/index sides and the set aggregation (jaccard discipline)
     val tok = graft.ops.Lineage.cut(tokensDistinct(s, d))
     val dfTok = tok.groupBy("token").agg(count(lit(1)).as("df"))
     val ntDf = tok.groupBy("doc_id").agg(count(lit(1)).as("nt"))
     val tokDf = tok.join(dfTok, "token").join(ntDf, "doc_id")
-      .where(col("df") <= maxDf)
+      .where(col("df") <= ContainmentMaxDf)
     // probe-join key interned to xxhash64 (round 8, same argument as the
     // rarity blocks): prefix selection — the oracle-mirrored, lossless-
     // at-θ part — stays on real tokens inside probePrefix; only the

@@ -159,8 +159,7 @@ object Sketches {
     * cluster structure to exploit): mean relative ADC error 0.154 /
     * max 0.264 / recall@3 0.43, vs 0.40/0.51/0.10 at the textbook
     * M=8/K=16 start (a third round buys 0.154 → 0.138 for ~0.7 s of
-    * suite wall — set spark.graft.pq.iters when the corpus warrants
-    * it); the sweep showed relErr monotone in M·log₂K while recall on
+    * suite wall); the sweep showed relErr monotone in M·log₂K while recall on
     * 30 near-equidistant ground-truth slots is noisy — so the spec
     * gates lean on the DISTANCE error, with a loose recall floor.
     * Geometry changes MUST re-run PqCalibrate and re-pin (the
@@ -191,14 +190,16 @@ object Sketches {
   object Pq {
     import org.apache.spark.sql.DataFrame
 
-    /** The ONE source of geometry defaults (M, K, Lloyd iters) — read by
+    /** Codes per subspace and Lloyd rounds of the codebook training. */
+    val K = 64
+    val Iters = 2
+
+    /** The ONE source of the geometry (M, K, Lloyd iters) — read by
       * both the in-query form and pipelines.PqIndex, so the two can
       * never silently train different codebooks (the parity pins assume
       * identical geometry). */
-    def geometry(s: org.apache.spark.sql.SparkSession): (Int, Int, Int) = (
-      s.conf.getOption("spark.graft.pq.m").map(_.toInt).getOrElse(16),
-      s.conf.getOption("spark.graft.pq.k").map(_.toInt).getOrElse(64),
-      s.conf.getOption("spark.graft.pq.iters").map(_.toInt).getOrElse(2))
+    def geometry(s: org.apache.spark.sql.SparkSession): (Int, Int, Int) =
+      (s.conf.getOption("spark.graft.pq.m").map(_.toInt).getOrElse(16), K, Iters)
 
     /** (vec_id, sub, sv, nsv): one row per (vector, subspace). Callers
       * that reference the stream repeatedly own the Lineage.cut.
@@ -427,10 +428,12 @@ object Sketches {
       expr("graft_adc(codes, tab)").as("ad2_9")
   }
 
+  /** llm_ann_pq's query batch: the vectors with vec_id below it. */
+  val AnnPqQueries = 10
+
   val llmAnnPq: Q = (s, d) => {
     graft.functions.VectorExprs.register(s)
     val (m, k, iters) = Pq.geometry(s)
-    val nq = s.conf.getOption("spark.graft.pq.queries").map(_.toInt).getOrElse(10)
     // subvector stream re-read every Lloyd round — cut once
     val sv = graft.ops.Lineage.cut(Pq.subvectors(Tables.embeddings(s, d), m))
     val cb = Pq.train(sv, k, iters, m)
@@ -446,7 +449,7 @@ object Sketches {
     val codesPk = Pq.packCodes(Pq.assign(sv, cb).select("vec_id", "sub", "code"))
       .withColumnRenamed("vec_id", "vid")
     val qtabPk = Pq.packQueryTables(
-      Pq.queryTables(sv.where(col("vec_id") < nq), cb))
+      Pq.queryTables(sv.where(col("vec_id") < AnnPqQueries), cb))
     Pq.topkOfSums(
       codesPk.join(broadcast(qtabPk), col("qid") =!= col("vid"))
         .select(col("qid"), col("vid"), Pq.adcExpr),

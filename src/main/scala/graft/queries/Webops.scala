@@ -179,15 +179,16 @@ object Webops {
       .select("doc_id")
   }
 
+  private val DomainCap = 2
+
   /** llm_domain_cap — per-site document cap (the RefinedWeb/C4-style
     * hot-domain downsampler: no single site may contribute more than K
     * docs to the corpus). Docs are attributed to their first_domain (as
     * llm_domain_stats); within each domain the K lowest doc_ids are
     * kept (deterministic, rand()-free — the md5/min-id convention this
     * repo uses for every reproducible keep/drop verdict). K is
-    * `spark.graft.domain.cap` (default 2 = the oracle contract,
-    * mirrored literally in the SQL — the maxDf pattern; departing from
-    * the default departs from the oracle).
+    * `DomainCap` (2, the oracle contract, mirrored literally in the
+    * SQL — the maxDf pattern).
     *
     * URL-free docs have no site, so the cap does NOT apply: they pass
     * through kept=true with rk=0 under the '<none>' label — which is
@@ -199,14 +200,12 @@ object Webops {
     * cut, and pre-filtering such a site's rows before ranking is the
     * upstream answer there). */
   val llmDomainCap: Q = (s, d) => {
-    val cap = s.conf.get("spark.graft.domain.cap", "2").toInt
-    require(cap >= 1, s"spark.graft.domain.cap must be >= 1, got $cap")
     val docs = Tables.documents(s, d)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("domain").orderBy("doc_id")
     val ranked = firstDomain(docs)
       .withColumn("rk", row_number().over(w).cast("long"))
-      .withColumn("kept", col("rk") <= cap)
+      .withColumn("kept", col("rk") <= DomainCap)
     docs.select("doc_id").join(ranked, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("domain"), lit("<none>")).as("domain"),

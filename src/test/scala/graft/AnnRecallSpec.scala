@@ -43,15 +43,14 @@ class AnnRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
     val truth = Llm.llmCosineTopk(spark, sfDir)
       .where(col("rn") <= 3).select("qid", "vid")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set("spark.graft.ann.bits", "4")
-    try {
+    withConf("spark.graft.ann.bits" -> "4") {
       val found = Extras.llmAnnIvf(spark, sfDir)
         .select("qid", "vid")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val recall = (truth & found).size.toDouble / truth.size
       info(f"llm_ann_ivf recall@3 at 4 bits = $recall%.3f over ${truth.size} truth pairs")
       recall should be >= 0.45 // measured 0.517 (IvfCalibrate r12); floor within 0.1
-    } finally spark.conf.unset("spark.graft.ann.bits")
+    }
   }
 
   test("llm_embed_neardup multi-probe recall vs brute-force cos>=0.35 pairs is >= 0.50 (measured floor)") {
@@ -153,8 +152,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
       (i.toLong, Array.fill(128)(rnd.nextFloat() * 2 - 1), i % 5)
     }.toDF("vec_id", "embedding", "label")
       .write.parquet(s"$tmp/embeddings.parquet")
-    spark.conf.set("spark.graft.ann.bits", "12")
-    try {
+    withConf("spark.graft.ann.bits" -> "12") {
       val cells = queries.Ann.bucketed(spark, tmp).select("vec_id", "bkt").collect()
       cells.length shouldBe 400
       all(cells.map(_.getInt(1)).toSeq) should (be >= 0 and be < 4096)
@@ -166,11 +164,9 @@ class AnnRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
       // radius-2 masks at 12 bits: 1 + 12 + 66 = 79, all distinct
       val masks = queries.Ann.probeMasks(12, 2)
       masks.distinct.size shouldBe 79
-    } finally spark.conf.unset("spark.graft.ann.bits")
+    }
     val e = intercept[IllegalArgumentException] {
-      spark.conf.set("spark.graft.ann.bits", "17")
-      try queries.Ann.bucketed(spark, tmp).collect()
-      finally spark.conf.unset("spark.graft.ann.bits")
+      withConf("spark.graft.ann.bits" -> "17")(queries.Ann.bucketed(spark, tmp).collect())
     }
     e.getMessage should include("[1, 16]")
   }

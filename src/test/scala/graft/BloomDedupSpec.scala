@@ -42,11 +42,10 @@ class BloomDedupSpec extends AnyFunSuite with Matchers with SparkFixture {
     // 64 expected items for a ~4k-key old corpus: the filter saturates
     // and the might-path widens toward everything — the verdict must
     // not move, because FPs only re-route rows into the exact join
-    spark.conf.set("spark.graft.dedup.bloomItems", "64")
-    try {
+    withConf("spark.graft.dedup.bloomItems" -> "64") {
       val got = SparkEntry.queries("llm_dedup_bloom")(spark, sfDir).collect().toSeq
       got shouldBe exactVerdict()
-    } finally spark.conf.unset("spark.graft.dedup.bloomItems")
+    }
   }
 
   test("llm_dedup_bloom plan: exactly one join — the miss majority never reaches an exchange") {
@@ -165,11 +164,10 @@ class BloomDedupSpec extends AnyFunSuite with Matchers with SparkFixture {
     val base = SparkEntry.queries("llm_shard_balance")(spark, sfDir).collect().toSeq
     base should not be empty
     for (w <- Seq("1", "7")) {
-      spark.conf.set("spark.graft.shard.bucketWidth", w)
-      try {
+      withConf("spark.graft.shard.bucketWidth" -> w) {
         SparkEntry.queries("llm_shard_balance")(spark, sfDir)
           .collect().toSeq shouldBe base
-      } finally spark.conf.unset("spark.graft.shard.bucketWidth")
+      }
     }
   }
 

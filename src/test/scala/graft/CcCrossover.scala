@@ -41,20 +41,6 @@ object CcCrossover {
         val labels = run(edges)
         val nLbl = labels.queryExecution.toRdd.count()
         println(f"edges=$actual%-9d nodes~$nN%-8d $tag%-6s ${(System.nanoTime() - t0) / 1e9}%7.2f s  labels=$nLbl")
-        if (tag == "local") {
-          // measured single-task footprint of the union-find map — the
-          // memory bound the 4M localMaxEdges default encodes (VERDICT
-          // r10 #3; the ~50 B/node scaladoc figure, now measured).
-          // Separate NON-timed pass: the SizeEstimator walk costs wall.
-          spark.conf.set("spark.graft.graph.cc.measureMemory", "true")
-          try {
-            graft.ops.ConnectedComponents.localUnionFind(edges)
-              .queryExecution.toRdd.count()
-            graft.ops.ConnectedComponents.lastLocalMapBytes.foreach(a =>
-              println(f"edges=$actual%-9d nodes~$nN%-8d local union-find map " +
-                f"${a.value / 1048576.0}%.1f MiB (${a.value.toDouble / nLbl}%.0f B/node)"))
-          } finally spark.conf.unset("spark.graft.graph.cc.measureMemory")
-        }
         Session.sweep(spark)
       }
     }

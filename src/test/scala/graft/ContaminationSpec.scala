@@ -55,8 +55,7 @@ class ContaminationSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("df-cap drops only boilerplate: genuine contamination survives, join input bounded") {
     val (dir, _, test) = corpus
-    spark.conf.set("spark.graft.contamination.maxDf", "50")
-    try {
+    withConf("spark.graft.contamination.maxDf" -> "50") {
       val out = queries.Textops.llmContamination(spark, dir).collect()
       out.length shouldBe test.size
       out.foreach { r =>
@@ -64,7 +63,7 @@ class ContaminationSpec extends AnyFunSuite with Matchers with SparkFixture {
         r.getLong(2) shouldBe 1L // n_shared: only the genuine tail trigram
         r.getDouble(3) shouldBe 0.2 +- 1e-9 // 1 of 5 shingles, r4-rounded
       }
-    } finally spark.conf.unset("spark.graft.contamination.maxDf")
+    }
   }
 
   test("dropped-shingle census rides the main job as an observe() metric, no extra count job") {
@@ -82,8 +81,7 @@ class ContaminationSpec extends AnyFunSuite with Matchers with SparkFixture {
                              e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    spark.conf.set("spark.graft.contamination.maxDf", "50")
-    try {
+    try withConf("spark.graft.contamination.maxDf" -> "50") {
       // the metric arriving through observedMetrics IS the structural
       // proof: a separate eager count() (the r4/r5 shape) would leave no
       // CollectMetrics node in the query at all. Plan construction still
@@ -97,19 +95,15 @@ class ContaminationSpec extends AnyFunSuite with Matchers with SparkFixture {
       val key = seen.keySet().stream().filter(_.contains("llm_contamination")).findFirst()
       key.isPresent shouldBe true
       seen.get(key.get()) shouldBe 1L // exactly the boilerplate shingle dropped
-    } finally {
-      spark.conf.unset("spark.graft.contamination.maxDf")
-      spark.listenerManager.unregister(listener)
-    }
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("intern=false audit path (raw string shingles) is output-identical to the interned default") {
     val (dir, _, _) = corpus
     val interned = queries.Textops.llmContamination(spark, dir).collect().toSeq
-    spark.conf.set("spark.graft.contamination.intern", "false")
-    try {
+    withConf("spark.graft.contamination.intern" -> "false") {
       val raw = queries.Textops.llmContamination(spark, dir).collect().toSeq
       raw should contain theSameElementsInOrderAs interned
-    } finally spark.conf.unset("spark.graft.contamination.intern")
+    }
   }
 }

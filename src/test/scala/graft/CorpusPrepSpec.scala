@@ -332,11 +332,10 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     CorpusPrep.run(spark, dir, decontamMax = Some(0.6))
       .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(2L)
-    spark.conf.set("spark.graft.contamination.maxDf", "1")
-    try {
+    withConf("spark.graft.contamination.maxDf" -> "1") {
       CorpusPrep.run(spark, dir, decontamMax = Some(0.6))
         .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(0L, 2L, 3L)
-    } finally spark.conf.unset("spark.graft.contamination.maxDf")
+    }
   }
 
   test("attrition census: active stages in order, counts consistent with the prep itself") {

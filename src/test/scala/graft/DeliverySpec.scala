@@ -162,6 +162,15 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
     df.unpersist()
   }
 
+  /** Modification time of every file under `p`, keyed by path. */
+  private def mtimes(p: String): Map[String, Long] = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    val it = path.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(path, true)
+    val b = scala.collection.mutable.Map.empty[String, Long]
+    while (it.hasNext) { val f = it.next(); b(f.getPath.toString) = f.getModificationTime }
+    b.toMap
+  }
+
   test("syncPartitions rewrites only changed partitions and deletes stale ones") {
     val tmp = Files.createTempDirectory("dlv_sync").toString
     val orders = Tables.orders(spark, sfDir)
@@ -174,14 +183,6 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
       .collect().map(_.getString(0)).toSet
     r1.rows shouldBe orders.count()
     // no-op re-sync: nothing changed, nothing rewritten, files untouched
-    val fs = new org.apache.hadoop.fs.Path(tmp)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mtimes(p: String): Map[String, Long] = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(p), true)
-      val b = scala.collection.mutable.Map.empty[String, Long]
-      while (it.hasNext) { val f = it.next(); b(f.getPath.toString) = f.getModificationTime }
-      b.toMap
-    }
     val before = mtimes(s"$tmp/dst")
     val (c2, s2, _) = Deliver.syncPartitions(spark, s"$tmp/src_v1", s"$tmp/dst", "o_orderpriority")
     c2 shouldBe empty
@@ -208,6 +209,39 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
     r3.rows shouldBe spark.read.parquet(s"$tmp/src_v2").count()
     Deliver.verifyDelivery(spark, s"$tmp/src_v2", "parquet",
       s"$tmp/dst", "parquet") shouldBe true
+  }
+
+  test("syncPartitions overwrites dynamically under a static session and leaves its conf alone") {
+    // under the session's static overwrite mode a partitioned overwrite
+    // deletes every partition it does not write; the sync asks for
+    // dynamic overwrite on its own writer and never sets the session key
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val tmp = Files.createTempDirectory("dlv_sync_static").toString
+    val orders = Tables.orders(spark, sfDir)
+      .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
+    withConf(key -> "static") {
+      orders.write.parquet(s"$tmp/src_v1")
+      val (c1, _, _) = Deliver.syncPartitions(spark, s"$tmp/src_v1", s"$tmp/dst", "o_orderpriority")
+      val touched = c1.min
+      val before = mtimes(s"$tmp/dst").filter { case (p, _) => !p.endsWith("_SUCCESS") }
+      orders.withColumn("o_totalprice",
+          when(col("o_orderpriority") === touched, col("o_totalprice") + 1.0)
+            .otherwise(col("o_totalprice")))
+        .write.parquet(s"$tmp/src_v2")
+      val (c2, s2, r2) = Deliver.syncPartitions(spark, s"$tmp/src_v2", s"$tmp/dst", "o_orderpriority")
+      c2 shouldBe Seq(touched)
+      s2 shouldBe empty
+      val after = mtimes(s"$tmp/dst")
+      val (rewritten, kept) = before.partition(_._1.contains(s"o_orderpriority=$touched/"))
+      rewritten should not be empty
+      rewritten.keys.foreach(p => after.get(p) shouldBe None)
+      after.keys.exists(_.contains(s"o_orderpriority=$touched/")) shouldBe true
+      kept.foreach { case (p, t) => after.get(p) shouldBe Some(t) }
+      r2.rows shouldBe orders.count()
+      Deliver.verifyDelivery(spark, s"$tmp/src_v2", "parquet",
+        s"$tmp/dst", "parquet") shouldBe true
+      spark.conf.get(key) shouldBe "static"
+    }
   }
 
   test("syncPartitions survives hostile partition values: escaping, numeric-string inference, nulls") {

@@ -24,10 +24,8 @@ class DenseTopkRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
   private def topkPairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  private def inMode[T](mode: String)(f: => T): T = {
-    spark.conf.set("spark.graft.topk.candidates", mode)
-    try f finally spark.conf.unset("spark.graft.topk.candidates")
-  }
+  private def inMode[T](mode: String)(f: => T): T =
+    withConf("spark.graft.topk.candidates" -> mode)(f)
 
   test("exact mode is the default: conf unset ≡ conf=exact, row-identical") {
     val dflt = Llm.llmCosineTopk(spark, sfDir).collect().toSeq
@@ -62,10 +60,9 @@ class DenseTopkRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
     val truth = topkPairs(Llm.llmCosineTopk(spark, sfDir))
     val r1 = inMode("ivf") { topkPairs(Llm.llmCosineTopk(spark, sfDir)) }
     val rec1 = (truth & r1).size.toDouble / truth.size
-    spark.conf.set("spark.graft.ann.probeRadius", "2")
-    val r2 =
-      try inMode("ivf") { topkPairs(Llm.llmCosineTopk(spark, sfDir)) }
-      finally spark.conf.unset("spark.graft.ann.probeRadius")
+    val r2 = withConf("spark.graft.ann.probeRadius" -> "2") {
+      inMode("ivf") { topkPairs(Llm.llmCosineTopk(spark, sfDir)) }
+    }
     val rec2 = (truth & r2).size.toDouble / truth.size
     info(f"ivf-mode recall@5: radius1 = $rec1%.3f, radius2 = $rec2%.3f over ${truth.size}")
     // radius 1 on the near-orthogonal fixture: same floor discipline as
@@ -77,10 +74,9 @@ class DenseTopkRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("ivfpq candidates (probe cells + ADC + exact rescore): recall@5 vs exact at probe radius 2") {
     val truth = topkPairs(Llm.llmCosineTopk(spark, sfDir))
-    spark.conf.set("spark.graft.ann.probeRadius", "2")
-    val found =
-      try inMode("ivfpq") { topkPairs(Llm.llmCosineTopk(spark, sfDir)) }
-      finally spark.conf.unset("spark.graft.ann.probeRadius")
+    val found = withConf("spark.graft.ann.probeRadius" -> "2") {
+      inMode("ivfpq") { topkPairs(Llm.llmCosineTopk(spark, sfDir)) }
+    }
     val recall = (truth & found).size.toDouble / truth.size
     info(f"ivfpq-mode recall@5 (radius 2) = $recall%.3f over ${truth.size} truth pairs")
     // candidate ceiling = the radius-2 probe recall (~0.93 measured),
@@ -120,9 +116,7 @@ class DenseTopkRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
       (r.getLong(0), r.getLong(2), r.getLong(4)) -> r.getDouble(6)).toMap
     for (m <- Seq("pq", "ivf")) {
       val ann = inMode(m) {
-        spark.conf.set("spark.graft.ann.probeRadius", "2")
-        try Llm.llmPrefPairs(spark, sfDir).collect()
-        finally spark.conf.unset("spark.graft.ann.probeRadius")
+        withConf("spark.graft.ann.probeRadius" -> "2")(Llm.llmPrefPairs(spark, sfDir).collect())
       }
       def recall(vidCol: Int) = {
         val t = pairs(exact, vidCol)
@@ -166,10 +160,8 @@ class DenseTopkRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
     val ppExact = Llm.llmPrefPairs(spark, sfDir).collect()
     def ppPairs(rows: Array[org.apache.spark.sql.Row], vidCol: Int) =
       rows.map(r => (r.getLong(0), r.getLong(vidCol))).toSet
-    spark.conf.set("spark.graft.ann.bits", "4")
-    spark.conf.set("spark.graft.pq.m", "8")
-    spark.conf.set("spark.graft.ann.probeRadius", "2")
-    try {
+    withConf("spark.graft.ann.bits" -> "4", "spark.graft.pq.m" -> "8",
+        "spark.graft.ann.probeRadius" -> "2") {
       for (m <- Seq("ivf", "pq")) inMode(m) {
         val ann = Llm.llmCosineTopk(spark, sfDir).collect()
         // subset-sound at the non-default geometry: candidates never
@@ -194,10 +186,6 @@ class DenseTopkRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
         hnRec should be >= (if (m == "ivf") 0.78 else 0.85)
         ppRec should be >= (if (m == "ivf") 0.72 else 0.75)
       }
-    } finally {
-      spark.conf.unset("spark.graft.ann.bits")
-      spark.conf.unset("spark.graft.pq.m")
-      spark.conf.unset("spark.graft.ann.probeRadius")
     }
   }
 

@@ -65,11 +65,10 @@ class DigestIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     // SortMergeJoin, no hashpartitioning exchange on the digest column
     bplan should not include "SortMergeJoin"
     "BroadcastHashJoin".r.findAllIn(bplan).size shouldBe 2
-    spark.conf.set("spark.graft.dedup.broadcastCandidates", "0")
-    try {
+    withConf("spark.graft.dedup.broadcastCandidates" -> "0") {
       val shuffled = pipelines.DigestIndex.refresh(spark, batch, indexDir)
       shuffled.collect().toSeq shouldBe bcast.collect().toSeq
-    } finally spark.conf.unset("spark.graft.dedup.broadcastCandidates")
+    }
   }
 
   test("extend is lossless: the extended index flags its whole batch; novel rows still pass") {

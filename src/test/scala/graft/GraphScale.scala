@@ -65,32 +65,13 @@ object GraphScale {
         println(f"x$m%-3d $name%-18s $sec%8.2f s  rows=$rows")
         if (name == "graph_cc") {
           // forced-lss arm: the distributed-alternation wall on the same
-          // subgraph (the branch a 100 TB pair graph runs), plus the
-          // local arm's measured single-task union-find footprint — the
-          // memory bound the 4M localMaxEdges default actually encodes
-          // (VERDICT r10 #3). The footprint pass is NOT timed (the
-          // SizeEstimator walk itself costs wall).
+          // subgraph (the branch a 100 TB pair graph runs)
           spark.conf.set("spark.graft.graph.cc.localMaxEdges", "0")
           try {
             val (sec2, rows2) = timed(name, dir)
             results(("graph_cc[lss]", m)) = sec2
             println(f"x$m%-3d graph_cc[lss]      $sec2%8.2f s  rows=$rows2")
           } finally spark.conf.unset("spark.graft.graph.cc.localMaxEdges")
-          spark.conf.set("spark.graft.graph.cc.measureMemory", "true")
-          try {
-            Session.sweep(spark)
-            // reset first: a graph_cc that routes to lss at this scale
-            // never runs localUnionFind, and printing the PREVIOUS
-            // multiplier's accumulator labeled with this one would
-            // record a wrong memory bound (review r11)
-            graft.ops.ConnectedComponents.lastLocalMapBytes = None
-            SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
-            graft.ops.ConnectedComponents.lastLocalMapBytes match {
-              case Some(a) => println(f"x$m%-3d graph_cc local union-find map " +
-                f"${a.value / 1048576.0}%.1f MiB")
-              case None => println(s"x$m   graph_cc routed to lss at this scale - no local map")
-            }
-          } finally spark.conf.unset("spark.graft.graph.cc.measureMemory")
         }
       }
     }

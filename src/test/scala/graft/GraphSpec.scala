@@ -166,11 +166,10 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("graph_cc output is branch-independent (localMaxEdges=0 forces lss)") {
     val auto = queries.Graphs.graphCc(spark, sfDir).collect().toSeq.map(_.toString)
-    spark.conf.set("spark.graft.graph.cc.localMaxEdges", "0")
-    try {
+    withConf("spark.graft.graph.cc.localMaxEdges" -> "0") {
       val viaLss = queries.Graphs.graphCc(spark, sfDir).collect().toSeq.map(_.toString)
       viaLss shouldBe auto
-    } finally spark.conf.unset("spark.graft.graph.cc.localMaxEdges")
+    }
   }
 
   test("publish: losing writer's complete copy is discarded, winner's view survives intact") {

@@ -1,8 +1,9 @@
 package graft
 
-/** One-off calibration sweep for llm_ann_pq's default geometry (the
+/** One-off calibration sweep for llm_ann_pq's subspace count (the
   * SimhashCalibrate pattern): recall@3 and ADC relative error vs exact,
-  * across (M, K, iters). Run:
+  * across M at the fixed K = Pq.K and Pq.Iters (the K and iters curve
+  * is BASELINE.md's round-12 row). Run:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 sbt "Test/runMain graft.PqCalibrate"
   */
 object PqCalibrate {
@@ -14,7 +15,7 @@ object PqCalibrate {
       .select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
       .sortBy(_._1)
-    val exact = vecs.filter(_._1 < 10).map { case (qid, q) =>
+    val exact = vecs.filter(_._1 < queries.Sketches.AnnPqQueries).map { case (qid, q) =>
       val d2 = vecs.filter(_._1 != qid).map { case (vid, v) =>
         (q.zip(v).map { case (a, b) => (a - b) * (a - b) }.sum, vid)
       }
@@ -22,14 +23,8 @@ object PqCalibrate {
     }.toMap
     val byId = vecs.toMap
 
-    for {
-      m <- Seq(4, 8, 16)
-      k <- Seq(16, 32, 64)
-      it <- Seq(1, 3, 6)
-    } {
+    for (m <- Seq(4, 8, 16)) {
       spark.conf.set("spark.graft.pq.m", m.toString)
-      spark.conf.set("spark.graft.pq.k", k.toString)
-      spark.conf.set("spark.graft.pq.iters", it.toString)
       val t0 = System.nanoTime()
       val rows = queries.Sketches.llmAnnPq(spark, sfDir).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -40,7 +35,7 @@ object PqCalibrate {
         val d2 = byId(q).zip(byId(v)).map { case (a, b) => (a - b) * (a - b) }.sum
         math.abs(ad2 - d2) / d2
       }
-      println(f"M=$m%2d K=$k%2d iters=$it%d  recall@3=${hits / (exact.size * 3.0)}%.3f  " +
+      println(f"M=$m%2d  recall@3=${hits / (exact.size * 3.0)}%.3f  " +
         f"relErr mean=${rel.sum / rel.size}%.4f max=${rel.max}%.4f  ${dt}%.1fs")
     }
     spark.stop()

@@ -94,9 +94,7 @@ class PqSpec extends AnyFunSuite with Matchers with SparkFixture {
     // by construction (never corpus×corpus: the broadcast side is the
     // query batch). Pin that shape, and that the in-row expressions
     // actually reached the plan.
-    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plan = queries.Sketches.llmAnnPq(spark, sfDir)
         .queryExecution.executedPlan.toString
       plan should include("BroadcastNestedLoopJoin")
@@ -106,6 +104,6 @@ class PqSpec extends AnyFunSuite with Matchers with SparkFixture {
       plan should not include "SortMergeJoin"
       plan should not include "CartesianProduct"
       plan should not include "Window"
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+    }
   }
 }

@@ -257,12 +257,11 @@ class PropertySpec extends AnyFunSuite with Matchers with SparkFixture {
     chain(e2) should include("emitOnce contract")
     // conf-off: the same violating input runs unchecked (documented escape
     // hatch for a validated production path)
-    spark.conf.set("spark.graft.lsh.emitOnce.validate", "false")
-    try
+    withConf("spark.graft.lsh.emitOnce.validate" -> "false") {
       noException should be thrownBy
         ops.ShardedSelfJoin.pairs(unsorted, Seq("bkey"), 10,
           emitOnce = Some(("bkey", "bset"))).collect()
-    finally spark.conf.unset("spark.graft.lsh.emitOnce.validate")
+    }
   }
 
   test("uniqueMembership audit (explicit validate=true) raises on multi-bucket input") {
@@ -276,8 +275,7 @@ class PropertySpec extends AnyFunSuite with Matchers with SparkFixture {
       .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
     val multi = Seq((1L, "b1"), (1L, "b2"), (2L, "b1"))
       .toDF("doc_id", "bkey")
-    spark.conf.set("spark.graft.lsh.emitOnce.validate", "true")
-    try {
+    withConf("spark.graft.lsh.emitOnce.validate" -> "true") {
       val e = intercept[Exception] {
         ops.ShardedSelfJoin.pairs(multi, Seq("bkey"), 10,
           uniqueMembership = true).collect()
@@ -289,7 +287,7 @@ class PropertySpec extends AnyFunSuite with Matchers with SparkFixture {
       ops.ShardedSelfJoin.pairs(uniq, Seq("bkey"), 10, uniqueMembership = true)
         .select("doc_a", "doc_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet shouldBe Set((1L, 2L))
-    } finally spark.conf.unset("spark.graft.lsh.emitOnce.validate")
+    }
     // conf unset: the assertion is trusted, the violating input runs
     // unchecked (pre-r10 behavior — duplicates are the caller's bug)
     noException should be thrownBy
@@ -420,8 +418,7 @@ class PropertySpec extends AnyFunSuite with Matchers with SparkFixture {
         // spark.graft.rank.iters re-pins a NON-default depth against the
         // same oracle (the departs-from-oracle knob, ann.bits pattern)
         if (i == 1) {
-          spark.conf.set("spark.graft.rank.iters", "3")
-          try {
+          withConf("spark.graft.rank.iters" -> "3") {
             val got3 = queries.Webops.llmDomainRank(spark, dir).collect()
               .map(r => (r.getString(0), r.getDouble(2))).toSeq
             val exp3 = expected(docs, iters = 3)
@@ -429,7 +426,7 @@ class PropertySpec extends AnyFunSuite with Matchers with SparkFixture {
             got3.zip(exp3).foreach { case ((d, gr), (_, _, er)) =>
               assert(math.abs(gr - er) <= 0.0001, s"iters=3 domain $d: $gr vs $er")
             }
-          } finally spark.conf.unset("spark.graft.rank.iters")
+          }
         }
       }
     }

@@ -73,11 +73,10 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
     spark.sparkContext.setCheckpointDir(dir)
     val key = "spark.graft.checkpoint"
     val default = graft.queries.Extras.llmDedupCluster(spark, sfDir).collect().toSeq
-    spark.conf.set(key, "reliable")
-    try {
+    withConf(key -> "reliable") {
       val reliable = graft.queries.Extras.llmDedupCluster(spark, sfDir).collect().toSeq
       reliable should equal(default)
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("llm_pack_sequences: contiguous offsets per shard, monotone bins, budget-aligned starts") {
@@ -102,8 +101,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
     // corpus/(langs·shards)); the packing invariants must hold at any
     // width, and the shard column must actually follow the conf
     val key = "spark.graft.pack.shards"
-    spark.conf.set(key, "5")
-    try {
+    withConf(key -> "5") {
       val out = queries.Textops.llmPackSequences(spark, sfDir).collect()
         .map(r => (r.getString(1), r.getLong(2), r.getLong(0), r.getLong(3), r.getLong(4), r.getLong(5)))
       out.map(_._2).toSet.subsetOf((0L until 5L).toSet) shouldBe true
@@ -117,7 +115,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
         }
         sorted.foreach { case (_, _, _, _, off, bin) => bin shouldBe off / 2048 }
       }
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("llm_kmeans: k/rounds confs re-shape the clustering; defaults equal the literal schedule") {
@@ -748,8 +746,6 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
     // bit-identical at 1, 7 and 32 shuffle partitions — a regression to
     // naive double summation would flip ulps with the merge order and
     // surface here before the oracle ever sees it
-    val key = "spark.sql.shuffle.partitions"
-    val default = spark.conf.get(key)
     def runAll(): Seq[Seq[org.apache.spark.sql.Row]] = Seq(
       queries.Llm.llmEmbedQuantize(spark, sfDir).collect().toSeq,
       queries.Textops.llmBpeMerges(spark, sfDir).collect().toSeq,
@@ -784,14 +780,12 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
       queries.Scalars.fnTry(spark, sfDir).collect().toSeq,
       queries.Llm.llmHardnegMine(spark, sfDir).collect().toSeq,
       queries.Llm.llmRankFusion(spark, sfDir).collect().toSeq)
-    try {
-      val results = Seq("1", "7", "32").map { n =>
-        spark.conf.set(key, n); runAll()
-      }
-      results(1) shouldBe results(0)
-      results(2) shouldBe results(0)
-      all(results(0).map(_.size)) should be > 0
-    } finally spark.conf.set(key, default)
+    val results = Seq("1", "7", "32").map { n =>
+      withConf("spark.sql.shuffle.partitions" -> n)(runAll())
+    }
+    results(1) shouldBe results(0)
+    results(2) shouldBe results(0)
+    all(results(0).map(_.size)) should be > 0
   }
 
   test("llm_bpe_merges matches a driver-side brute force over the raw corpus") {

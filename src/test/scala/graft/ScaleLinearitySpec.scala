@@ -52,13 +52,12 @@ class ScaleLinearitySpec extends AnyFunSuite with Matchers with SparkFixture {
     // bucket can span copies and pair counts repeat per copy (within
     // the borderline-flip tolerance of signature thresholding)
     val key = "spark.graft.pairs.candidates"
-    spark.conf.set(key, "minhash")
-    try {
+    withConf(key -> "minhash") {
       val n1 = queries.Llm.llmJaccardPairs(spark, dirs._1).count()
       val n4 = queries.Llm.llmJaccardPairs(spark, dirs._2).count()
       n1 should be > 0L
       n4.toDouble shouldBe (4.0 * n1 +- 0.05 * 4 * n1)
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("llm_token_histogram is a census: same bins and shares at x4, counts x4") {

@@ -59,19 +59,17 @@ class SignatureIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
       r.getLong(1) shouldBe counts.getOrElse(r.getLong(0), 0L)
       r.getLong(2) shouldBe (if (counts.contains(r.getLong(0))) 0L else 1L)
     }
-    spark.conf.set("spark.graft.dedup.broadcastCandidates", "0")
-    try {
+    withConf("spark.graft.dedup.broadcastCandidates" -> "0") {
       pipelines.SignatureIndex.refresh(spark, newDocs, indexDir)
         .collect().toSeq shouldBe verdict.collect().toSeq
-    } finally spark.conf.unset("spark.graft.dedup.broadcastCandidates")
+    }
     // ADVICE r9 mid shape: candidate KEYS broadcast-sized but the
     // signature rows NOT (sigindex.broadcastSigs=0) — key-semi stays
     // map-side, the sig join shuffles, verdict identical
-    spark.conf.set("spark.graft.sigindex.broadcastSigs", "0")
-    try {
+    withConf("spark.graft.sigindex.broadcastSigs" -> "0") {
       pipelines.SignatureIndex.refresh(spark, newDocs, indexDir)
         .collect().toSeq shouldBe verdict.collect().toSeq
-    } finally spark.conf.unset("spark.graft.sigindex.broadcastSigs")
+    }
   }
 
   test("an in-memory batch refresh scans only index paths — old text never re-tokenized") {

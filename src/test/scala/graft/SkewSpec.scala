@@ -38,16 +38,11 @@ class SkewSpec extends AnyFunSuite with Matchers with SparkFixture {
     val fact = (1 to 10000).map(i => (if (i <= 9000) 1L else (i % 999) + 2L, i.toLong))
       .toDF("k", "payload")
     val dim = (1L to 1000L).map(k => (k, s"dim_$k")).toDF("k2", "attr")
-    val thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      // force shuffle joins and disable AQE's own skew handling so the
-      // measurement isolates the salting pattern itself; 32 partitions so
-      // the 8 salt buckets don't collide coarsely in the partitioner
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
+    // force shuffle joins and disable AQE's own skew handling so the
+    // measurement isolates the salting pattern itself; 32 partitions so
+    // the 8 salt buckets don't collide coarsely in the partitioner
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "32") {
       def maxPartRows(df: org.apache.spark.sql.DataFrame): Long =
         df.rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().max
       val plain = fact.join(dim, col("k") === col("k2"))
@@ -61,10 +56,6 @@ class SkewSpec extends AnyFunSuite with Matchers with SparkFixture {
       // reducer at ~1/S of that
       mPlain should be >= 9000L
       mSalted.toDouble should be <= mPlain.toDouble / 4
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
     }
   }
 
@@ -106,14 +97,10 @@ class SkewSpec extends AnyFunSuite with Matchers with SparkFixture {
     bCell should be <= 128L
     // and the production queries still run green through the sharded path
     // at a tiny threshold (llm_simhash carries its signature through it)
-    val key = "spark.graft.lsh.shardThreshold"
-    spark.conf.set(key, "8")
-    try {
-      val base = queries.Sketches.llmSimhash(spark, sfDir).collect()
-      spark.conf.unset(key)
-      val unsharded = queries.Sketches.llmSimhash(spark, sfDir).collect()
-      base should equal(unsharded)
-    } finally spark.conf.unset(key)
+    val base = withConf("spark.graft.lsh.shardThreshold" -> "8") {
+      queries.Sketches.llmSimhash(spark, sfDir).collect()
+    }
+    queries.Sketches.llmSimhash(spark, sfDir).collect() should equal(base)
   }
 
   test("exact-jaccard blocking joins are skew-safe: tiny shard threshold leaves outputs unchanged") {
@@ -129,12 +116,11 @@ class SkewSpec extends AnyFunSuite with Matchers with SparkFixture {
     val baseJac = queries.Llm.llmJaccardPairs(spark, sfDir).collect()
     val baseNgram = queries.Textops.llmNgramJaccard(spark, sfDir).collect()
     val baseIncr = queries.Extras.llmDedupIncremental(spark, sfDir).collect()
-    spark.conf.set(key, "8")
-    try {
+    withConf(key -> "8") {
       queries.Llm.llmJaccardPairs(spark, sfDir).collect() should equal(baseJac)
       queries.Textops.llmNgramJaccard(spark, sfDir).collect() should equal(baseNgram)
       queries.Extras.llmDedupIncremental(spark, sfDir).collect() should equal(baseIncr)
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("llm_semdedup's within-cell join is skew-safe: tiny shard threshold leaves output unchanged") {
@@ -149,16 +135,15 @@ class SkewSpec extends AnyFunSuite with Matchers with SparkFixture {
     val key = "spark.graft.lsh.shardThreshold"
     val base = queries.Extras.llmSemdedup(spark, sfDir).collect()
     base.length should be > 0
-    spark.conf.set(key, "8")
-    try {
+    withConf(key -> "8") {
       queries.Extras.llmSemdedup(spark, sfDir).collect() should equal(base)
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("GraftExtensions injects without error; graft_dot evaluates via SQL") {
     // applying the extensions to a fresh SparkSessionExtensions must
     // register both builders without throwing
-    new GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
+    new graft.functions.GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
     // and the expressions are usable from plain SQL on a session
     val s2 = spark.newSession()
     graft.functions.VectorExprs.register(s2)

@@ -15,6 +15,12 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
 
+  /** transformWithState needs column families: run `f` on the RocksDB
+    * state store. */
+  private def rocksDb[T](f: => T): T =
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(f)
+
   private def runToMemory(name: String)(build: => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val q = build.writeStream.format("memory").queryName(name)
@@ -126,12 +132,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
     val rows = Seq(
       Ev(1, ts(1), 1, "purchase", 10.0), Ev(2, ts(2), 1, "click", 1.0),
       Ev(3, ts(3), 1, "purchase", 5.0), Ev(4, ts(1), 2, "view", 2.0))
-    // transformWithState needs column families -> RocksDB state store
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    rocksDb {
       val stream = MemoryStream[Ev]
       stream.addData(rows.take(2): _*)
       val q = EventStreams.runningUserStateTws(stream.toDS())
@@ -142,7 +143,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       val got = spark.table("tws").orderBy("event_id")
         .collect().map(r => (r.getLong(0), r.getLong(2), r.getDouble(3))).toSeq
       got should equal(Seq((1L, 1L, 10.0), (2L, 1L, 11.0), (3L, 2L, 16.0), (4L, 0L, 2.0)))
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("event-time timers close sessions exactly like batch session_window (state expiry parity)") {
@@ -159,11 +160,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       Ev(4, ts(15), 2, "click", 0.5), Ev(5, ts(40), 2, "view", 0.25),
       Ev(6, ts(100), 2, "click", 8.0),
       Ev(7, ts(90), 3, "view", 16.0), Ev(8, ts(125), 3, "click", 32.0))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    rocksDb {
       val stream = MemoryStream[Ev]
       val q = EventStreams.sessionTimeoutTws(stream.toDS())
         .writeStream.format("memory").queryName("sessTws")
@@ -190,7 +187,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
         .toSet
       got should equal(batch)
       got.size shouldBe 6 // 2 + 2 + 2 closed sessions, none left open
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("funnelState last-snapshot matches the ordered funnel across microbatches") {
@@ -282,11 +279,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       Ev(3, dts(1, 30), 2, "view", 1.0))
     val batch2 = Seq(
       Ev(4, dts(3, 10), 1, "purchase", 1.0), Ev(5, dts(2, 15), 2, "click", 1.0))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    rocksDb {
       val tws = MemoryStream[Ev]
       tws.addData(batch1: _*)
       val q1 = EventStreams.retentionIncrementsTws(tws.toDS())
@@ -294,7 +287,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       q1.processAllAvailable()
       tws.addData(batch2: _*)
       q1.processAllAvailable(); q1.stop()
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
     val mgs = MemoryStream[Ev]
     mgs.addData(batch1: _*)
     val q2 = EventStreams.retentionIncrements(mgs.toDS())
@@ -350,8 +343,6 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       Ev(3, ts(5), 2, "click", 1.0), Ev(4, ts(15), 2, "view", 1.0))
     val batch2 = Seq(
       Ev(5, ts(30), 1, "purchase", 1.0), Ev(6, ts(25), 2, "click", 1.0))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
     def runTws[T](name: String, f: org.apache.spark.sql.Dataset[Ev] => org.apache.spark.sql.Dataset[T]): Unit = {
       val st = MemoryStream[Ev]
       st.addData(batch1: _*)
@@ -359,12 +350,10 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
         .outputMode(OutputMode.Append).start()
       q.processAllAvailable(); st.addData(batch2: _*); q.processAllAvailable(); q.stop()
     }
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    rocksDb {
       runTws("funtws", EventStreams.funnelStateTws)
       runTws("pathtws", EventStreams.pathTrigramsTws)
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
     runTws("funmgs", EventStreams.funnelState)
     runTws("pathmgs", EventStreams.pathTrigrams)
     def sorted(t: String) = spark.table(t).collect().map(_.toString).sorted.toSeq
@@ -410,12 +399,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       hourEvs("a", h, if (h == 6) 30 else 4 + h % 3, 0) ++ hourEvs("b", h, 4, 100000)
     }
     val (b1, b2) = rows.splitAt(rows.size / 2)
-    // transformWithState needs column families -> RocksDB state store
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val streamed = try {
+    val streamed = rocksDb {
       val stream = MemoryStream[Ev]
       stream.addData(b1: _*)
       val q = EventStreams.hourlyAnomaly(stream.toDS())
@@ -426,7 +410,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       spark.table("anom")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .sortBy(t => (t._1, t._2))
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
 
     val hourly = rows.toDF()
       .groupBy(window($"ts", "1 hour"), $"event_type")
@@ -468,11 +452,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       at(0, 1, 0, 1), at(1, 1, 0, 5), at(2, 2, 0, 3), at(3, 1, 0, 9),
       at(4, 1, 1, 2), at(5, 2, 2, 4), at(6, 3, 2, 6))
     val (b1, b2) = rows.splitAt(3) // user 1's third day-0 event lands in batch 2
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val streamed = try {
+    val streamed = rocksDb {
       val stream = MemoryStream[Ev]
       stream.addData(b1: _*)
       val q = EventStreams.dailyFirstSeen(stream.toDS())
@@ -481,7 +461,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       stream.addData(b2: _*)
       q.processAllAvailable(); q.stop()
       spark.table("dau").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
     // exactly one row per (user, day)
     streamed shouldBe streamed.distinct.sorted
     // per-day counts over the reduced stream == batch DAU (keyed by the
@@ -514,11 +494,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       at(4, 1, 6, "purchase", 7.0), at(5, 2, 7, "view", 0.0),
       at(6, 2, 9, "purchase", 2.0), at(7, 3, 5, "view", 0.0))
     val (b1, b2) = rows.splitAt(4)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val credits = try {
+    val credits = rocksDb {
       val stream = MemoryStream[Ev]
       stream.addData(b1: _*)
       val q = EventStreams.purchaseCredits(stream.toDS())
@@ -529,7 +505,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       q.processAllAvailable(); q.stop()
       spark.table("credits").collect()
         .map(r => (r.getLong(0), r.getString(2), r.getDouble(3))).sortBy(_._1).toSeq
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
     // every purchase credited exactly once, to the correct carried touch
     credits shouldBe Seq(
       (1L, "view", 10.0), (3L, "<none>", 5.0), (4L, "click", 7.0), (6L, "view", 2.0))
@@ -560,11 +536,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       Doc(4L, "delta epsilon", "fr"),    // dup of 1 across the split
       Doc(5L, "unique text two", "en"))
     val (b1, b2) = docs.splitAt(3)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val kept = try {
+    val kept = rocksDb {
       val stream = MemoryStream[Doc]
       stream.addData(b1: _*)
       val q = DocStreams.dedupByContent(stream.toDS())
@@ -575,7 +547,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       q.processAllAvailable(); q.stop()
       spark.table("kept").collect()
         .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
     kept.map(_._1) shouldBe Seq(0L, 1L, 2L, 5L) // first arrival = min id wins
     // keeper ids AND hashes equal the batch operator's on the same corpus
     val d = java.nio.file.Files.createTempDirectory("graft_sdedup").toString
@@ -598,11 +570,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       Doc(2L, good, "en"),         // dup of 0, next batch
       Doc(3L, "1 2 3", "en"))      // fails frac_alpha too
     val (b1, b2) = docs.splitAt(2)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ingested = try {
+    val ingested = rocksDb {
       val stream = MemoryStream[Doc]
       stream.addData(b1: _*)
       val q = DocStreams.ingest(stream.toDS())
@@ -612,7 +580,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       stream.addData(b2: _*)
       q.processAllAvailable(); q.stop()
       spark.table("ingested").collect().map(_.getLong(0)).toSeq
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
     ingested shouldBe Seq(0L)
   }
 
@@ -631,11 +599,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       at(4, 1, 1, 3, "purchase", 5.0), at(5, 2, 2, 5, "purchase", 3.0),
       at(6, 3, 1, 7, "purchase", 7.0))
     val (b1, b2) = rows.splitAt(3)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val incs = try {
+    val incs = rocksDb {
       val stream = MemoryStream[Ev]
       stream.addData(b1: _*)
       val q = EventStreams.cohortRevenue(stream.toDS())
@@ -646,7 +610,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
       q.processAllAvailable(); q.stop()
       spark.table("ltvincs").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
     // stateless rollup of the increment stream == the batch day_value
     // report, keyed by the ISO cohort day (UTC meeting point)
     val streamedDay = incs.groupBy(t => (
@@ -670,11 +634,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
     // same checkpoint must drop it; losing the store would re-admit it
     val base = java.nio.file.Files.createTempDirectory("graft_ckpt_s").toString
     val (ckpt, out) = (s"$base/ckpt", s"$base/out")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val kept = try {
+    val kept = rocksDb {
       // the memory sink refuses checkpoint recovery; the parquet sink is
       // the fault-tolerant one — both queries write the same dir
       val stream = MemoryStream[Doc]
@@ -692,7 +652,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
         .outputMode(OutputMode.Append).start()
       q2.processAllAvailable(); q2.stop()
       spark.read.parquet(out).collect().map(_.getLong(0)).sorted.toSeq
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
     kept shouldBe Seq(0L, 1L, 3L) // doc 2 died to state recovered across the restart
   }
 
@@ -733,11 +693,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
         Ev(i.toLong, ts(m), 1L, "a", 1.0) } ++
       (0 until 6).map(i => Ev(100L + i, ts(i * 5), 2L, "b", 1.0))
     val (b1, b2) = rows.sortBy(_.ts.getTime).splitAt(rows.size / 2)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val streamed = try {
+    val streamed = rocksDb {
       val stream = MemoryStream[Ev]
       stream.addData(b1: _*)
       val q = EventStreams.interArrival(stream.toDS())
@@ -749,7 +705,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
                    r.getDouble(4), r.getLong(5)))
         .sortBy(_._1)
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
 
     val w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     val wCum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -824,11 +780,6 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("interval self-join parity holds under the RocksDB state store (the 100 TB/day store)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try intervalJoinParity("rocks")
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    rocksDb(intervalJoinParity("rocks"))
   }
 }
