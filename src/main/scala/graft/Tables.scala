@@ -46,11 +46,11 @@ object Tables {
   def tableRaw(spark: SparkSession, sfDir: String, name: String): DataFrame =
     normalizeNtz(spark.read.parquet(s"$sfDir/$name.parquet"))
 
-  /** Layout normalization (round 13, VERDICT r12 #1a): the driver
-    * fixtures ship each table as ONE parquet file with ONE row group,
-    * and a row group is the parquet split atom — so every scan of such
-    * a file is ONE task, and every query's first stage (scan + partial
-    * agg / filter / explode) runs single-threaded on a 32-core box.
+  /** Layout normalization: the driver fixtures ship each table as ONE
+    * parquet file with ONE row group, and a row group is the parquet
+    * split atom — so every scan of such a file is ONE task, and every
+    * query's first stage (scan + partial agg / filter / explode) runs
+    * single-threaded on a 32-core box.
     * ComputeProfile measured the whole non-llm compute tail at ≤ 0.26
     * CPU utilization with 3-11 mostly-sequential tasks per query; a
     * 32-row-group re-land of the same bytes cut the agg/join tail
@@ -89,7 +89,7 @@ object Tables {
     * later context has another appId and makes its own). */
   private val ownedScratch =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.Set[java.io.File]]()
-  private[graft] def ownScratch(s: SparkSession, dir: java.io.File): Unit = {
+  private def ownScratch(s: SparkSession, dir: java.io.File): Unit = {
     val app = s.sparkContext.applicationId
     val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
     dirs.add(dir)
@@ -103,6 +103,41 @@ object Tables {
       }
     })
   }
+
+  /** The one scratch directory of (session, dataset `d`, `tag`), made
+    * and owned by the session's context: `graft_<tag>_<appId>_<key>`
+    * under `spark.graft.scratch.root` (default `java.io.tmpdir`), where
+    * the key is `datasetKey(d)`.
+    *
+    * A fixed dir plus `mode("overwrite")` bounds the footprint to one
+    * copy per (session, dataset), where a fresh temp dir per call would
+    * strand a table copy each time, and the overwrite guarantees no
+    * stale file of a larger earlier corpus survives into a read-back.
+    * The dataset key matters because frames read their paths lazily: a
+    * dataset-independent dir would re-bind an earlier call's frame to
+    * whichever dataset was written last. The root is where a
+    * multi-tenant box or a cluster points shared durable storage; the
+    * path math is java.io.File, so it must be a local path until it
+    * moves to Hadoop Path. The appId keeps two processes apart even
+    * under a shared root, so Graphs.publish's cross-writer rename
+    * protocol is defense in depth here; dropping the appId from the key
+    * would make it the live protocol for cross-process view sharing. */
+  private[graft] def scratchDir(s: SparkSession, d: String, tag: String): String = {
+    val root = s.conf.get("spark.graft.scratch.root", sys.props("java.io.tmpdir"))
+    val dir = new java.io.File(root,
+      s"graft_${tag}_${s.sparkContext.applicationId}_${datasetKey(d)}")
+    dir.mkdirs()
+    ownScratch(s, dir)
+    dir.toString
+  }
+
+  /** The short key of dataset `d` in scratch names: the first 6 bytes
+    * of md5(`d`) in hex. Callers name other per-dataset objects (catalog
+    * tables) with it. */
+  private[graft] def datasetKey(d: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(d.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+
   private def normalizeLayout(s: SparkSession, sfDir: String, name: String): String = {
     val rawPath = s"$sfDir/$name.parquet"
     val key = s"${s.sparkContext.applicationId}|$sfDir|$name"
@@ -119,11 +154,10 @@ object Tables {
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
           try (r.getRecordCount, r.getRowGroups.size) finally r.close()
         } catch { case _: Throwable => (0L, Int.MaxValue) } // unreadable → raw
-      // Threshold conf'd + re-derived (round 13 optimization). The
-      // original 200k gate was sized against the FIRST-cut split count
-      // (cores flat = 32 files), where the 2-3 MB tables' multi-scan
-      // queries lost more to per-scan open overhead than the parallel
-      // scan bought (dq_referential 1.47 → 3.49 under 32-way orders).
+      // A 200k gate was sized against a cores-flat split count (32
+      // files), where the 2-3 MB tables' multi-scan queries lost more
+      // to per-scan open overhead than the parallel scan bought
+      // (dq_referential 1.47 → 3.49 under 32-way orders).
       // Under the CURRENT ~50k-row sizing (orders → 3 files, events →
       // 2) the same-phase A/B flips decisively: fn_try 1.60 → 0.64,
       // dq_referential 1.64 → 1.41 (the old canary now WINS), agg_gini/
@@ -133,26 +167,16 @@ object Tables {
       val minRows = s.conf.get("spark.graft.layout.minRows", "100000").toLong
       if (rows < minRows || rowGroups >= math.max(2, cores / 4)) rawPath
       else {
-        val dKey = java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-        val root = s.conf.get("spark.graft.scratch.root", sys.props("java.io.tmpdir"))
-        val dir = new java.io.File(root,
-          s"graft_layout_${s.sparkContext.applicationId}_$dKey/$name")
-        ownScratch(s, dir.getParentFile)
+        val dir = new java.io.File(scratchDir(s, sfDir, "layout"), name)
         if (!dir.isDirectory) {
           // split count targets ~50k rows per file, capped at the core
           // count: enough to kill the serial-scan floor without paying
           // 32 task launches + file opens per scan of a 100k-row table
-          // (the first cut used `cores` flat and the 2-3 MB tables'
-          // cheap queries LOST more to per-task overhead than the
-          // parallel scan bought back)
+          // (with `cores` flat, the 2-3 MB tables' cheap queries LOST
+          // more to per-task overhead than the parallel scan bought back)
           val parts = math.min(cores.toLong, math.max(2L, rows / 50000L)).toInt
-          val tmp = new java.io.File(dir.getParentFile,
-            s"${dir.getName}.tmp.${java.util.UUID.randomUUID}")
-          s.read.parquet(rawPath).repartition(parts)
-            .write.mode("overwrite").parquet(tmp.toString)
-          require(graft.queries.Graphs.publish(tmp, dir),
-            s"layout-normalized copy publish failed at $dir")
+          graft.queries.Graphs.publishFrame(
+            s.read.parquet(rawPath).repartition(parts), dir, "layout-normalized copy")
         }
         dir.toString
       }
@@ -204,19 +228,11 @@ object Tables {
   private def declaresNanos(s: SparkSession, path: String): Boolean = {
     import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
     import scala.jdk.CollectionConverters._
-    val conf = s.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return false
-    val files = fs.listFiles(p, true)
-    var file: Option[org.apache.hadoop.fs.Path] = None
-    while (file.isEmpty && files.hasNext) {
-      val f = files.next().getPath
-      if (!f.getName.startsWith("_") && !f.getName.startsWith(".")) file = Some(f)
-    }
-    file.exists { f =>
+    Stamps.fs(s, p).exists(p) && Stamps.dataFiles(s, path).nextOption().exists { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          f.getPath, s.sparkContext.hadoopConfiguration))
       try r.getFooter.getFileMetaData.getSchema.getColumns.asScala.exists(
         _.getPrimitiveType.getLogicalTypeAnnotation match {
           case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS

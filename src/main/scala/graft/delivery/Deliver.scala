@@ -58,11 +58,14 @@ object Deliver {
       expr("bit_xor(h)").as("x"),
       sum(col("h").cast("decimal(38,0)")).as("s")).head()
     if (r.isNullAt(1)) (r.getLong(0), 0L) // empty dataset
-    else {
-      val sumMod = r.getDecimal(2).toBigInteger
-        .mod(java.math.BigInteger.ONE.shiftLeft(64)).longValue()
-      (r.getLong(0), r.getLong(1) ^ java.lang.Long.rotateLeft(sumMod, 32))
-    }
+    else (r.getLong(0), combine(r.getLong(1), r.getDecimal(2)))
+  }
+
+  /** xor ⊕ rot32(sum mod 2^64): the one combiner of the row-hash xor and
+    * their exact decimal sum, shared by `scan` and partitionFingerprints. */
+  private def combine(xor: Long, sum: java.math.BigDecimal): Long = {
+    val sumMod = sum.toBigInteger.mod(java.math.BigInteger.ONE.shiftLeft(64)).longValue()
+    xor ^ java.lang.Long.rotateLeft(sumMod, 32)
   }
 
   /** Read `src` with an explicit schema when the format needs one (CSV/
@@ -260,11 +263,7 @@ object Deliver {
       .groupBy("p")
       .agg(expr("bit_xor(h)").as("x"),
            sum(col("h").cast("decimal(38,0)")).as("s"))
-      .collect().map { r =>
-        val sumMod = r.getDecimal(2).toBigInteger
-          .mod(java.math.BigInteger.ONE.shiftLeft(64)).longValue()
-        r.getString(0) -> (r.getLong(1) ^ java.lang.Long.rotateLeft(sumMod, 32))
-      }.toMap
+      .collect().map(r => r.getString(0) -> combine(r.getLong(1), r.getDecimal(2))).toMap
   }
 
   /** Partition-column type inference disabled around `f`: everything
@@ -385,17 +384,8 @@ object Deliver {
                schema: Option[String] = None,
                options: Map[String, String] = Map.empty): DeliveryReport = {
     val (rows, fp) = scan(read(spark, path, format, schema, options))
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    var files = 0L; var bytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        files += 1; bytes += f.getLen
-      }
-    }
+    val (files, bytes) = graft.Stamps.dataFiles(spark, path)
+      .foldLeft((0L, 0L)) { case ((n, b), f) => (n + 1, b + f.getLen) }
     DeliveryReport(rows, files, bytes, fp)
   }
 

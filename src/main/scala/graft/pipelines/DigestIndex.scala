@@ -6,6 +6,7 @@ import java.util.zip.{DeflaterOutputStream, InflaterInputStream}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Stamps
 
 /** The exact-dedup DELIVERY ARTIFACT behind llm_dedup_bloom's 100 TB
   * posture: a corpus's dedup state reduced to (a) distinct sha256
@@ -63,52 +64,35 @@ object DigestIndex {
   private val GeomFile = "_graft_bloom_geom"
   private val BloomFile = "_graft_bloom"
   private val GenerationsFile = "_graft_generations"
-
-  private def fsFor(spark: SparkSession, path: Path) =
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeBytes(spark: SparkSession, dir: String, name: String,
-                         content: Array[Byte]): Unit = {
-    val p = new Path(dir, name)
-    val os = fsFor(spark, p).create(p, true)
-    try os.write(content) finally os.close()
-  }
-
-  private def readBytes(spark: SparkSession, dir: String, name: String): Array[Byte] = {
-    val p = new Path(dir, name)
-    require(fsFor(spark, p).exists(p),
-      s"$dir has no $name — not a DigestIndex-written artifact")
-    val in = fsFor(spark, p).open(p)
-    try in.readAllBytes() finally in.close()
-  }
+  private val Owner = "DigestIndex"
 
   private def writeBloom(spark: SparkSession, dir: String, sketch: Array[Byte]): Unit = {
     val bytes = new ByteArrayOutputStream()
     val z = new DeflaterOutputStream(bytes)
     try z.write(sketch) finally z.close()
-    writeBytes(spark, dir, BloomFile, bytes.toByteArray)
+    Stamps.write(spark, dir, BloomFile, bytes.toByteArray)
   }
 
   private def readBloom(spark: SparkSession, dir: String): Array[Byte] = {
     val z = new InflaterInputStream(
-      new ByteArrayInputStream(readBytes(spark, dir, BloomFile)))
+      new ByteArrayInputStream(Stamps.read(spark, dir, BloomFile, Owner)))
     try z.readAllBytes() finally z.close()
   }
 
   /** The qualified digest directory of the generation written at `dir`. */
   private def ownDigests(spark: SparkSession, dir: String): String = {
     val p = new Path(dir, "digests.parquet")
-    fsFor(spark, p).makeQualified(p).toString
+    Stamps.fs(spark, p).makeQualified(p).toString
   }
 
   /** The digest directories an index stands on, oldest first; fails
     * loudly, naming it, on any that is missing. */
   private def generations(spark: SparkSession, index: String): Seq[String] = {
-    val gens = new String(readBytes(spark, index, GenerationsFile), "UTF-8")
+    val gens = Stamps.text(spark, index, GenerationsFile, Owner)
       .split("\n").filter(_.nonEmpty).toSeq
     gens.foreach { g =>
       val p = new Path(g)
-      require(fsFor(spark, p).exists(p),
+      require(Stamps.fs(spark, p).exists(p),
         s"$index lists digest generation $g, which is missing — " +
         "rebuild the index with DigestIndex.build")
     }
@@ -142,9 +126,9 @@ object DigestIndex {
     val items = math.max(
       spark.conf.get("spark.graft.dedup.bloomItems", "100000").toLong, n)
     writeBloom(spark, out, bloomOf(docs, items, fpp))
-    writeBytes(spark, out, GeomFile, s"$items:$fpp".getBytes("UTF-8"))
-    writeBytes(spark, out, GenerationsFile, own.getBytes("UTF-8"))
-    writeBytes(spark, out, MarkerFile, stamp.getBytes("UTF-8"))
+    Stamps.write(spark, out, GeomFile, s"$items:$fpp")
+    Stamps.write(spark, out, GenerationsFile, own)
+    Stamps.write(spark, out, MarkerFile, stamp)
   }
 
   /** Verdict a new-batch frame (doc_id, text, …) against the index:
@@ -205,21 +189,21 @@ object DigestIndex {
              out: String): Unit = {
     val gens = generations(spark, index)
     val own = ownDigests(spark, out)
-    // qualified-path comparison (ADVICE r9): raw Path.toString lets
+    // qualified-path comparison: raw Path.toString lets
     // equivalent spellings (file:/x vs /x, relative vs absolute) pass,
     // and mode("overwrite") would then delete a generation the chain
     // still reads — `index` itself or any ancestor
     require(!gens.contains(own),
       s"extend writes out-of-place; got out $out, a generation of index $index")
-    val geom = new String(readBytes(spark, index, GeomFile), "UTF-8").split(":")
+    val geom = Stamps.text(spark, index, GeomFile, Owner).split(":")
     val (items, fpp) = (geom(0).toLong, geom(1).toDouble)
     val merged = graft.functions.BloomAggs.read(readBloom(spark, index))
     merged.mergeInPlace(graft.functions.BloomAggs.read(bloomOf(newDocs, items, fpp)))
     digestsOf(newDocs).write.mode("overwrite").parquet(own)
     writeBloom(spark, out, graft.functions.BloomAggs.write(merged))
-    writeBytes(spark, out, GeomFile, s"$items:$fpp".getBytes("UTF-8"))
-    writeBytes(spark, out, GenerationsFile, (gens :+ own).mkString("\n").getBytes("UTF-8"))
-    val marker = new String(readBytes(spark, index, MarkerFile), "UTF-8")
-    writeBytes(spark, out, MarkerFile, s"$marker+batch".getBytes("UTF-8"))
+    Stamps.write(spark, out, GeomFile, s"$items:$fpp")
+    Stamps.write(spark, out, GenerationsFile, (gens :+ own).mkString("\n"))
+    val marker = Stamps.text(spark, index, MarkerFile, Owner)
+    Stamps.write(spark, out, MarkerFile, s"$marker+batch")
   }
 }

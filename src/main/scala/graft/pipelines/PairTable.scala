@@ -2,6 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Stamps
 
 /** The materialized near-dup pair artifact (llm_pair_table as a
   * persisted table) — the cross-run sharing story for the jaccard
@@ -45,22 +46,6 @@ object PairTable {
   private val WatermarkFile = "_graft_watermark"
   private val CandFile = "_graft_candidates"
 
-  private def fsFor(spark: SparkSession, path: org.apache.hadoop.fs.Path) =
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeSmallFile(spark: SparkSession, dir: String, name: String,
-                             content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    val os = fsFor(spark, p).create(p, true)
-    try os.write(content.getBytes("UTF-8")) finally os.close()
-  }
-
-  private def readSmallFile(spark: SparkSession, dir: String, name: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    val in = fsFor(spark, p).open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
-
   /** Stamp the artifact with the corpus dir it was built from plus the
     * doc_id watermark (max doc_id seen); the read path refuses to serve
     * any other dir (the conf is session-global — without the stamp one
@@ -69,46 +54,38 @@ object PairTable {
     * new-batch rule. Underscore-prefixed so parquet readers ignore
     * them, like _SUCCESS. */
   private def writeStamps(spark: SparkSession, out: String, corpus: String): Unit = {
-    writeSmallFile(spark, out, MarkerFile, corpus)
+    Stamps.write(spark, out, MarkerFile, corpus)
     val wm = graft.Tables.documents(spark, corpus)
       .agg(max("doc_id")).head().getLong(0)
-    writeSmallFile(spark, out, WatermarkFile, wm.toString)
+    Stamps.write(spark, out, WatermarkFile, wm.toString)
     // provenance of the candidate generator the artifact was built with
     // (rarity = exact contract, minhash = approximate): the read path
     // refuses to serve a session whose conf declares the OTHER mode, so
     // an approximate table can never silently answer for the exact one
-    writeSmallFile(spark, out, CandFile,
+    Stamps.write(spark, out, CandFile,
       spark.conf.get("spark.graft.pairs.candidates", "rarity"))
   }
 
   /** The corpus dir an artifact was stamped with; fails loudly on an
     * unstamped directory (only PairTable-produced tables qualify). */
-  def readCorpusMarker(spark: SparkSession, artifact: String): String = {
-    val p = new org.apache.hadoop.fs.Path(artifact, MarkerFile)
-    require(fsFor(spark, p).exists(p),
-      s"$artifact has no $MarkerFile stamp — not a PairTable-written artifact")
-    readSmallFile(spark, artifact, MarkerFile)
-  }
+  def readCorpusMarker(spark: SparkSession, artifact: String): String =
+    Stamps.text(spark, artifact, MarkerFile, "PairTable")
 
   /** The candidate-generator mode the artifact was built with. Stamps
     * predating the mode conf (none in this repo's history) read as the
     * then-only "rarity". */
-  def readCandMode(spark: SparkSession, artifact: String): String = {
-    val p = new org.apache.hadoop.fs.Path(artifact, CandFile)
-    if (fsFor(spark, p).exists(p)) readSmallFile(spark, artifact, CandFile).trim
+  def readCandMode(spark: SparkSession, artifact: String): String =
+    if (Stamps.exists(spark, artifact, CandFile))
+      Stamps.text(spark, artifact, CandFile, "PairTable").trim
     else "rarity"
-  }
 
   /** The doc_id watermark stamped at write/refresh time: every corpus
     * doc with doc_id > watermark arrived AFTER the artifact was built.
     * Pre-watermark artifacts (none in this repo's history, but a
     * foreign stamp could omit the file) fail loudly rather than guess. */
-  def readWatermark(spark: SparkSession, artifact: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(artifact, WatermarkFile)
-    require(fsFor(spark, p).exists(p),
-      s"$artifact has no $WatermarkFile stamp — rebuild with PairTable.write")
-    readSmallFile(spark, artifact, WatermarkFile).trim.toLong
-  }
+  def readWatermark(spark: SparkSession, artifact: String): Long =
+    Stamps.text(spark, artifact, WatermarkFile, "PairTable",
+      remedy = "rebuild with PairTable.write").trim.toLong
 
   /** The artifact frame (unsorted; jac ≥ 0.6), always computed fresh. */
   def build(spark: SparkSession, sfDir: String): DataFrame =
@@ -226,7 +203,7 @@ object PairTable {
   def refreshInPlace(spark: SparkSession, sfDir: String, artifact: String): Unit = {
     val wm = readWatermark(spark, artifact)
     val aPath = new org.apache.hadoop.fs.Path(artifact)
-    val fs = fsFor(spark, aPath)
+    val fs = Stamps.fs(spark, aPath)
     val stage = new org.apache.hadoop.fs.Path(aPath, "_graft_delta")
     val prefix = s"part-wm$wm-"
     // what a run from this watermark that died before its stamp left
@@ -235,8 +212,8 @@ object PairTable {
       .foreach(p => require(fs.delete(p, false), s"could not delete stale delta file $p"))
     delta(spark, sfDir, artifact, id => id > wm)
       .write.mode("overwrite").parquet(stage.toString)
-    fs.listStatus(stage).map(_.getPath)
-      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+    // listed in full before the first rename moves a file out of it
+    Stamps.dataFiles(spark, stage.toString).map(_.getPath).toList
       .foreach { p =>
         val to = new org.apache.hadoop.fs.Path(aPath, prefix + p.getName.stripPrefix("part-"))
         require(fs.rename(p, to), s"could not move delta file $p -> $to")

@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.queries.Sketches.Pq
+import graft.Stamps
 
 /** The ANN delivery artifact — the vector sibling of DigestIndex (exact
   * dedup) and SignatureIndex (near-dup): a delivered corpus's PQ state
@@ -55,32 +56,17 @@ object PqIndex {
   // flat search; ivf search REQUIRES it and fails loud without it.
   private val IvfFile = "_graft_ivf"
 
-  private def fsFor(spark: SparkSession, path: org.apache.hadoop.fs.Path) =
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeSmall(spark: SparkSession, dir: String, name: String,
-                         content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    val os = fsFor(spark, p).create(p, true)
-    try os.write(content.getBytes("UTF-8")) finally os.close()
-  }
-
-  private def readSmall(spark: SparkSession, dir: String, name: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    require(fsFor(spark, p).exists(p),
-      s"$dir has no $name — not a PqIndex-written artifact")
-    val in = fsFor(spark, p).open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
-
   // geometry defaults come from the ONE shared definition (Pq.geometry)
   // so the index and the in-query form can never train different
   // codebooks under identical confs — the parity pin's precondition
   private def geometry(spark: SparkSession): (Int, Int, Int) =
     Pq.geometry(spark)
 
+  private def readStamp(spark: SparkSession, index: String, name: String): String =
+    Stamps.text(spark, index, name, "PqIndex").trim
+
   private def storedGeometry(spark: SparkSession, index: String): (Int, Int, Int) = {
-    val Array(m, k, it) = readSmall(spark, index, GeomFile).trim.split(":").map(_.toInt)
+    val Array(m, k, it) = readStamp(spark, index, GeomFile).split(":").map(_.toInt)
     (m, k, it)
   }
 
@@ -143,9 +129,9 @@ object PqIndex {
     // file-level probe pruning on every search thereafter
     writeBatch(spark, packed(sv, cb).join(cells(vecs, bits), Seq("vec_id")),
       out, 0L)
-    writeSmall(spark, out, GeomFile, s"$m:$k:$iters")
-    writeSmall(spark, out, IvfFile, bits.toString)
-    writeSmall(spark, out, MarkerFile, stamp)
+    Stamps.write(spark, out, GeomFile, s"$m:$k:$iters")
+    Stamps.write(spark, out, IvfFile, bits.toString)
+    Stamps.write(spark, out, MarkerFile, stamp)
   }
 
   /** ADC top-k of query vectors (vec_id, embedding) against every code
@@ -162,7 +148,7 @@ object PqIndex {
     val cb = spark.read.parquet(s"$index/codebook.parquet")
     // Positional ADC lookup (element_at by code) is only correct over a
     // DENSE 0..K'-1 code set per subspace. Pq.train guarantees density
-    // by seed-rank remap (ADVICE r9), but an index is a durable artifact
+    // by seed-rank remap, but an index is a durable artifact
     // — assert the invariant on the stored codebook rather than trust
     // its writer. Bounded: the check aggregates the ≤M·K-row codebook.
     val sparse = cb.groupBy("sub")
@@ -196,7 +182,7 @@ object PqIndex {
         // (codes stay codebook-absolute, so flat and ivf ADC integers
         // are IDENTICAL for every surviving candidate; only the
         // candidate set shrinks — PqIndexSpec pins subset semantics).
-        val bits = readSmall(spark, index, IvfFile).trim.toInt
+        val bits = readStamp(spark, index, IvfFile).toInt
         val masks = graft.queries.Ann.probeMasks(
           bits, graft.queries.Ann.probeRadius(spark))
         val qcells = queryVecs
@@ -236,7 +222,7 @@ object PqIndex {
     // cell bits come from the STAMP, never the live conf — a batch
     // stamped under different bits would land in cells the probe
     // geometry of the rest of the index can't reach
-    val bits = readSmall(spark, index, IvfFile).trim.toInt
+    val bits = readStamp(spark, index, IvfFile).toInt
     val cb = spark.read.parquet(s"$index/codebook.parquet")
     val sv = Pq.subvectors(newVecs, m)
     writeBatch(spark, packed(sv, cb).join(cells(newVecs, bits), Seq("vec_id")),

@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Det._
+import graft.Stamps
 
 /** The NEAR-dup delivery artifact — the fuzzy sibling of DigestIndex:
   * a delivered corpus's minhash state reduced to the per-doc signature
@@ -44,22 +45,10 @@ object SignatureIndex {
   /** Old-occupancy cap of a touched band bucket (see the Skew note). */
   private val MaxBucket = 65536L
 
-  private def fsFor(spark: SparkSession, path: org.apache.hadoop.fs.Path) =
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeSmall(spark: SparkSession, dir: String, name: String,
-                         content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    val os = fsFor(spark, p).create(p, true)
-    try os.write(content.getBytes("UTF-8")) finally os.close()
-  }
-
-  private def readSmall(spark: SparkSession, dir: String, name: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    require(fsFor(spark, p).exists(p),
-      s"$dir has no $name — not a SignatureIndex-written artifact")
-    val in = fsFor(spark, p).open(p)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  /** Fails unless `index` is stamped with this geometry. */
+  private def requireGeometry(spark: SparkSession, index: String): Unit = {
+    val stored = Stamps.text(spark, index, GeomFile, "SignatureIndex").trim
+    require(stored == Geometry, s"$index geometry $stored != $Geometry")
   }
 
   private def bandsOf(sigs: DataFrame): DataFrame =
@@ -86,8 +75,8 @@ object SignatureIndex {
                 out: String): Unit = {
     val sigs = graft.ops.Lineage.cut(graft.queries.Sketches.signatures(docs))
     writeBatch(spark, sigs, out, 0L)
-    writeSmall(spark, out, GeomFile, Geometry)
-    writeSmall(spark, out, MarkerFile, stamp)
+    Stamps.write(spark, out, GeomFile, Geometry)
+    Stamps.write(spark, out, MarkerFile, stamp)
   }
 
   /** Near-dup candidate pairs of a new-batch frame against the index:
@@ -99,8 +88,7 @@ object SignatureIndex {
   def refreshPairs(spark: SparkSession, newDocs: DataFrame, index: String,
                    minEst: Double = 0.7): DataFrame = {
     graft.functions.VectorExprs.register(spark)
-    require(readSmall(spark, index, GeomFile).trim == Geometry,
-      s"$index geometry ${readSmall(spark, index, GeomFile).trim} != $Geometry")
+    requireGeometry(spark, index)
     val newSigs = graft.ops.Lineage.cut(
       graft.queries.Sketches.signatures(newDocs))
     val newBands = bandsOf(newSigs)
@@ -126,7 +114,7 @@ object SignatureIndex {
     val cand = graft.ops.Lineage.cut(
       kept.join(newBands, Seq("bk64", "lang"))
         .select("doc_new", "doc_old").distinct())
-    // candidate-bounded resolution with TWO thresholds (ADVICE r9): the
+    // candidate-bounded resolution with TWO thresholds: the
     // key-side gate (spark.graft.dedup.broadcastCandidates, calibrated
     // for ~32-byte digest keys) is the wrong knob for broadcasting
     // SIGNATURE rows — each carries a 128-int signature (~0.5-1 KB), so
@@ -145,7 +133,7 @@ object SignatureIndex {
     val nCand = cand.count()
     // ONE candidate-pruned oldSigs construction (key-broadcast map-side
     // semi); the gates only pick the final join shape, so the two
-    // pruned forms cannot drift apart (review r10)
+    // pruned forms cannot drift apart
     lazy val oldSigs = sigStore
       .join(broadcast(cand.select(col("doc_old").as("doc_id")).distinct()), "doc_id")
       .select(col("doc_id").as("doc_old"), col("sig").as("sig_old"))
@@ -185,8 +173,7 @@ object SignatureIndex {
   def extend(spark: SparkSession, newDocs: DataFrame, index: String,
              batchId: Long): Unit = {
     require(batchId > 0, s"batchId must be > 0 (0 is the build batch), got $batchId")
-    require(readSmall(spark, index, GeomFile).trim == Geometry,
-      s"$index geometry ${readSmall(spark, index, GeomFile).trim} != $Geometry")
+    requireGeometry(spark, index)
     val sigs = graft.ops.Lineage.cut(graft.queries.Sketches.signatures(newDocs))
     writeBatch(spark, sigs, index, batchId)
   }

@@ -521,7 +521,7 @@ object Extras {
     dqDeltaFrames(o.where(isPrev), o.where(!isPrev))
   }
 
-  /** dq_manifest — the "what did I actually ship" card (VERDICT r7 #5):
+  /** dq_manifest — the "what did I actually ship" card:
     * deliver orders split into the same two md5-bucket versions dq_drift
     * and dq_delta read, as a version-partitioned parquet with a PINNED
     * file layout (repartition on the partition column → exactly one file
@@ -544,19 +544,10 @@ object Extras {
     * n_files with it) — the layout pin is per-job config, the census
     * machinery is unchanged. */
   val dqManifest: Q = (s, d) => {
-    // fixed per-(session, dataset) delivery dir + overwrite, not a fresh
-    // temp dir per call: the bench runs this hermetically 4×/round and
-    // Verify/tests add more — an unbounded createTempDirectory would
-    // leak one full orders copy per invocation on the shared box
-    // (review, r8). Keyed by a hash of the dataset dir too: the write
-    // is eager but the returned frame READS the path lazily, so a
-    // dataset-independent dir would silently re-bind an earlier
-    // invocation's frame to whichever dataset was delivered last
-    // (review, r8 second pass)
-    val dKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_manifest_${s.sparkContext.applicationId}_$dKey").toString
+    // a fixed per-(session, dataset) delivery dir + overwrite
+    // (Tables.scratchDir): the write is eager but the returned frame
+    // reads the path lazily
+    val tmp = Tables.scratchDir(s, d, "manifest")
     val bucket = conv(substring(md5(col("o_orderkey").cast("string")), 1, 6), 16, 10)
       .cast("long") % 100
     val out = Tables.orders(s, d)

@@ -34,7 +34,7 @@ import graft.ops.Det._
   */
 object Graphs {
 
-  /** Materialized graph views, PARQUET-backed (round 10). Seven graph
+  /** Materialized graph views, PARQUET-backed. Seven graph
     * queries derive from the SAME co-purchase edge extraction (and its
     * sparsified/oriented sub-views); rebuilding the link graph from the
     * fact table inside every query is the unrealistic posture — a
@@ -52,8 +52,7 @@ object Graphs {
     * is safe, and the view is published by ATOMIC RENAME of a
     * process-unique temp dir (publish() below) — concurrent sessions
     * landing on one scratch key each build privately and exactly one
-    * rename wins, so a reader never observes a half-written view
-    * (round 11; previously a documented single-writer constraint).
+    * rename wins, so a reader never observes a half-written view.
     * The double-checked lock is reentrant, so nested view builds
     * (oriented ← kept ← edges) are safe. */
   private val viewLock = new Object
@@ -66,7 +65,7 @@ object Graphs {
     // shifts the scratch dir (the abandoned old view is bounded by the
     // number of regenerations and lives in tmp)
     val src = new java.io.File(d, "lineitem.parquet")
-    Scans.scratchDir(s, d,
+    Tables.scratchDir(s, d,
       s"gview_${tag}_${java.lang.Long.toHexString(src.lastModified())}")
   }
 
@@ -74,62 +73,59 @@ object Graphs {
                    tag: String)(build: => DataFrame): DataFrame = {
     val dir = viewDir(s, d, tag)
     val done = new java.io.File(dir, "_SUCCESS")
+    // published by rename (publishFrame): an in-place overwrite would let
+    // a second writer on the same scratch key expose a half-written view
     if (!done.exists) viewLock.synchronized {
-      if (!done.exists) {
-        // Build into a process-unique sibling, then atomically rename
-        // into place (VERDICT r10 #4): the old in-place overwrite was
-        // single-writer — a second JVM landing on the same scratch key
-        // could read a half-overwritten view. With rename(2) publish,
-        // readers only ever see an absent or a COMPLETE view; the
-        // losing writer discards its copy (publish() below).
-        val tmp = new java.io.File(
-          dir + s".tmp_${ProcessHandle.current().pid()}_${System.nanoTime()}")
-        build.write.mode("overwrite").parquet(tmp.getPath)
-        // a false return means neither our rename nor any competitor's
-        // produced a complete view — fail HERE with the cause instead
-        // of letting the read below throw an opaque PATH_NOT_FOUND
-        // (review r11)
-        require(publish(tmp, new java.io.File(dir)),
-          s"graph view publish failed: could not install a complete view at $dir")
-      }
+      if (!done.exists) publishFrame(build, new java.io.File(dir), "graph view")
     }
     s.read.parquet(dir)
   }
 
-  /** Atomically publish a fully-written view dir: rename `tmp` over
-    * `dir`. rename(2) is atomic on one filesystem and tmp is created as
-    * a sibling of dir, so readers never observe a partial view. A
-    * competitor that published a complete view first wins (our tmp is
+  /** Atomically publish a fully-written view dir: rename `staged` over
+    * `dir`. rename(2) is atomic on one filesystem and `staged` is a
+    * sibling of dir, so readers never observe a partial view. A
+    * competitor that published a complete view first wins (our copy is
     * discarded); a stale target without _SUCCESS (crash residue — a
     * live competitor can never leave that state, it also publishes by
     * rename) is MOVED ASIDE by another atomic rename and the publish
     * retried — never deleted in place, so even if a competitor's
     * complete view lands in the race window it is displaced whole by
     * our own complete copy, and a reader-visible dir is always either
-    * absent or complete (review r11; the in-place rmRf had a TOCTOU
-    * that could file-by-file-delete a just-published view). Returns
-    * true iff `dir` holds a complete view on exit. Exposed
-    * package-private for GraphSpec's race tests.
+    * absent or complete (an in-place delete of the stale target could
+    * file-by-file delete a just-published view). Returns true iff `dir`
+    * holds a complete view on exit. Exposed package-private for
+    * GraphSpec's race tests.
     *
-    * Scope note (review r12): today the scratch key embeds the Spark
-    * applicationId (Scans.scratchDir), so two PROCESSES never share a
+    * Scope note: today the scratch key embeds the Spark
+    * applicationId (Tables.scratchDir), so two PROCESSES never share a
     * view dir and same-JVM sessions serialize on viewLock — the
     * cross-writer arm of this protocol is defense-in-depth, exercised
     * directly by GraphSpec's publish()-level race tests rather than
     * reachable through view(). It becomes the live protocol the day the
     * appId is dropped from the key for intentional cross-process view
     * sharing on a shared scratch root (`spark.graft.scratch.root`). */
-  private[graft] def publish(tmp: java.io.File, dir: java.io.File): Boolean = {
+  private[graft] def publish(staged: java.io.File, dir: java.io.File): Boolean = {
     def complete = new java.io.File(dir, "_SUCCESS").exists()
-    var ok = tmp.renameTo(dir)
+    var ok = staged.renameTo(dir)
     if (!ok && !complete) {
       val aside = new java.io.File(
         dir.getPath + s".stale_${ProcessHandle.current().pid()}_${System.nanoTime()}")
       if (dir.renameTo(aside)) Scans.rmRf(aside)
-      ok = tmp.renameTo(dir)
+      ok = staged.renameTo(dir)
     }
-    if (!ok) Scans.rmRf(tmp)
+    if (!ok) Scans.rmRf(staged)
     ok || complete
+  }
+
+  /** Write `df` as parquet to a sibling of `dir` unique to this call
+    * (a random UUID: two threads landing one table at once never share
+    * it) and publish it there. Fails naming `what` when no complete copy
+    * lands, so the caller never goes on to an opaque PATH_NOT_FOUND on
+    * read. */
+  private[graft] def publishFrame(df: DataFrame, dir: java.io.File, what: String): Unit = {
+    val tmp = new java.io.File(dir.getPath + s".tmp_${java.util.UUID.randomUUID()}")
+    df.write.mode("overwrite").parquet(tmp.getPath)
+    require(publish(tmp, dir), s"$what publish failed: could not install a complete copy at $dir")
   }
 
   /** The undirected co-purchase edge set, one row per UNORDERED pair
@@ -176,24 +172,14 @@ object Graphs {
     * query prices making it. */
   val graphEdgesBuild: Q = (s, d) => {
     val dir = viewDir(s, d, "edges")
+    // A fresh FULL build, published like every other view write: an
+    // in-place overwrite could yank data files out from under a reader
+    // of the published view. The view content is deterministic from the
+    // mtime-stamped dataset, so if a complete view already exists the
+    // rename loses and our copy is discarded — the BUILD (extract +
+    // parquet write) is still fully priced, which is this query's job.
     viewLock.synchronized {
-      // Fresh FULL build into a private sibling, atomically published
-      // like every other view write (review r11: the old in-place
-      // overwrite here bypassed publish() and could yank data files out
-      // from under a concurrent reader of the published view). The view
-      // content is deterministic from the mtime-stamped dataset, so if
-      // a complete view already exists the rename loses and our copy is
-      // discarded — the BUILD (extract + parquet write) is still fully
-      // priced, which is this query's whole job; readers never observe
-      // a partial or vanishing dir either way.
-      val tmp = new java.io.File(
-        dir + s".tmp_${ProcessHandle.current().pid()}_${System.nanoTime()}")
-      rawCopurchaseEdges(s, d).write.mode("overwrite").parquet(tmp.getPath)
-      // mirror view(): a pathological publish failure must fail HERE
-      // with its cause, not as an opaque PATH_NOT_FOUND on the read
-      // below (review r12)
-      require(publish(tmp, new java.io.File(dir)),
-        s"graph view publish failed: could not install a complete view at $dir")
+      publishFrame(rawCopurchaseEdges(s, d), new java.io.File(dir), "graph view")
     }
     val edges = s.read.parquet(dir)
     val nodes = edges.select(col("src").as("n"))

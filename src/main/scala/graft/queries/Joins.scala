@@ -235,19 +235,14 @@ object Joins {
   val joinBucketed: Q = (s, d) => {
     // through the delivery surface (delivery/Deliver.copyBucketed), so
     // the query prices and exercises the layout step the product ships;
-    // a FIXED per-(session, dataset) external location + overwrite, not
-    // a fresh temp dir per call — the bench runs this 4×/round and an
-    // unbounded createTempDirectory would strand a projected fact-table
-    // copy per invocation (dq_manifest discipline; review r8). The
-    // CATALOG names carry the same dataset key as the location (ADVICE
-    // r8): session-global fixed names would let interleaved invocations
-    // for two datasets in one session race on DROP TABLE/saveAsTable —
-    // one call's delivered frame dropped out from under the other's
-    // not-yet-executed join.
-    val dKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_bkt_${s.sparkContext.applicationId}_$dKey").toString
+    // a fixed per-(session, dataset) external location + overwrite
+    // (Tables.scratchDir). The CATALOG names carry the same dataset key
+    // as the location: session-global fixed names would let interleaved
+    // invocations for two datasets in one session race on DROP
+    // TABLE/saveAsTable — one call's delivered frame dropped out from
+    // under the other's not-yet-executed join.
+    val tmp = Tables.scratchDir(s, d, "bkt")
+    val dKey = Tables.datasetKey(d)
     // source via Tables.servingPath: the bucketed layout is built FROM
     // the warehouse's serving copy (layout-normalized when the raw
     // source is a single-row-group file), like every other reader —

@@ -14,38 +14,6 @@ import graft.ops.Det._
   */
 object Scans {
 
-  /** Fixed per-(session, dataset, tag) scratch directory for the
-    * roundtrip queries. A fresh `createTempDirectory` per invocation
-    * strands one table copy per call (4 bench passes/round + Verify +
-    * tests — review r8 fixed join_bucketed/dq_manifest/source_binary,
-    * this back-ports the same discipline, VERDICT r8 #3); a FIXED dir
-    * plus `mode("overwrite")` bounds the footprint to one copy per
-    * (session, dataset) and the overwrite delete guarantees no stale
-    * file from a larger prior corpus survives into the read-back.
-    *
-    * Root placement is a conf (`spark.graft.scratch.root`, default
-    * `java.io.tmpdir` — VERDICT r11 #7): a multi-tenant box or a real
-    * cluster points it at shared durable storage (an HDFS/S3A URI works
-    * once the path math moves to Hadoop Path; here the local-FS form
-    * covers the local[*] posture). The key embeds the Spark
-    * applicationId, so two PROCESSES never share a scratch dir even
-    * under a shared root — Graphs.publish()'s cross-writer rename
-    * protocol is therefore defense-in-depth today; dropping the appId
-    * from the key is the (supported) switch that would turn it into the
-    * live cross-process view-sharing protocol. */
-  private[queries] def scratchDir(s: org.apache.spark.sql.SparkSession,
-                                  d: String, tag: String): String = {
-    val dKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val root = s.conf.get("spark.graft.scratch.root",
-      sys.props("java.io.tmpdir"))
-    val dir = new java.io.File(root,
-      s"graft_${tag}_${s.sparkContext.applicationId}_$dKey")
-    dir.mkdirs()
-    Tables.ownScratch(s, dir)
-    dir.toString
-  }
-
   /** Plain recursive unlink — commons-io's deleteQuietly walks with
     * per-file symlink/type checks that cost ~0.5 s over 5000 entries
     * (BASELINE.md, round-10 source_binary bisect). Shared by every
@@ -76,7 +44,7 @@ object Scans {
     * then aggregate; oracle aggregates the original table, so the roundtrip
     * must be lossless to match. */
   val sinkParquet: Q = (s, d) => {
-    val tmp = scratchDir(s, d, "sink")
+    val tmp = Tables.scratchDir(s, d, "sink")
     Tables.lineitem(s, d).write.mode("overwrite").parquet(s"$tmp/lineitem")
     s.read.parquet(s"$tmp/lineitem")
       .groupBy("l_returnflag")
@@ -89,7 +57,7 @@ object Scans {
     * Roundtrip: parquet → csv → explicit-schema read → aggregate. Java's
     * shortest-roundtrip double formatting makes the hop lossless. */
   val sourceCsv: Q = (s, d) => {
-    val tmp = scratchDir(s, d, "csv")
+    val tmp = Tables.scratchDir(s, d, "csv")
     Tables.orders(s, d)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
       .write.mode("overwrite").option("header", "true").csv(s"$tmp/orders")
@@ -102,7 +70,7 @@ object Scans {
 
   /** source_json — same shape over JSON-lines with explicit schema. */
   val sourceJson: Q = (s, d) => {
-    val tmp = scratchDir(s, d, "json")
+    val tmp = Tables.scratchDir(s, d, "json")
     Tables.events(s, d)
       .select("event_id", "user_id", "event_type", "value")
       .write.mode("overwrite").json(s"$tmp/events")
@@ -118,7 +86,7 @@ object Scans {
     * later partition pruning free; here the read-back aggregate proves the
     * copy was lossless. */
   val copyPartitioned: Q = (s, d) => {
-    val tmp = scratchDir(s, d, "copy")
+    val tmp = Tables.scratchDir(s, d, "copy")
     Tables.lineitem(s, d)
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(s"$tmp/li")
     s.read.parquet(s"$tmp/li")
@@ -132,7 +100,7 @@ object Scans {
     * oracle aggregates the original parquet — the roundtrip must be
     * lossless to match, same upgrade as source_csv/source_json). */
   val sourceOrc: Q = (s, d) => {
-    val tmp = scratchDir(s, d, "orc")
+    val tmp = Tables.scratchDir(s, d, "orc")
     Tables.part(s, d).write.mode("overwrite").orc(s"$tmp/part")
     s.read.orc(s"$tmp/part")
       .groupBy("p_type")
@@ -150,7 +118,7 @@ object Scans {
     * as source_csv/orc. Scale: the text source splits by line across
     * executors like every Hadoop FileSystem format. */
   val sourceText: Q = (s, d) => {
-    val tmp = scratchDir(s, d, "text")
+    val tmp = Tables.scratchDir(s, d, "text")
     Tables.documents(s, d)
       .select(concat_ws("\t", col("doc_id"), col("lang"), col("text")).as("value"))
       .write.mode("overwrite").text(s"$tmp/docs")
@@ -185,8 +153,8 @@ object Scans {
     // fixed per-(session, dataset) PARENT with a fresh CHILD dir per
     // call, previous children swept at ENTRY: a bare fresh temp dir per
     // call would strand one file-per-doc payload copy per invocation
-    // (4 bench passes/round + Verify/tests — review r8), while reusing
-    // ONE fixed dir (the r9 form) measured 2.6× slower end-to-end
+    // (every bench pass, Verify and the tests), while reusing
+    // ONE fixed dir measured 2.6× slower end-to-end
     // (1.32 vs 0.50 s; BASELINE.md, round-10 source_binary bisect)
     // because ext4 directory htrees never shrink — 5000 unlink+create
     // cycles bloat the inode and every subsequent create/listing walks
@@ -194,7 +162,7 @@ object Scans {
     // footprint to one corpus copy; the child gives each pass a compact
     // directory. The returned frame reads the path LAZILY, so the sweep
     // must never run at the END of this function.
-    val parent = new java.io.File(scratchDir(s, d, "bin"))
+    val parent = new java.io.File(Tables.scratchDir(s, d, "bin"))
     parent.listFiles.foreach(rmRf)
     val dir = new java.io.File(parent, java.lang.Long.toHexString(System.nanoTime()))
     dir.mkdirs()
@@ -248,7 +216,7 @@ object Scans {
     * and the read-back aggregate proves content-losslessness (oracle
     * aggregates the original table and pins the expected file counts). */
   val copyCompact: Q = (s, d) => {
-    val tmp = scratchDir(s, d, "compact")
+    val tmp = Tables.scratchDir(s, d, "compact")
     val src = Tables.orders(s, d)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
     src.repartition(64)
@@ -262,12 +230,7 @@ object Scans {
     val nFiles = math.max(1L, (rows + 19999) / 20000).toInt
     back.repartition(nFiles).write.mode("overwrite").parquet(s"$tmp/compact")
     val compacted = s.read.schema(src.schema).parquet(s"$tmp/compact")
-    def dataFiles(p: String): Long = {
-      val fs = new org.apache.hadoop.fs.Path(p)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.listStatus(new org.apache.hadoop.fs.Path(p))
-        .count(_.getPath.getName.endsWith(".parquet")).toLong
-    }
+    def dataFiles(p: String): Long = graft.Stamps.dataFiles(s, p).size.toLong
     val (before, after) = (dataFiles(s"$tmp/small"), dataFiles(s"$tmp/compact"))
     compacted
       .agg(count(lit(1)).as("n_rows"), sumR4(col("o_totalprice")).as("sum_total"))
@@ -292,7 +255,7 @@ object Scans {
     * first — the zero-delta refresh cost, not the delivery cost this
     * query prices. */
   val sinkStream: Q = (s, d) => {
-    val tmp = scratchDir(s, d, "stream")
+    val tmp = Tables.scratchDir(s, d, "stream")
     new java.io.File(tmp).listFiles.foreach(rmRf)
     // file streams need an explicit schema (no inference pass) and a
     // DIRECTORY source (a bare file path fails basePath validation):
@@ -301,7 +264,7 @@ object Scans {
     // Footer schema is RAW; the loader's one NTZ normalization applies
     // on top.
     //
-    // Layout note (r12, caught by the ×10 scale-oracle arm): the
+    // Layout note (caught by the ×10 scale-oracle arm): the
     // pristine fixtures ship events.parquet as a single FILE, which the
     // pathGlobFilter-over-dataset-dir form streams fine — but a
     // Spark-WRITTEN table is a DIRECTORY of part files whose leaf names

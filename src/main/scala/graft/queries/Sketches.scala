@@ -137,51 +137,6 @@ object Sketches {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** llm_ann_pq — product-quantization ANN (Jégou/Douze/Schmid,
-    * "Product Quantization for Nearest Neighbor Search", IEEE TPAMI
-    * 2011 — the public method behind every billion-vector FAISS IVF-PQ
-    * deployment). Vectors are split into M subspaces; each subspace
-    * gets a K-centroid codebook trained by Lloyd iterations; a vector's
-    * code is M bytes (nearest centroid per subspace) — 64-d float32
-    * compresses 32× to 8 bytes. Queries rank candidates by ADC
-    * (asymmetric distance): per query a bounded M×K table of
-    * query-to-centroid partial distances, approximate d² = sum of M
-    * table lookups over the candidate's code. Output: top-3 neighbours
-    * per query (qid < 10) by approximate d², ties by vid.
-    *
-    * No oracle by declared design (a k-means codebook is
-    * engine-specific, like the minhash/simhash signatures); PqSpec
-    * gates ADC error against exact d², pins recall@3 vs the exact
-    * answer, run-to-run determinism, and the bounded-codebook plan.
-    *
-    * Default geometry M=16 / K=64 / 2 rounds calibrated by PqCalibrate
-    * at sf0.001 (the fixture's random vectors are PQ's WORST case — no
-    * cluster structure to exploit): mean relative ADC error 0.154 /
-    * max 0.264 / recall@3 0.43, vs 0.40/0.51/0.10 at the textbook
-    * M=8/K=16 start (a third round buys 0.154 → 0.138 for ~0.7 s of
-    * suite wall); the sweep showed relErr monotone in M·log₂K while recall on
-    * 30 near-equidistant ground-truth slots is noisy — so the spec
-    * gates lean on the DISTANCE error, with a loose recall floor.
-    * Geometry changes MUST re-run PqCalibrate and re-pin (the
-    * SimhashCalibrate rule, VERDICT r3 #1).
-    *
-    * Scale shape (the 100 TB story): training touches the corpus
-    * O(iters) times but every shuffle is BOUNDED — assignment is a
-    * broadcast join against the ≤M·K-row codebook followed by a
-    * min_by agg (map-side combined), the centroid update aggregates to
-    * ≤M·K·subDim rows. Encoding is one more broadcast-assign; the ADC
-    * scan is one pass over the codes with the per-query tables
-    * broadcast (≤nq·M·K rows by construction), partial-agg'd into
-    * per-(query, candidate) sums and a bounded TopKAgg — no shuffle
-    * ever carries corpus-sized vector payloads, only M-byte codes.
-    * (In production the train corpus is a sample; the conf'd geometry
-    * here trains on the full fixture for determinism.)
-    *
-    * Determinism discipline: centroid means and ADC sums accumulate as
-    * exact scaled integers (floor(x·1e9 + 0.5) longs — order-free),
-    * so codebooks and rankings are pure functions of the corpus, not
-    * of task scheduling; init is the K lowest-id vectors per subspace.
-    */
   /** The PQ pipeline pieces, shared verbatim by llm_ann_pq (hermetic
     * in-query form) and pipelines.PqIndex (the delivery artifact) — the
     * Sketches.signatures/BandKeysExpr precedent: one construction, so
@@ -431,13 +386,58 @@ object Sketches {
   /** llm_ann_pq's query batch: the vectors with vec_id below it. */
   val AnnPqQueries = 10
 
+  /** llm_ann_pq — product-quantization ANN (Jégou/Douze/Schmid,
+    * "Product Quantization for Nearest Neighbor Search", IEEE TPAMI
+    * 2011 — the public method behind every billion-vector FAISS IVF-PQ
+    * deployment). Vectors are split into M subspaces; each subspace
+    * gets a K-centroid codebook trained by Lloyd iterations; a vector's
+    * code is M bytes (nearest centroid per subspace) — 64-d float32
+    * compresses 32× to 8 bytes. Queries rank candidates by ADC
+    * (asymmetric distance): per query a bounded M×K table of
+    * query-to-centroid partial distances, approximate d² = sum of M
+    * table lookups over the candidate's code. Output: top-3 neighbours
+    * per query (qid < 10) by approximate d², ties by vid.
+    *
+    * No oracle by declared design (a k-means codebook is
+    * engine-specific, like the minhash/simhash signatures); PqSpec
+    * gates ADC error against exact d², pins recall@3 vs the exact
+    * answer, run-to-run determinism, and the bounded-codebook plan.
+    *
+    * Default geometry M=16 / K=64 / 2 rounds calibrated by PqCalibrate
+    * at sf0.001 (the fixture's random vectors are PQ's WORST case — no
+    * cluster structure to exploit): mean relative ADC error 0.154 /
+    * max 0.264 / recall@3 0.43, vs 0.40/0.51/0.10 at the textbook
+    * M=8/K=16 start (a third round buys 0.154 → 0.138 for ~0.7 s of
+    * suite wall); the sweep showed relErr monotone in M·log₂K while recall on
+    * 30 near-equidistant ground-truth slots is noisy — so the spec
+    * gates lean on the DISTANCE error, with a loose recall floor.
+    * Geometry changes MUST re-run PqCalibrate and re-pin (the
+    * SimhashCalibrate rule).
+    *
+    * Scale shape (the 100 TB story): training touches the corpus
+    * O(iters) times but every shuffle is BOUNDED — assignment is a
+    * broadcast join against the ≤M·K-row codebook followed by a
+    * min_by agg (map-side combined), the centroid update aggregates to
+    * ≤M·K·subDim rows. Encoding is one more broadcast-assign; the ADC
+    * scan is one pass over the codes with the per-query tables
+    * broadcast (≤nq·M·K rows by construction), partial-agg'd into
+    * per-(query, candidate) sums and a bounded TopKAgg — no shuffle
+    * ever carries corpus-sized vector payloads, only M-byte codes.
+    * (In production the train corpus is a sample; the conf'd geometry
+    * here trains on the full fixture for determinism.)
+    *
+    * Determinism discipline: centroid means and ADC sums accumulate as
+    * exact scaled integers (floor(x·1e9 + 0.5) longs — order-free),
+    * so codebooks and rankings are pure functions of the corpus, not
+    * of task scheduling; init is the K lowest-id vectors per subspace.
+    */
   val llmAnnPq: Q = (s, d) => {
     graft.functions.VectorExprs.register(s)
     val (m, k, iters) = Pq.geometry(s)
     // subvector stream re-read every Lloyd round — cut once
     val sv = graft.ops.Lineage.cut(Pq.subvectors(Tables.embeddings(s, d), m))
     val cb = Pq.train(sv, k, iters, m)
-    // Packed ADC scan (round 14) — the IVFADC shape every other ADC
+    // Packed ADC scan — the IVFADC shape every other ADC
     // consumer already shared (PqIndex.search, the densePairs pq/ivfpq
     // candidate modes): codes pack to one M-int array per vector, the
     // per-query tables nest to tab[sub][code], and each (query, vector)

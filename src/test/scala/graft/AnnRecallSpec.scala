@@ -80,7 +80,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("llm_semdedup drops exactly the later copy of a near-parallel pair and keeps orthogonal vectors") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_semdedup").toString
+    val tmp = tempDir("graft_semdedup")
     // 64-dim like the fixture. v2 = 1.2·v1 (cos exactly 1, same sign
     // bucket by construction); v3 flips the bucket-defining dims and is
     // near-orthogonal to both (cos ≈ -0.03).
@@ -146,7 +146,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
     // in range, the census partitions the corpus exactly, shares sum
     // to 1, and probing stays an equi-join (distinct masks)
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("ann_wide").toString
+    val tmp = tempDir("ann_wide")
     val rnd = new scala.util.Random(7)
     (0 until 400).map { i =>
       (i.toLong, Array.fill(128)(rnd.nextFloat() * 2 - 1), i % 5)
@@ -176,7 +176,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
     // bits (needs dim 17) must raise, not NULL-bucket into an empty
     // probe join (ADVICE r5)
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("ann_dim").toString
+    val tmp = tempDir("ann_dim")
     Seq((1L, Array(1.0f, 0.5f, -0.25f, 0.125f), 0),
         (2L, Array(-1.0f, 0.5f, 0.25f, -0.125f), 1))
       .toDF("vec_id", "embedding", "label")

@@ -18,7 +18,7 @@ import org.scalatest.matchers.should.Matchers
 class CollapseSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   private lazy val dupDir: String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_dup").toString
+    val base = tempDir("graft_dup")
     val docs = Tables.documents(spark, sfDir)
     val n = docs.count()
     val dups = (1 to 2).map { i =>

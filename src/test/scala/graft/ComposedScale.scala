@@ -30,7 +30,7 @@ object ComposedScale {
       sys.env.get("SPARK_GRAFT_SHUFFLE").map("spark.sql.shuffle.partitions" -> _).toSeq: _*)
     val src = args.headOption.orElse(sys.env.get("SPARK_GRAFT_SCALE_DIR"))
       .getOrElse("/tmp/graft_scale_x10")
-    val work = java.nio.file.Files.createTempDirectory("graft_composed").toString
+    val work = SparkFixture.tempDir("graft_composed")
 
     def timed[T](fn: => T): (Double, T) = {
       val t0 = System.nanoTime()

@@ -35,7 +35,7 @@ class ContaminationSpec extends AnyFunSuite with Matchers with SparkFixture {
         (id, text(id, k), "en", "synth", 0L)
       } ++
       test.zipWithIndex.map { case (id, i) => (id, text(id, i.toLong), "en", "synth", 0L) }
-    val dir = java.nio.file.Files.createTempDirectory("contam").toString
+    val dir = tempDir("contam")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     (dir, train, test)

@@ -86,7 +86,7 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("CorpusPrepMain CLI writes a split-partitioned corpus with a consistent manifest") {
-    val tmp = java.nio.file.Files.createTempDirectory("prep_cli").toString
+    val tmp = tempDir("prep_cli")
     val manifest = graft.pipelines.CorpusPrepMain.run(spark, sfDir, tmp)
     manifest should include(""""rows_in":500""")
     // partition pruning must work on the delivered layout
@@ -101,7 +101,7 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("sync re-delivery of an appended train-only batch rewrites only split=train") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("prep_sync").toString
+    val tmp = tempDir("prep_sync")
     // v1 = the fixture corpus, copied so v2 can append to it
     Tables.documents(spark, sfDir).write.parquet(s"$tmp/src_v1/documents.parquet")
     val (c1, s1, r1) = graft.pipelines.CorpusPrepMain.sync(spark, s"$tmp/src_v1", s"$tmp/out")
@@ -179,7 +179,7 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("span-dup gate (spanDupMax) drops later mostly-copied docs, keeps the earliest") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_spangate").toString
+    val dir = tempDir("graft_spangate")
     def toks(p: String, a: Int, b: Int) = (a until b).map(i => s"$p$i").mkString(" ")
     val shared = toks("w", 0, 16)
     Seq(
@@ -200,7 +200,7 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("containment gate (containMax) drops the contained doc, keeps the container") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_contgate").toString
+    val dir = tempDir("graft_contgate")
     def toks(p: String, a: Int, b: Int) = (a until b).map(i => s"$p$i").mkString(" ")
     Seq(
       (0L, toks("w", 0, 10) + " " + toks("x", 0, 20), "en", "s", 0L), // the container
@@ -220,7 +220,7 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("per-site cap (domainCap) keeps K lowest ids per domain, composes with the quality gate") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_capgate").toString
+    val dir = tempDir("graft_capgate")
     // doc 0 is all-rare (every token a corpus singleton → strictly the
     // highest unigram xent); docs 1-4 are mostly the common token 'the'
     Seq(
@@ -244,7 +244,7 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("relative LM gate (xentQuantileMax) cuts each language's own tail, not a global one") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_qgate").toString
+    val dir = tempDir("graft_qgate")
     // en has a common-token low tier and an all-singleton high tier; BOTH
     // de docs are all-singleton — every de xent sits above en's low tier,
     // so a global median would wipe the language out; the per-lang median
@@ -264,7 +264,7 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("composed with xentMax, the quantile gate ranks the SURVIVORS, not the raw corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_qgate_comp").toString
+    val dir = tempDir("graft_qgate_comp")
     // four en docs with strictly increasing xent (fewer common 'the'
     // tokens → higher surprise): x0 < x1 < x2 < x3. xentMax gates doc 3;
     // the 0.5-quantile must then rank the 3 SURVIVORS (median = x1 →
@@ -290,7 +290,7 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("decontamination gate (decontamMax) drops leaking train docs, never the benchmark") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_decongate").toString
+    val dir = tempDir("graft_decongate")
     def toks(p: String, a: Int, b: Int) = (a until b).map(i => s"$p$i").mkString(" ")
     // md5-bucket split rule: doc_id 2 lands in the test split, 0/1 in
     // train. Doc 0 embeds the whole benchmark doc plus 4 extra tokens:
@@ -315,7 +315,7 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("decontamination gate: df-capped boilerplate shingles never count as contamination") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_deconcap").toString
+    val dir = tempDir("graft_deconcap")
     def toks(p: String, a: Int, b: Int) = (a until b).map(i => s"$p$i").mkString(" ")
     // two train docs (0 and 3) both embed the benchmark text, so each
     // benchmark shingle has train-df 2; with the shared boilerplate cap
@@ -340,7 +340,7 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("attrition census: active stages in order, counts consistent with the prep itself") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr").toString
+    val dir = tempDir("graft_attr")
     def toks(p: String, a: Int, b: Int) = (a until b).map(i => s"$p$i").mkString(" ")
     val bench = toks("b", 0, 12)
     Seq(
@@ -371,7 +371,7 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
   test("corpus report datasheet is consistent with the operators it composes") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_card").toString
+    val dir = tempDir("graft_card")
     val good = (1 to 60).map(i => s"word$i").mkString(" ")
     Seq(
       (0L, good, "en", "s", 0L),
@@ -403,7 +403,7 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
     // ADVICE r6: lang comes from the data — a quote/backslash/control
     // char must emit a VALID card line, not break the JSON
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_card_esc").toString
+    val dir = tempDir("graft_card_esc")
     Seq((0L, "a b c", "e\"n\\x\n", "s", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -428,7 +428,7 @@ class CorpusPrepSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("corpus report on an empty corpus is the well-defined zero card") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_card0").toString
+    val dir = tempDir("graft_card0")
     Seq.empty[(Long, String, String, String, Long)]
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

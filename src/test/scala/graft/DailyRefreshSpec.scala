@@ -25,7 +25,7 @@ class DailyRefreshSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("day-1 bootstrap then day-2 incremental refresh: exact delta, byte-stable splits, rebuild-equal output") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("daily").toString
+    val tmp = tempDir("daily")
     val (src, out, art) = (s"$tmp/src", s"$tmp/out", s"$tmp/pairs")
     val day1 = Tables.documents(spark, sfDir)
     day1.write.parquet(s"$src/documents.parquet")
@@ -142,7 +142,7 @@ class DailyRefreshSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("refreshFlow without --refresh refuses an artifact stamped for another corpus") {
-    val tmp = java.nio.file.Files.createTempDirectory("daily_guard").toString
+    val tmp = tempDir("daily_guard")
     Tables.documents(spark, sfDir).limit(50)
       .write.parquet(s"$tmp/other/documents.parquet")
     pipelines.PairTable.write(spark, s"$tmp/other", s"$tmp/art")
@@ -154,7 +154,7 @@ class DailyRefreshSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("updateIncremental fails loudly on an unstamped prev and on in-place overwrite") {
-    val tmp = java.nio.file.Files.createTempDirectory("daily_prev").toString
+    val tmp = tempDir("daily_prev")
     // a hand-rolled parquet with the right SCHEMA but no corpus stamp
     // must not be laundered into a re-stamped artifact (ADVICE r5)
     import spark.implicits._

@@ -14,7 +14,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
     "o_orderkey LONG, o_custkey LONG, o_orderstatus STRING, o_totalprice DOUBLE, o_orderpriority STRING"
 
   test("parquet → partitioned parquet copy is lossless and verifiable") {
-    val tmp = Files.createTempDirectory("dlv").toString
+    val tmp = tempDir("dlv")
     val report = Deliver.copy(spark, s"$sfDir/lineitem.parquet", s"$tmp/li",
       partitionBy = Seq("l_returnflag"))
     report.rows shouldBe Tables.lineitem(spark, sfDir).count()
@@ -44,7 +44,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("Validate.profile is an equality witness across a delivered copy") {
-    val tmp = Files.createTempDirectory("dlv_prof").toString
+    val tmp = tempDir("dlv_prof")
     Deliver.copy(spark, s"$sfDir/orders.parquet", s"$tmp/o",
       partitionBy = Seq("o_orderstatus"))
     def prof(path: String) = graft.delivery.Validate.profile(
@@ -59,7 +59,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("prunePartitions enforces retention: dry-run lists, real run deletes only failing partitions") {
-    val tmp = Files.createTempDirectory("dlv_prune").toString
+    val tmp = tempDir("dlv_prune")
     Deliver.copy(spark, s"$sfDir/orders.parquet", s"$tmp/o",
       partitionBy = Seq("o_orderstatus"))
     val before = spark.read.parquet(s"$tmp/o").count()
@@ -81,7 +81,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("DeliverMain CLI: --sync-partitions with --prune-before enforces retention post-verify") {
-    val tmp = Files.createTempDirectory("dlv_pruncli").toString
+    val tmp = tempDir("dlv_pruncli")
     // the status partitions sort F < O < P; retention keeps >= 'O'
     val (r, ok) = DeliverMain.run(spark, Array(
       s"$sfDir/orders.parquet", s"$tmp/o",
@@ -94,7 +94,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
     // the printed manifest reflects the post-prune state
     r.rows shouldBe left.count()
     // dry run leaves the delivery whole
-    val tmp2 = Files.createTempDirectory("dlv_pruncli2").toString
+    val tmp2 = tempDir("dlv_pruncli2")
     val (r2, _) = DeliverMain.run(spark, Array(
       s"$sfDir/orders.parquet", s"$tmp2/o",
       "--sync-partitions", "o_orderstatus", "--prune-before", "O", "--prune-dry-run"))
@@ -115,7 +115,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("parquet → csv → parquet multi-hop delivery round-trips") {
-    val tmp = Files.createTempDirectory("dlv").toString
+    val tmp = tempDir("dlv")
     val src = Tables.orders(spark, sfDir)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
     src.write.parquet(s"$tmp/p0")
@@ -127,7 +127,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("parquet → orc → parquet cross-format delivery round-trips") {
-    val tmp = Files.createTempDirectory("dlv").toString
+    val tmp = tempDir("dlv")
     Deliver.copy(spark, s"$sfDir/orders.parquet", s"$tmp/o1", dstFormat = "orc")
     Deliver.copy(spark, s"$tmp/o1", s"$tmp/p2", srcFormat = "orc", dstFormat = "parquet")
     Deliver.verifyDelivery(spark, s"$sfDir/orders.parquet", "parquet",
@@ -135,7 +135,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("compressed deliveries round-trip (zstd and gzip parquet)") {
-    val tmp = Files.createTempDirectory("dlv").toString
+    val tmp = tempDir("dlv")
     for (codec <- Seq("zstd", "gzip")) {
       Deliver.copy(spark, s"$sfDir/orders.parquet", s"$tmp/$codec",
         writeOptions = Map("compression" -> codec))
@@ -145,7 +145,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("permissive JSON ingest quarantines corrupt records instead of failing") {
-    val tmp = Files.createTempDirectory("dlv").toString
+    val tmp = tempDir("dlv")
     val lines = Seq(
       """{"event_id": 1, "event_type": "click", "value": 1.5}""",
       """{"event_id": 2, "event_type": "view", "value": }""", // malformed
@@ -172,7 +172,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("syncPartitions rewrites only changed partitions and deletes stale ones") {
-    val tmp = Files.createTempDirectory("dlv_sync").toString
+    val tmp = tempDir("dlv_sync")
     val orders = Tables.orders(spark, sfDir)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
     orders.write.parquet(s"$tmp/src_v1")
@@ -216,7 +216,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
     // deletes every partition it does not write; the sync asks for
     // dynamic overwrite on its own writer and never sets the session key
     val key = "spark.sql.sources.partitionOverwriteMode"
-    val tmp = Files.createTempDirectory("dlv_sync_static").toString
+    val tmp = tempDir("dlv_sync_static")
     val orders = Tables.orders(spark, sfDir)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
     withConf(key -> "static") {
@@ -246,7 +246,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("syncPartitions survives hostile partition values: escaping, numeric-string inference, nulls") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("dlv_hostile").toString
+    val tmp = tempDir("dlv_hostile")
     // "05" → int-inference trap; "a b" / "x:y" → Hive path escaping;
     // null → __HIVE_DEFAULT_PARTITION__ sentinel
     val rows = Seq((1L, "05"), (2L, "05"), (3L, "a b"), (4L, "x:y"), (5L, null: String))
@@ -280,7 +280,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("syncPartitions manifest agrees with the diffing rule on all-numeric partition values") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("dlv_num").toString
+    val tmp = tempDir("dlv_num")
     // ONLY numeric strings: with type inference the dst would read back
     // as int ("05" → 5) and the reported fingerprint would diverge from
     // the src frame and from the string-normalized diff (ADVICE r5 —
@@ -301,7 +301,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("incremental delivery ships only the delta and is idempotent") {
-    val tmp = Files.createTempDirectory("dlv").toString
+    val tmp = tempDir("dlv")
     val orders = Tables.orders(spark, sfDir)
     val n = orders.count()
     // seed the destination with the even keys only
@@ -324,7 +324,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("DeliverMain CLI: partitioned parquet→parquet delivery verifies end-to-end") {
-    val tmp = Files.createTempDirectory("dlv").toString
+    val tmp = tempDir("dlv")
     val (report, ok) = graft.delivery.DeliverMain.run(spark, Array(
       s"$sfDir/orders.parquet", s"$tmp/orders",
       "--partition-by", "o_orderpriority", "--repartition", "4"))
@@ -334,7 +334,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("DeliverMain CLI: --sync-partitions runs a verified partition-diff re-delivery") {
-    val tmp = Files.createTempDirectory("dlv_cli_sync").toString
+    val tmp = tempDir("dlv_cli_sync")
     val orders = Tables.orders(spark, sfDir)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
     orders.write.parquet(s"$tmp/src")
@@ -407,7 +407,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("DeliverMain CLI: parquet→csv with schema read-back verifies; bad flag rejected") {
-    val tmp = Files.createTempDirectory("dlv").toString
+    val tmp = tempDir("dlv")
     spark.read.parquet(s"$sfDir/orders.parquet")
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
       .write.parquet(s"$tmp/src")
@@ -449,7 +449,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("verifyDelivery is false on a row-count mismatch; the manifest's one scan counts like count()") {
-    val tmp = Files.createTempDirectory("dlv_rows").toString
+    val tmp = tempDir("dlv_rows")
     val src = Tables.orders(spark, sfDir)
     src.where(col("o_orderkey") =!= src.agg(min("o_orderkey")).head().getLong(0))
       .write.parquet(s"$tmp/short")
@@ -463,7 +463,7 @@ class DeliverySpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("verifyDelivery is false on a fingerprint mismatch at an equal row count") {
-    val tmp = Files.createTempDirectory("dlv_fp").toString
+    val tmp = tempDir("dlv_fp")
     val src = spark.read.parquet(s"$sfDir/orders.parquet")
     val first = src.agg(min("o_orderkey")).head().getLong(0)
     src.withColumn("o_totalprice",

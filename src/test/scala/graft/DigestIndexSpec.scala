@@ -24,7 +24,7 @@ class DigestIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
   private lazy val docs =
     Tables.documents(spark, sfDir).withColumn("bucket", bkt(col("doc_id")))
   private lazy val indexDir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_dix").toString
+    val d = tempDir("graft_dix")
     pipelines.DigestIndex.buildFrom(spark, docs.where(col("bucket") < 80), sfDir, d)
     d
   }
@@ -73,7 +73,7 @@ class DigestIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("extend is lossless: the extended index flags its whole batch; novel rows still pass") {
     val newBatch = docs.where(col("bucket") >= 80)
-    val extended = java.nio.file.Files.createTempDirectory("graft_dix_ext").toString
+    val extended = tempDir("graft_dix_ext")
     pipelines.DigestIndex.extend(spark, newBatch, indexDir, extended)
     // every batch doc (kept or dup) is now indexed → re-refreshing the
     // same batch verdicts dup_exact = 1 everywhere
@@ -95,7 +95,7 @@ class DigestIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     // duplicates are the batch's own exact groupBy, by contract.)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_dix_stream").toString
+    val base = tempDir("graft_dix_stream")
     val day0 = docs.where(col("bucket") < 80)
     pipelines.DigestIndex.buildFrom(spark, day0, "day0", s"$base/ix_boot")
     val oldTexts = day0.select("text").limit(2).collect().map(_.getString(0))
@@ -150,7 +150,7 @@ class DigestIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
       pipelines.DigestIndex.extend(spark,
         docs.where(col("bucket") >= 80), "file:" + indexDir, indexDir + "/")
     }
-    val bare = java.nio.file.Files.createTempDirectory("graft_dix_bare").toString
+    val bare = tempDir("graft_dix_bare")
     val e = intercept[IllegalArgumentException] {
       pipelines.DigestIndex.refresh(spark, docs.limit(1), bare)
     }
@@ -169,7 +169,7 @@ class DigestIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("a chain of extends verdicts like a from-scratch buildFrom over the same documents") {
-    val base = java.nio.file.Files.createTempDirectory("graft_dix_chain").toString
+    val base = tempDir("graft_dix_chain")
     val day0 = idText(docs.where(col("bucket") < 40))
     // every batch re-sends a few day-0 texts under new ids, so their
     // digests sit in two generations (the hit set must dedup them)
@@ -196,7 +196,7 @@ class DigestIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("extend writes the same digest bytes for a batch over a 1x and a 4x index; the bloom is stored deflated") {
-    val base = java.nio.file.Files.createTempDirectory("graft_dix_bytes").toString
+    val base = tempDir("graft_dix_bytes")
     def copies(k: Int) = (0 until k).map(i => docs.select(
       (col("doc_id") + i * 1000000L).as("doc_id"),
       concat(lit(s"c$i "), col("text")).as("text"))).reduce(_ union _)
@@ -219,7 +219,7 @@ class DigestIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("a deleted ancestor generation makes refresh and extend fail loudly, naming it") {
-    val base = java.nio.file.Files.createTempDirectory("graft_dix_gone").toString
+    val base = tempDir("graft_dix_gone")
     pipelines.DigestIndex.buildFrom(spark, idText(docs.where(col("bucket") < 60)), "d0", s"$base/g0")
     pipelines.DigestIndex.extend(spark,
       idText(docs.where(col("bucket") >= 60 && col("bucket") < 80)), s"$base/g0", s"$base/g1")
@@ -237,7 +237,7 @@ class DigestIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("extend refuses to overwrite an ancestor generation of its index") {
-    val base = java.nio.file.Files.createTempDirectory("graft_dix_anc").toString
+    val base = tempDir("graft_dix_anc")
     pipelines.DigestIndex.buildFrom(spark, idText(docs.where(col("bucket") < 80)), "d0", s"$base/g0")
     val batch = idText(docs.where(col("bucket") >= 80))
     pipelines.DigestIndex.extend(spark, batch, s"$base/g0", s"$base/g1")

@@ -11,7 +11,7 @@ import org.scalatest.matchers.should.Matchers
 class EmptyInputSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
+    val dir = tempDir("graft_empty")
     Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "documents", "embeddings").foreach { t =>
       Tables.table(spark, sfDir, t).limit(0)

@@ -177,7 +177,7 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkFixture {
     // writers each built a complete private copy; exactly one rename
     // wins and the loser must (a) report the dir complete, (b) remove
     // its own copy, (c) leave the winner's files untouched
-    val base = java.nio.file.Files.createTempDirectory("graft_pub_race").toFile
+    val base = new java.io.File(tempDir("graft_pub_race"))
     def mkTmp(marker: String): java.io.File = {
       val t = new java.io.File(base, s"view.tmp_$marker"); t.mkdirs()
       java.nio.file.Files.createFile(new java.io.File(t, "_SUCCESS").toPath)
@@ -195,7 +195,7 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("publish: stale partial target (crash residue without _SUCCESS) is cleared and replaced") {
-    val base = java.nio.file.Files.createTempDirectory("graft_pub_stale").toFile
+    val base = new java.io.File(tempDir("graft_pub_stale"))
     val dir = new java.io.File(base, "view"); dir.mkdirs()
     java.nio.file.Files.createFile(new java.io.File(dir, "part-stale").toPath)
     val t = new java.io.File(base, "view.tmp_x"); t.mkdirs()
@@ -211,7 +211,7 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkFixture {
     // same never-built view concurrently; both must return the full
     // correct result, and afterwards exactly the published views exist —
     // no .tmp_* residue
-    val ds = java.nio.file.Files.createTempDirectory("graft_race_ds").toFile
+    val ds = new java.io.File(tempDir("graft_race_ds"))
     java.nio.file.Files.copy(
       new java.io.File(sfDir, "lineitem.parquet").toPath,
       new java.io.File(ds, "lineitem.parquet").toPath)
@@ -226,15 +226,18 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkFixture {
     val (ra, rb) = (fa.get(), fb.get())
     ra should not be empty
     rb shouldBe ra
-    // scope the residue check to dirs THIS JVM could have created (the
-    // scratch key embeds applicationId) — stray graft_gview_*.tmp_*
-    // residue from an unrelated process or a crashed prior run on the
-    // same box must not fail this test spuriously (review r12)
+    // look where both sessions write their views (the scratch root),
+    // and only at dirs THIS JVM could have created (the scratch key
+    // embeds applicationId) — stray graft_gview_*.tmp_* residue from an
+    // unrelated process or a crashed prior run must not fail this test
     val appId = spark.sparkContext.applicationId
-    val residue = new java.io.File(sys.props("java.io.tmpdir")).listFiles()
-      .filter(f => f.getName.startsWith("graft_gview_") &&
-        f.getName.contains(appId) && f.getName.contains(".tmp_"))
-    residue shouldBe empty
+    val root = spark.conf.get("spark.graft.scratch.root")
+    s2.conf.get("spark.graft.scratch.root") shouldBe root
+    val views = new java.io.File(root).listFiles().map(_.getName)
+      .filter(n => n.startsWith("graft_gview_") && n.contains(appId) &&
+        n.contains(Tables.datasetKey(ds.getPath)))
+    views should not be empty
+    views.filter(_.contains(".tmp_")) shouldBe empty
   }
 
   test("graph_edges_build racing concurrent readers never exposes a partial or vanishing view") {
@@ -243,7 +246,7 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkFixture {
     // lose its data files mid-scan. With the atomic republish, readers
     // must see correct, identical results on EVERY read while rebuilds
     // run, and no read may throw.
-    val ds = java.nio.file.Files.createTempDirectory("graft_rebuild_ds").toFile
+    val ds = new java.io.File(tempDir("graft_rebuild_ds"))
     java.nio.file.Files.copy(
       new java.io.File(sfDir, "lineitem.parquet").toPath,
       new java.io.File(ds, "lineitem.parquet").toPath)
@@ -271,12 +274,12 @@ class GraphSpec extends AnyFunSuite with Matchers with SparkFixture {
     // root from java.io.tmpdir to a conf (a multi-tenant box or cluster
     // points it at shared durable storage). Two roots must each receive
     // their own complete view artifacts and serve IDENTICAL results.
-    val ds = java.nio.file.Files.createTempDirectory("graft_root_ds").toFile
+    val ds = new java.io.File(tempDir("graft_root_ds"))
     java.nio.file.Files.copy(
       new java.io.File(sfDir, "lineitem.parquet").toPath,
       new java.io.File(ds, "lineitem.parquet").toPath)
-    val rootA = java.nio.file.Files.createTempDirectory("graft_rootA").toFile
-    val rootB = java.nio.file.Files.createTempDirectory("graft_rootB").toFile
+    val rootA = new java.io.File(tempDir("graft_rootA"))
+    val rootB = new java.io.File(tempDir("graft_rootB"))
     def viewsUnder(root: java.io.File) = {
       val fs = root.listFiles()
       if (fs == null) Array.empty[java.io.File]

@@ -133,7 +133,7 @@ class JaccardRecallSpec extends AnyFunSuite with Matchers with SparkFixture {
     // spark.graft.pairs.artifact short-circuits jaccardPairsUnsorted to
     // a parquet read + threshold/predicate re-apply. Pinned for the 0.8
     // operator, the artifact query itself, and the incremental consumer.
-    val out = java.nio.file.Files.createTempDirectory("pairs").toString + "/pt"
+    val out = tempDir("pairs") + "/pt"
     pipelines.PairTable.write(spark, sfDir, out)
     def run() = (
       Llm.llmJaccardPairs(spark, sfDir).collect().toSeq,

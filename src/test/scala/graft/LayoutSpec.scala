@@ -13,9 +13,9 @@ import graft.delivery.Deliver
 class LayoutSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   private def ordersCopy(prefix: String): String = {
-    val dir = Files.createTempDirectory(prefix)
-    Files.copy(Paths.get(s"$sfDir/orders.parquet"), dir.resolve("orders.parquet"))
-    dir.toString
+    val dir = tempDir(prefix)
+    Files.copy(Paths.get(s"$sfDir/orders.parquet"), Paths.get(dir, "orders.parquet"))
+    dir
   }
 
   test("layout.minRows below a table's rows re-lands it into split files holding the same rows") {

@@ -13,7 +13,7 @@ class PairTableSpec extends AnyFunSuite with Matchers with SparkFixture {
     conv(substring(md5(c.cast("string")), 1, 6), 16, 10).cast("long") % 100
 
   test("updateIncremental(prev, new batch) equals a full rebuild of the grown corpus") {
-    val tmp = java.nio.file.Files.createTempDirectory("pt_incr").toString
+    val tmp = tempDir("pt_incr")
     val docs = Tables.documents(spark, sfDir)
     // yesterday's corpus = the old (bucket < 80) docs; today adds the rest
     docs.where(bucketCol(col("doc_id")) < 80)
@@ -60,7 +60,7 @@ class PairTableSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("artifact conf can neither poison the incremental refresh nor serve a foreign corpus") {
-    val tmp = java.nio.file.Files.createTempDirectory("pt_guard").toString
+    val tmp = tempDir("pt_guard")
     Tables.documents(spark, sfDir).where(bucketCol(col("doc_id")) < 80)
       .write.parquet(s"$tmp/old/documents.parquet")
     pipelines.PairTable.write(spark, s"$tmp/old", s"$tmp/prev")
@@ -85,7 +85,7 @@ class PairTableSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("candidate-mode stamp: approximate artifacts never serve the exact contract") {
-    val tmp = java.nio.file.Files.createTempDirectory("pt_mode").toString
+    val tmp = tempDir("pt_mode")
     val (aKey, cKey) = ("spark.graft.pairs.artifact", "spark.graft.pairs.candidates")
     // build an artifact under the approximate minhash generator
     val approxDirect = withConf(cKey -> "minhash") {
@@ -118,7 +118,7 @@ class PairTableSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("refreshInPlace appends exactly updateIncremental's delta; a re-run after an interrupted refresh changes nothing") {
-    val tmp = java.nio.file.Files.createTempDirectory("pt_append").toString
+    val tmp = tempDir("pt_append")
     val (src, art) = (s"$tmp/src", s"$tmp/art")
     val docs = Tables.documents(spark, sfDir)
     val cut = docs.select("doc_id").orderBy("doc_id").collect()

@@ -14,7 +14,7 @@ import org.scalatest.matchers.should.Matchers
 class PiiScrubSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   private lazy val dir: String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_pii").toString
+    val base = tempDir("graft_pii")
     import spark.implicits._
     Seq(
       (0L, "mail a.b@ex.com or admin@1.2.3.4 host 10.0.0.1 call 555-123-4567 or 555.123.4567 x 123.456.7890", "en", "src0", 99L),

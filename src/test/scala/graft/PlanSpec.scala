@@ -88,7 +88,7 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("partitioned copy enables partition pruning on read-back") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_prune").toString
+    val tmp = tempDir("graft_prune")
     Tables.lineitem(spark, sfDir)
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(s"$tmp/li")
     val plan = planOf(spark.read.parquet(s"$tmp/li")

@@ -37,14 +37,14 @@ object PqIndexScale {
       val newV = vecs.where(col("vec_id") > cut)
       println(s"x$m: $n vectors, batch = ${newV.count()} (20%)")
 
-      val ix = java.nio.file.Files.createTempDirectory(s"graft_pqis_x$m").toString
+      val ix = SparkFixture.tempDir(s"graft_pqis_x$m")
       timed(s"x$m build(old 80%) [setup, 1 pass]") {
         pipelines.PqIndex.buildFrom(spark, oldV, dir, ix)
       }
       timed(s"x$m extend(batch 20%) — the refresh arm") {
         pipelines.PqIndex.extend(spark, newV, ix, 1L)
       }
-      val full = java.nio.file.Files.createTempDirectory(s"graft_pqif_x$m").toString
+      val full = SparkFixture.tempDir(s"graft_pqif_x$m")
       timed(s"x$m buildFrom(union) — the from-scratch anchor [1 pass]") {
         pipelines.PqIndex.buildFrom(spark, vecs, dir, full)
       }
@@ -73,7 +73,7 @@ object PqIndexScale {
       //      sign-LSH formula, reported for honesty, not as a floor.
       val bits = math.min(8, 3 + math.ceil(math.log(m.toDouble) / math.log(2)).toInt)
       spark.conf.set("spark.graft.ann.bits", bits.toString)
-      val ivfIx = java.nio.file.Files.createTempDirectory(s"graft_pqivf_x$m").toString
+      val ivfIx = SparkFixture.tempDir(s"graft_pqivf_x$m")
       timed(s"x$m buildFrom(union, $bits-bit cells) [setup, 1 pass]") {
         pipelines.PqIndex.buildFrom(spark, vecs, dir, ivfIx)
       }

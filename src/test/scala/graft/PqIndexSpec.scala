@@ -16,7 +16,7 @@ class PqIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   private lazy val vecs = Tables.embeddings(spark, sfDir)
   private lazy val indexDir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_pqix").toString
+    val d = tempDir("graft_pqix")
     pipelines.PqIndex.build(spark, sfDir, d)
     d
   }
@@ -35,13 +35,13 @@ class PqIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     val cut = vecs.agg(expr("percentile(vec_id, 0.7)")).head().getDouble(0).toLong
     val oldV = vecs.where(col("vec_id") <= cut)
     val newV = vecs.where(col("vec_id") > cut)
-    val d = java.nio.file.Files.createTempDirectory("graft_pqx2").toString
+    val d = tempDir("graft_pqx2")
     pipelines.PqIndex.buildFrom(spark, oldV, sfDir, d)
     pipelines.PqIndex.extend(spark, newV, d, batchId = 1L)
     val got = pipelines.PqIndex.search(spark, queries10, d, k = 3).collect().toSeq
     // truth: one index whose codebook was trained on the SAME batch-0
     // corpus, but with all vectors encoded at build time
-    val dAll = java.nio.file.Files.createTempDirectory("graft_pqx3").toString
+    val dAll = tempDir("graft_pqx3")
     val (m, k, iters) = (16, 64, 2)
     graft.functions.VectorExprs.register(spark)
     val svOld = graft.ops.Lineage.cut(queries.Sketches.Pq.subvectors(oldV, m))
@@ -77,7 +77,7 @@ class PqIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     // must make the retry authoritative for the whole batch.
     val cut = vecs.agg(expr("percentile(vec_id, 0.7)")).head().getDouble(0).toLong
     val oldV = vecs.where(col("vec_id") <= cut)
-    val d = java.nio.file.Files.createTempDirectory("graft_pqretry").toString
+    val d = tempDir("graft_pqretry")
     pipelines.PqIndex.buildFrom(spark, oldV, sfDir, d)
     pipelines.PqIndex.extend(spark, vecs.where(col("vec_id") > cut), d, 1L)
     // the corrected batch: only a handful of the batch-1 vectors
@@ -107,7 +107,7 @@ class PqIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     // same batches replayed through the same API in a plain loop.
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_pq_stream").toString
+    val base = tempDir("graft_pq_stream")
     val boot = vecs.where(col("vec_id") < 300)
     val ixStream = s"$base/ix_s"; val ixLoop = s"$base/ix_l"
     pipelines.PqIndex.buildFrom(spark, boot, "day0", ixStream)
@@ -160,7 +160,7 @@ class PqIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     val off = 5000000L
     val shifted = vecs.select((col("vec_id") + off).as("vec_id"),
       col("embedding"), col("label"))
-    val d = java.nio.file.Files.createTempDirectory("graft_pq_shift").toString
+    val d = tempDir("graft_pq_shift")
     pipelines.PqIndex.buildFrom(spark, shifted, "shifted", d)
     val cb = spark.read.parquet(s"$d/codebook.parquet")
     cb.groupBy("sub").agg(max("code").as("mx"), countDistinct("code").as("nc"))
@@ -234,7 +234,7 @@ class PqIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("ivf search over an extended index: extend stamps cells under the STORED bits") {
     val cut = vecs.agg(expr("percentile(vec_id, 0.7)")).head().getDouble(0).toLong
-    val d = java.nio.file.Files.createTempDirectory("graft_pqivfx").toString
+    val d = tempDir("graft_pqivfx")
     pipelines.PqIndex.buildFrom(spark, vecs.where(col("vec_id") <= cut), sfDir, d)
     // a DIFFERENT live conf at extend time must not leak into the cell
     // stamp — cells come from _graft_ivf, or batch-1 vectors would land
@@ -250,7 +250,7 @@ class PqIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     // batch-1 ids are reachable: at least one neighbour above the cut
     got.exists(_._2 > cut) shouldBe true
     // an ivf search against an index with no _graft_ivf stamp fails loud
-    val legacy = java.nio.file.Files.createTempDirectory("graft_pqleg").toString
+    val legacy = tempDir("graft_pqleg")
     spark.read.parquet(s"$indexDir/codebook.parquet")
       .write.parquet(s"$legacy/codebook.parquet")
     spark.read.parquet(s"$indexDir/codes.parquet").drop("cell")
@@ -267,7 +267,7 @@ class PqIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("an unstamped dir and a foreign geometry both fail loudly") {
-    val empty = java.nio.file.Files.createTempDirectory("graft_pqe").toString
+    val empty = tempDir("graft_pqe")
     val e1 = intercept[Exception] {
       pipelines.PqIndex.search(spark, queries10, empty)
     }

@@ -322,7 +322,7 @@ class PropertySpec extends AnyFunSuite with Matchers with SparkFixture {
     def r4d(x: Double) = math.floor(x * 10000 + 0.5) / 10000
     (1 to 5).foreach { i =>
       genCorpus.apply(Gen.Parameters.default, Seed(420L + i)).foreach { corpus =>
-        val dir = java.nio.file.Files.createTempDirectory(s"graft_contprop$i").toString
+        val dir = tempDir(s"graft_contprop$i")
         corpus.map { case (id, lang, text) => (id, text, lang, "p", 0L) }
           .toDF("doc_id", "text", "lang", "source", "n_chars")
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -399,7 +399,7 @@ class PropertySpec extends AnyFunSuite with Matchers with SparkFixture {
 
     (1 to 6).foreach { i =>
       genDocs.apply(Gen.Parameters.default, Seed(910L + i)).foreach { docs =>
-        val dir = java.nio.file.Files.createTempDirectory(s"graft_prank$i").toString
+        val dir = tempDir(s"graft_prank$i")
         docs.map { case (id, t) => (id, t, "en", "w", 0L) }
           .toDF("doc_id", "text", "lang", "source", "n_chars")
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -472,7 +472,7 @@ class PropertySpec extends AnyFunSuite with Matchers with SparkFixture {
 
     (1 to 5).foreach { i =>
       genDocs.apply(Gen.Parameters.default, Seed(1300L + i)).foreach { docs =>
-        val dir = java.nio.file.Files.createTempDirectory(s"graft_pcap$i").toString
+        val dir = tempDir(s"graft_pcap$i")
         docs.map { case (id, t) => (id, t, "en", "w", 0L) }
           .toDF("doc_id", "text", "lang", "source", "n_chars")
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -69,7 +69,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("llm_dedup_cluster reliable-checkpoint path matches the localCheckpoint path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("graft_ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     val key = "spark.graft.checkpoint"
     val default = graft.queries.Extras.llmDedupCluster(spark, sfDir).collect().toSeq
@@ -144,7 +144,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
     // wrong formula — pin detection behavior on a corpus with a KNOWN
     // anomaly instead (same discipline as the recall specs)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_anom").toString
+    val dir = tempDir("graft_anom")
     val base = 1700000000L // epoch seconds; ts column is long NANOS like the fixture
     def rows(tpe: String, hour: Int, n: Int): Seq[(Long, Long, Long, String, Double, String)] =
       (0 until n).map { i =>
@@ -174,7 +174,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
     // days earlier — age_s must measure against the CORPUS max, not
     // the type's own, and fresh_share counts only the last 24 h
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fresh").toString
+    val dir = tempDir("graft_fresh")
     val base = 1700000000L
     val wm = base + 300000L
     def ev(id: Long, tsS: Long, tpe: String) =
@@ -194,7 +194,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("llm_logprob_score ranks rare-token docs above common-token docs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_lp").toString
+    val dir = tempDir("graft_lp")
     val docs = (0L until 40L).map(i => (i, "the quick brown fox", "en", "s", 0L)) ++
       Seq((40L, "zyzzyva qoph xylem", "en", "s", 0L))
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -247,7 +247,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
     // the oracle SQL shares the H formula, so it cannot catch a wrong
     // formula — pin against independently hand-computed entropies
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ent").toString
+    val dir = tempDir("graft_ent")
     Seq(
       (0L, "a a a a", "en", "s", 0L),       // single type: H = 0, norm defined 0
       (1L, "a b c d", "en", "s", 0L),       // uniform over 4: H = 2, norm = 1
@@ -266,7 +266,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("llm_mix_weights upsamples the rare language with alpha=0.5 temperature") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mix").toString
+    val dir = tempDir("graft_mix")
     // en: 9 docs x 10 tokens = 90; xx: 1 doc x 10 tokens = 10
     val ten = (1 to 10).map(i => s"t$i").mkString(" ")
     val docs = (0L until 9L).map(i => (i, ten, "en", "s", 0L)) :+ (9L, ten, "xx", "s", 0L)
@@ -285,7 +285,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("ev_inter_arrival matches hand-computed gap profile; single-event types drop") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_gap").toString
+    val dir = tempDir("graft_gap")
     val base = 1700000000L
     def ev(id: Long, tpe: String, offS: Long): (Long, Long, Long, String, Double, String) =
       (id, (base + offS) * 1000000000L, 1L, tpe, 1.0, "{}")
@@ -304,7 +304,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("llm_span_dedup flags localized verbatim reuse, not novel text") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_span").toString
+    val dir = tempDir("graft_span")
     def toks(pfx: String, a: Int, b: Int) = (a until b).map(i => s"$pfx$i").mkString(" ")
     val shared = toks("w", 0, 16)
     Seq(
@@ -328,7 +328,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("llm_bigram_score flags shuffled word salad that the unigram gate provably cannot") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bigram").toString
+    val dir = tempDir("graft_bigram")
     val phrase = "w0 w1 w2 w3 w0 w1 w2 w3" // ordered, repeated transitions
     val salad = "w3 w1 w0 w2 w2 w0 w3 w1"  // SAME token multiset, scrambled
     val docs = (0L until 20L).map(i => (i, phrase, "en", "s", 0L)) :+
@@ -350,7 +350,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("llm_code_detect routes code-shaped docs by structure, not keywords") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_code").toString
+    val dir = tempDir("graft_code")
     Seq(
       (0L, "plain prose about data and tables flowing nicely along", "en", "c", 0L),
       (1L, "x = compute(a, b); if (x > 0) { emit(x); }", "en", "c", 0L), // symbol-dense
@@ -372,7 +372,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("llm_containment finds subset dups that whole-doc jaccard cannot see") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cont").toString
+    val dir = tempDir("graft_cont")
     def toks(pfx: String, a: Int, b: Int) = (a until b).map(i => s"$pfx$i").mkString(" ")
     Seq(
       (0L, toks("w", 0, 10), "en", "s", 0L),                        // fully inside doc 1
@@ -391,7 +391,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("ev_attribution credits each purchase to the latest preceding non-purchase touch") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr").toString
+    val dir = tempDir("graft_attr")
     val base = 1700000000L
     def ev(id: Long, user: Long, off: Int, tpe: String, v: Double) =
       (id, (base + off) * 1000000000L, user, tpe, v, "{}")
@@ -409,7 +409,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("ev_active_users computes DAU and trailing-7-day WAU on a known user-day grid") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dau").toString
+    val dir = tempDir("graft_dau")
     val day0 = 1700006400L // 2023-11-15 00:00 UTC; add noon offset below
     def at(dayOff: Int, user: Long, id: Long) =
       (id, (day0 + dayOff * 86400L + 43200L) * 1000000000L, user, "view", 1.0, "{}")
@@ -429,7 +429,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("llm_gopher_rules gates each canonical rule independently, boundaries inclusive") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_gopher").toString
+    val dir = tempDir("graft_gopher")
     Seq(
       (0L, Seq.fill(60)("spark").mkString(" "), "en", "g", 0L),        // all rules pass
       (1L, Seq.fill(10)("spark").mkString(" "), "en", "g", 0L),        // too short
@@ -454,7 +454,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("dq_drift psi matches an independent Scala recomputation on a forced drift") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val dir = tempDir("graft_drift")
     // membership is the repo's md5-bucket rule — compute it here with
     // Spark's md5 (fixed public function; the formula under test is PSI)
     val keys = (0L until 200L).toDF("o_orderkey")
@@ -482,7 +482,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("llm_ccnet_bucket terciles a lang by xent: 3/3/3, quality order head<middle<tail") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ccnet").toString
+    val dir = tempDir("graft_ccnet")
     // three token-frequency tiers → three strictly-ordered xent levels:
     // 'a' ×12 (common), 'b' ×6, 'z' ×3 (rare) over a 21-token corpus
     val docs =
@@ -503,7 +503,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("ev_cohort_ltv matches the hand-computed cohort revenue curve") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ltv").toString
+    val dir = tempDir("graft_ltv")
     def ev(id: Long, user: Long, day: Int, hour: Int, typ: String, v: Double) =
       // midnight-aligned base (1699920000 = 19675 × 86400) so hour
       // offsets stay inside their calendar day
@@ -542,7 +542,7 @@ class QuerySemanticsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("dq_referential reports planted orphans and unreferenced parents, relation by relation") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ref").toString
+    val dir = tempDir("graft_ref")
     Seq(Tuple1(0)).toDF("r_regionkey")
       .write.mode("overwrite").parquet(s"$dir/region.parquet")
     // nation 1 points at region 7 (orphan) and no customer references it

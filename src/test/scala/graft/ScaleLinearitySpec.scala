@@ -14,7 +14,7 @@ import org.scalatest.matchers.should.Matchers
 class ScaleLinearitySpec extends AnyFunSuite with Matchers with SparkFixture {
 
   private lazy val dirs: (String, String) = {
-    val base = java.nio.file.Files.createTempDirectory("graft_lin").toString
+    val base = tempDir("graft_lin")
     def write(mult: Int, out: String): Unit = {
       val docs = Tables.documents(spark, sfDir)
       val n = docs.count()
@@ -114,7 +114,7 @@ class ScaleLinearitySpec extends AnyFunSuite with Matchers with SparkFixture {
     // vote) per query vector even when the brute-force candidate frame
     // grows 16× — replicated vectors with shifted ids, a denser
     // neighborhood, but never more output per qid
-    val base = java.nio.file.Files.createTempDirectory("graft_lin_knn").toString
+    val base = tempDir("graft_lin_knn")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val n = emb.count()
     val (x1, x4) = (s"$base/x1", s"$base/x4")
@@ -259,7 +259,7 @@ class ScaleLinearitySpec extends AnyFunSuite with Matchers with SparkFixture {
     // child/orphan counts at IDENTICAL shares/coverage for lineitem
     // relations and byte-identical rows for every other relation — the
     // row-linearity check for the round-6 heavy addition (VERDICT r6 #6).
-    val base = java.nio.file.Files.createTempDirectory("graft_lin_ref").toString
+    val base = tempDir("graft_lin_ref")
     val (x1, x4) = (s"$base/x1", s"$base/x4")
     val tables = Seq("lineitem", "orders", "customer", "nation",
       "part", "supplier", "region")
@@ -286,7 +286,7 @@ class ScaleLinearitySpec extends AnyFunSuite with Matchers with SparkFixture {
     // md5 version bucket): both versions' row and null counts must
     // quadruple at IDENTICAL rates/delta and identical schema columns —
     // the row-linearity check for the round-7 addition
-    val base = java.nio.file.Files.createTempDirectory("graft_lin_delta").toString
+    val base = tempDir("graft_lin_delta")
     val (x1, x4) = (s"$base/x1", s"$base/x4")
     val df = spark.read.parquet(s"$sfDir/orders.parquet")
     df.write.parquet(s"$x1/orders.parquet")
@@ -309,7 +309,7 @@ class ScaleLinearitySpec extends AnyFunSuite with Matchers with SparkFixture {
     // new copy's intra-pairs (translation preserves jaccard structure,
     // so the delta count equals x1's own pair count) and freeze the
     // old-old half to the prior artifact byte-for-byte
-    val base = java.nio.file.Files.createTempDirectory("graft_lin_inc").toString
+    val base = tempDir("graft_lin_inc")
     val docs = Tables.documents(spark, sfDir)
     val n = docs.count()
     def copyDf(i: Int) = docs.select(
@@ -376,7 +376,7 @@ class ScaleLinearitySpec extends AnyFunSuite with Matchers with SparkFixture {
     // and the triangle census's edge totals exactly k× — super-linear
     // edge growth means the pair expansion leaked across copies,
     // sub-linear means the distinct collapsed them
-    val base = java.nio.file.Files.createTempDirectory("graft_glin").toString
+    val base = tempDir("graft_glin")
     def write(mult: Int, out: String): Unit = {
       val li = Tables.lineitem(spark, sfDir)
       (0 until mult).map { i =>

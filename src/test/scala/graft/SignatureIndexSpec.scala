@@ -23,7 +23,7 @@ class SignatureIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
   private lazy val oldDocs = docs.where(col("bucket") < 80)
   private lazy val newDocs = docs.where(col("bucket") >= 80)
   private lazy val indexDir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_six").toString
+    val d = tempDir("graft_six")
     pipelines.SignatureIndex.buildFrom(spark, oldDocs, sfDir, d)
     d
   }
@@ -99,7 +99,7 @@ class SignatureIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("extend lands a batch partition; subsequent refreshes see it") {
-    val d = java.nio.file.Files.createTempDirectory("graft_six_ext").toString
+    val d = tempDir("graft_six_ext")
     pipelines.SignatureIndex.buildFrom(spark, oldDocs, sfDir, d)
     pipelines.SignatureIndex.extend(spark, newDocs, d, 1L)
     new java.io.File(s"$d/bands.parquet/batch=1").isDirectory shouldBe true
@@ -112,7 +112,7 @@ class SignatureIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("stamp and geometry guards fail loudly; batch 0 is reserved for build") {
-    val bare = java.nio.file.Files.createTempDirectory("graft_six_bare").toString
+    val bare = tempDir("graft_six_bare")
     val e = intercept[IllegalArgumentException] {
       pipelines.SignatureIndex.refreshPairs(spark, newDocs, bare)
     }

@@ -23,12 +23,30 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
     }
   }
 
+  /** A fresh directory under the fixture's scratch root. */
+  def tempDir(prefix: String): String = SparkFixture.tempDir(prefix)
+
   override def afterAll(): Unit = super.afterAll()
 }
 
 object SparkFixture {
+  /** Every directory a test makes lives under this one root. The shared
+    * session is never stopped, so a JVM shutdown hook deletes it. */
+  private lazy val root: java.nio.file.Path = {
+    val r = java.nio.file.Files.createTempDirectory("graft_test")
+    sys.addShutdownHook(queries.Scans.rmRf(r.toFile))
+    r
+  }
+  private val made = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** `<root>/<prefix><n>`: a counter, not a random suffix, keeps paths
+    * short — plan strings cut a scan's location at 100 characters, and
+    * the plan specs look for names inside it. */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createDirectory(root.resolve(s"$prefix${made.incrementAndGet()}")).toString
+
   lazy val session: SparkSession = Session.local(4,
     "spark.app.name" -> "graft-test",
-    "spark.sql.warehouse.dir" ->
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    "spark.sql.warehouse.dir" -> tempDir("graft_wh"),
+    "spark.graft.scratch.root" -> tempDir("graft_scratch"))
 }

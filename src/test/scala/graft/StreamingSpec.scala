@@ -70,7 +70,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("file-source stream (availableNow) matches batch on the fixture events") {
-    val tmp = java.nio.file.Files.createTempDirectory("stream_in").toString
+    val tmp = tempDir("stream_in")
     val ev = Tables.events(spark, sfDir)
     ev.write.parquet(s"$tmp/in")
     val stream = spark.readStream.schema(ev.schema).parquet(s"$tmp/in")
@@ -92,7 +92,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
     // the 100 TB ingest shape: a directory that keeps growing; the source
     // must pick up late-arriving files in later microbatches, and the
     // windowed aggregate over the union must equal the batch answer
-    val tmp = java.nio.file.Files.createTempDirectory("stream_in2").toString
+    val tmp = tempDir("stream_in2")
     val ev = Tables.events(spark, sfDir)
     val half1 = ev.where(org.apache.spark.sql.functions.col("event_id") % 2 === 0)
     val half2 = ev.where(org.apache.spark.sql.functions.col("event_id") % 2 === 1)
@@ -469,7 +469,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
     // epoch-second day and the batch op's DateType day)
     val streamedDau = streamed.groupBy(t => java.time.LocalDate.ofEpochDay(t._2 / 86400).toString)
       .view.mapValues(_.size.toLong).toMap
-    val d = java.nio.file.Files.createTempDirectory("graft_dau_b").toString
+    val d = tempDir("graft_dau_b")
     rows.map(e => (e.event_id, e.ts.getTime * 1000000L, e.user_id, e.event_type, e.value, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$d/events.parquet")
@@ -512,7 +512,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
     // the stateless groupBy over the credit stream == the batch report
     val streamedReport = credits.groupBy(_._2).view
       .mapValues(cs => (cs.size.toLong, cs.map(_._3).sum)).toMap
-    val d = java.nio.file.Files.createTempDirectory("graft_attr_s").toString
+    val d = tempDir("graft_attr_s")
     rows.map(e => (e.event_id, e.ts.getTime * 1000000L, e.user_id, e.event_type, e.value, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$d/events.parquet")
@@ -550,7 +550,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
     }
     kept.map(_._1) shouldBe Seq(0L, 1L, 2L, 5L) // first arrival = min id wins
     // keeper ids AND hashes equal the batch operator's on the same corpus
-    val d = java.nio.file.Files.createTempDirectory("graft_sdedup").toString
+    val d = tempDir("graft_sdedup")
     docs.map(x => (x.doc_id, x.text, x.lang, "s", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
@@ -616,7 +616,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
     val streamedDay = incs.groupBy(t => (
         java.time.LocalDate.ofEpochDay(t._1 / 86400).toString, t._2))
       .view.mapValues(_.map(_._3).sum).toMap
-    val d = java.nio.file.Files.createTempDirectory("graft_ltv_s").toString
+    val d = tempDir("graft_ltv_s")
     rows.map(e => (e.event_id, e.ts.getTime * 1000000L, e.user_id, e.event_type, e.value, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$d/events.parquet")
@@ -632,7 +632,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkFixture {
     // the survivor decision for doc 2 depends on state written BEFORE
     // the first query was stopped — a fresh query resuming from the
     // same checkpoint must drop it; losing the store would re-admit it
-    val base = java.nio.file.Files.createTempDirectory("graft_ckpt_s").toString
+    val base = tempDir("graft_ckpt_s")
     val (ckpt, out) = (s"$base/ckpt", s"$base/out")
     val kept = rocksDb {
       // the memory sink refuses checkpoint recovery; the parquet sink is

@@ -13,7 +13,7 @@ import org.scalatest.matchers.should.Matchers
 class StressGenSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   private lazy val dirs: (String, String) = {
-    val base = java.nio.file.Files.createTempDirectory("graft_sg").toString
+    val base = tempDir("graft_sg")
     graft.tools.StressGen.documentsDup(spark, sfDir, s"$base/x5", 5)
     graft.tools.StressGen.documentsDup(spark, sfDir, s"$base/x10", 10)
     (s"$base/x5", s"$base/x10")

@@ -12,7 +12,7 @@ import org.scalatest.matchers.should.Matchers
 class WebopsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   private lazy val dir: String = {
-    val base = java.nio.file.Files.createTempDirectory("graft_web").toString
+    val base = tempDir("graft_web")
     import spark.implicits._
     Seq(
       (0L, "see https://a.example.com/x and http://b.org plus https://a.example.com/y", "en", "w", 0L),
@@ -63,7 +63,7 @@ class WebopsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("trailing sentence punctuation is trimmed from urls and domains") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_trail").toString
+    val d = tempDir("graft_trail")
     Seq(
       (0L, "see https://a.com. and then stop", "en", "w", 0L),
       (1L, "(docs at https://b.io/path), right?", "en", "w", 0L),
@@ -93,7 +93,7 @@ class WebopsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("url dedup folds scheme/case/www/query/fragment/trailing-slash variants into one key") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_udup").toString
+    val d = tempDir("graft_udup")
     Seq(
       (0L, "ref https://www.Site.com/Page/?utm=1 end", "en", "w", 0L),
       (1L, "see http://site.com/page#frag now", "en", "w", 0L),
@@ -117,7 +117,7 @@ class WebopsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("domain cap keeps the K lowest doc_ids per site; domainless docs are exempt") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_cap").toString
+    val d = tempDir("graft_cap")
     Seq(
       (0L, "a https://hot.com/1", "en", "w", 0L),
       (1L, "b https://hot.com/2", "en", "w", 0L),
@@ -138,7 +138,7 @@ class WebopsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("domain rank matches the hand-computed two-iteration PageRank") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_rank").toString
+    val d = tempDir("graft_rank")
     // one doc at a.com linking to b.com: nodes {a.com, b.com}, edge a→b,
     // b dangling. r0 = (.5, .5);
     // iter1: dm=.5, cin(b)=.5 → r(a)=.075+.85*.25=.2875, r(b)=.075+.85*.75=.7125
